@@ -68,11 +68,7 @@ object Bench {
         }
       }
       val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      // clearCache frees table caches but NOT RDD/localCheckpoint blocks
-      // (e.g. connected-components round snapshots): without this, one
-      // query's leftover blocks tax every later query's memory budget.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      GraftSession.clearCaches(spark)
       dt
     }
     // Two full round-robin passes, min per query: this VM shows transient
@@ -145,8 +141,7 @@ object Bench {
     def onceQuiet(name: String): Unit = {
       try run(SparkEntry.queries(name)(spark, sfDir))
       catch { case e: Throwable => System.err.println(s"[bench] $name warmup failed: ${e.getMessage}") }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      GraftSession.clearCaches(spark)
     }
     // The tie-break itself is also failure-quiet: a disputed query already
     // HAS two successful timed passes, so a transient error in run 3 must
@@ -161,8 +156,7 @@ object Bench {
           false
         }
       val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      GraftSession.clearCaches(spark)
       if (ok) Some(dt) else None
     }
     val pass3 = disputed.flatMap { n => onceQuiet(n); onceTieBreak(n).map(n -> _) }.toMap

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Docstore pruning lens for the degen/fuzz gate (r16 verdict task 7).
@@ -24,16 +24,7 @@ import org.apache.spark.sql.functions._
 object DocStoreDegenProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft_fuzz")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .config("spark.hadoop.fs.file.impl", "graft.sources.FastLocalFileSystem") // no-fork chmod: see FastLocalFileSystem
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.open("8")
 
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("event_type"), col("user_id"), col("value"))
@@ -44,7 +35,7 @@ object DocStoreDegenProbe {
       .write.format("docstore").mode("overwrite")
       .option("bloom.fields", "event_id").save(path)
 
-    var failures = 0
+    val gate = new Gate("DOCSTORE DEGEN PROBE")
     var engaged = 0
     def canon(df: DataFrame): Set[(Long, Option[String], Option[Long], Option[Double])] =
       df.select("event_id", "event_type", "user_id", "value").collect().map { r =>
@@ -62,10 +53,9 @@ object DocStoreDegenProbe {
       val want = canon(ev.filter(pred))
       val (k, t) = kt.getOrElse((-1, -1))
       if (kt.exists { case (a, b) => a < b }) engaged += 1
-      val ok = got == want && kt.nonEmpty
+      val ok = gate.count(got == want && kt.nonEmpty)
       println(s"${if (ok) "PROBE" else "PROBE-FAIL"} $name: shards $k/$t rows=${got.size}" +
         (if (ok) "" else s" — pruned≠brute diff=${(got diff want).take(2)} ${(want diff got).take(2)}"))
-      if (!ok) failures += 1
     }
 
     // the planted extreme ids live near Long.MaxValue - 2^31 (fuzz
@@ -89,11 +79,8 @@ object DocStoreDegenProbe {
 
     if (engaged == 0) {
       println("DOCSTORE DEGEN PROBE VACUOUS: no probe pruned a single shard")
-      failures += 1
+      gate.count(false)
     }
-    spark.stop()
-    println(if (failures == 0) "DOCSTORE DEGEN PROBE OK"
-            else s"DOCSTORE DEGEN PROBE $failures FAILURES")
-    if (failures > 0) sys.exit(1)
+    gate.finish(spark)
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Shingle-index scale probe (r17, not part of the driver contract):
@@ -31,17 +30,7 @@ object IndexScaleProbe {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nBatches = if (args.length > 1) args(1).toInt else 16
     val compactEvery = if (args.length > 2) args(2).toInt else 8
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .config("spark.hadoop.fs.file.impl", "graft.sources.FastLocalFileSystem") // no-fork chmod: see FastLocalFileSystem
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.open()
 
     val docs = spark.read.parquet(s"$srcDir/documents.parquet")
       .select("doc_id", "text")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-quality audit (not part of the driver contract): asserts the
   * physical-plan properties the 100 TB design depends on — pushdown,
@@ -9,18 +8,9 @@ import org.apache.spark.sql.SparkSession
 object PlanCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .config("spark.hadoop.fs.file.impl", "graft.sources.FastLocalFileSystem") // no-fork chmod: see FastLocalFileSystem
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.open("8")
 
-    var failures = 0
+    val gate = new Gate("PLANCHECK")
     // Plan construction itself can throw (round 7: an unreadable events
     // table crashed the first check and killed the whole 32-check gate).
     // A failed construction marks that check's assertions FAIL and moves
@@ -43,9 +33,7 @@ object PlanCheck {
                    asserts: Seq[(String, String => Boolean)]): Unit = {
       plan.filter(_ => sys.env.contains("DUMP_PLANS")).foreach(p => println(s"===== $label =====\n$p"))
       asserts.foreach { case (what, pred) =>
-        val ok = plan.exists(pred)
-        if (!ok) failures += 1
-        println(s"${if (ok) "PASS" else "FAIL"}  $label: $what")
+        gate.check(plan.exists(pred), s"$label: $what")
       }
     }
     def check(name: String)(asserts: (String, String => Boolean)*): Unit =
@@ -73,9 +61,7 @@ object PlanCheck {
           None
         })
       asserts.foreach { case (what, pred) =>
-        val ok = plan.exists(pred)
-        if (!ok) failures += 1
-        println(s"${if (ok) "PASS" else "FAIL"}  $name: $what")
+        gate.check(plan.exists(pred), s"$name: $what")
       }
     }
     // Structural broadcast containment: the string dumps of exactly the
@@ -760,9 +746,7 @@ object PlanCheck {
         case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec
             if r.output.map(_.name).contains("term") => r
       }.size).getOrElse(0)
-      val ok = reused >= 3
-      if (!ok) failures += 1
-      println(s"${if (ok) "PASS" else "FAIL"}  ir_bm25: corpus tokenized once (dl/dft/stats reuse the tf exchange, $reused reused)")
+      gate.check(reused >= 3, s"ir_bm25: corpus tokenized once (dl/dft/stats reuse the tf exchange, $reused reused)")
     }
 
     // Unigram surprisal: the vocabulary table and the corpus total attach
@@ -824,9 +808,7 @@ object PlanCheck {
           None
         }
       val scans = plan.map(p => "Scan parquet".r.findAllIn(p.toString).size).getOrElse(99)
-      val ok = scans == 1
-      if (!ok) failures += 1
-      println(s"${if (ok) "PASS" else "FAIL"}  tx_decontaminate: corpus shingled once ($scans scans)")
+      gate.check(scans == 1, s"tx_decontaminate: corpus shingled once ($scans scans)")
     }
     // tx_backoff_surprisal (round-10 rewrite): the bigram model count is
     // a per-(a, b) window sum over ONE pair explode — the former bg
@@ -844,9 +826,7 @@ object PlanCheck {
           None
         }
       val scans = plan.map(p => "Scan parquet".r.findAllIn(p.toString).size).getOrElse(99)
-      val ok = scans <= 2
-      if (!ok) failures += 1
-      println(s"${if (ok) "PASS" else "FAIL"}  tx_backoff_surprisal: pair explode evaluated once ($scans scans)")
+      gate.check(scans <= 2, s"tx_backoff_surprisal: pair explode evaluated once ($scans scans)")
     }
 
     // Sequence packing: the cumsum window must partition on (lang, shard) —
@@ -976,9 +956,7 @@ object PlanCheck {
       val reused = plan.map(_.collect {
         case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => r
       }.size).getOrElse(0)
-      val ok = scans == 1 && reused >= 2
-      if (!ok) failures += 1
-      println(s"${if (ok) "PASS" else "FAIL"}  tx_dsir_weights: corpus tokenized once ($scans scans, $reused reused exchanges)")
+      gate.check(scans == 1 && reused >= 2, s"tx_dsir_weights: corpus tokenized once ($scans scans, $reused reused exchanges)")
     }
 
     // Rolling z-score anomalies: the trailing frame runs per-user on ONE
@@ -1015,9 +993,7 @@ object PlanCheck {
       val reused = plan.map(_.collect {
         case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => r
       }.size).getOrElse(0)
-      val ok = scans <= 2 && reused >= 4
-      if (!ok) failures += 1
-      println(s"${if (ok) "PASS" else "FAIL"}  ir_prf_expansion: corpus tokenized once across both passes ($scans scans, $reused reused exchanges)")
+      gate.check(scans <= 2 && reused >= 4, s"ir_prf_expansion: corpus tokenized once across both passes ($scans scans, $reused reused exchanges)")
     }
 
     // Round-8 warehouse additions. d16: unpivot must lower to an Expand
@@ -1162,8 +1138,6 @@ object PlanCheck {
       "single entropy kernel evaluation" ->
         (p => "graft_char_entropy_stats".r.findAllIn(p).size == 1))
 
-    println(if (failures == 0) "PLANCHECK OK" else s"PLANCHECK $failures FAILURES")
-    spark.stop()
-    if (failures > 0) sys.exit(1)
+    gate.finish(spark)
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-shape drift gate (ship_gate step, r12): recomputes every
   * registered query's physical fingerprint and diffs it against the
@@ -18,17 +17,7 @@ import org.apache.spark.sql.SparkSession
 object PlanDrift {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_FP_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .config("spark.hadoop.fs.file.impl", "graft.sources.FastLocalFileSystem") // no-fork chmod: see FastLocalFileSystem
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.open("8")
 
     val fps = PlanFingerprint.all(spark, sfDir)
     // always dump the fresh fingerprints: seeds the first baseline's
@@ -82,7 +71,7 @@ object PlanDrift {
         }
         spark.stop()
       case Some((label, plans)) =>
-        var failures = 0
+        val gate = new Gate("PLANDRIFT", "UNDOCUMENTED DELTAS")
         println(s"PLANDRIFT baseline: $label")
         fps.toSeq.sortBy(_._1).foreach { case (q, fp) =>
           Option(plans.get(q)).map(_.asText()) match {
@@ -95,13 +84,11 @@ object PlanDrift {
             case Some(prev) if PlanFingerprint.expectedDeltas.get(q).exists(_._1 == fp) =>
               println(s"PASS  $q: $prev -> $fp (documented delta: ${PlanFingerprint.expectedDeltas(q)._2})")
             case Some(prev) =>
-              failures += 1
+              gate.count(false)
               println(s"DELTA $q: $prev -> $fp (undocumented plan flip)")
           }
         }
-        println(if (failures == 0) "PLANDRIFT OK" else s"PLANDRIFT $failures UNDOCUMENTED DELTAS")
-        spark.stop()
-        if (failures > 0) sys.exit(1)
+        gate.finish(spark)
     }
   }
 }

@@ -27,11 +27,7 @@ object PlanDump {
       } catch { case e: Throwable =>
         System.err.println(s"[plandump] $name FAILED: ${e.getMessage}")
       }
-      // same per-query cache discipline as Bench/PlanFingerprint: some
-      // builders cache-and-warm at construction (the dedup slim frames),
-      // and a 147-query dump session must not accumulate pinned plans
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      GraftSession.clearCaches(spark)
     }
     spark.stop()
   }

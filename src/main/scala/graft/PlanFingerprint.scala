@@ -80,13 +80,7 @@ object PlanFingerprint {
         System.err.println(s"[fingerprint] $name plan construction failed: ${e.getMessage}")
         "error"
       }
-      // same per-query cache discipline as Bench's timed loop: builders
-      // that persist bounded artifacts (the connected-components
-      // localCheckpoint snapshots; pagerank's edge cache until its r14
-      // driver-iterate rewrite) must not accumulate blocks across a
-      // 146-query planning sweep
-      noAqe.catalog.clearCache()
-      noAqe.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      GraftSession.clearCaches(noAqe)
       name -> fp
     }.toMap
   }

@@ -1,14 +1,13 @@
 package graft
 import scala.jdk.CollectionConverters._
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, Executors, TimeUnit}
 
 /** Temporary perf probe with a built-in sampling profiler (not part of the
   * driver contract).
   */
 object Probe {
-  // profiler print threshold in seconds; malformed values fall back
-  private val hotMin: Double =
-    scala.util.Try(sys.env.getOrElse("PROBE_HOT_MIN", "5").toDouble).getOrElse(5.0)
+  // queries slower than this print their profiler hot frames
+  private val HotMinS = 5.0
 
   /** The scale-run OOM class: a JVM OutOfMemoryError anywhere in the cause
     * chain, or Spark's memory-pressure errors surfaced as SparkException /
@@ -42,96 +41,38 @@ object Probe {
 
     val samples = new ConcurrentHashMap[String, Integer]()
     @volatile var sampling = false
-    val sampler = new Thread(() => {
-      while (true) {
-        if (sampling && sys.env.getOrElse("PROBE_SAMPLER", "on") == "on") {
-          Thread.getAllStackTraces.asScala.foreach { case (t, st) =>
-            if (st.nonEmpty && t.getState == Thread.State.RUNNABLE &&
-                (t.getName.startsWith("Executor task") || t.getName == "main")) {
-              // first non-jvm-internal frame
-              val f = st.take(6).map(_.toString)
-                .find(s => !s.startsWith("java.lang.Thread"))
-                .getOrElse(st.head.toString)
-              samples.merge(s"${if (t.getName == "main") "MAIN" else "EXEC"} $f", 1, (a, b) => a + b)
-            }
-          }
+    val sampler = Executors.newSingleThreadScheduledExecutor { r =>
+      val t = new Thread(r, "graft-probe-sampler"); t.setDaemon(true); t
+    }
+    sampler.scheduleAtFixedRate(() => if (sampling) {
+      Thread.getAllStackTraces.asScala.foreach { case (t, st) =>
+        if (st.nonEmpty && t.getState == Thread.State.RUNNABLE &&
+            (t.getName.startsWith("Executor task") || t.getName == "main")) {
+          // first non-jvm-internal frame
+          val f = st.take(6).map(_.toString)
+            .find(s => !s.startsWith("java.lang.Thread"))
+            .getOrElse(st.head.toString)
+          samples.merge(s"${if (t.getName == "main") "MAIN" else "EXEC"} $f", 1, (a, b) => a + b)
         }
-        Thread.sleep(100)
       }
-    })
-    sampler.setDaemon(true)
-    sampler.start()
-
-    // Bench's OWN noop-sink action — one shared definition, so the
-    // comparability of Probe and Bench numbers can't silently drift.
-    def run(df: org.apache.spark.sql.DataFrame): Unit = Bench.run(df)
+    }, 0L, 100L, TimeUnit.MILLISECONDS)
 
     // Per-query shuffle/spill accounting (r11): SCALE.md adjudications of
     // the form "the decade-ratio drift is spill, not a superlinear term"
-    // need MEASURED spilled bytes, not inference. Stage-completion metrics
-    // accumulate across the query's jobs and print beside its time.
-    val spillMem = new java.util.concurrent.atomic.AtomicLong()
-    val spillDisk = new java.util.concurrent.atomic.AtomicLong()
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong()
-    val lastStageEventNs = new java.util.concurrent.atomic.AtomicLong(System.nanoTime())
-    // The probed queries run under a dedicated job group, and only stages
-    // belonging to that group's jobs update the counters or the quiescence
-    // clock — any concurrent Spark activity in the session (a background
-    // bench, a stray cached materialization) would otherwise pad each
-    // query's quiescence wait toward the 10 s cap AND leak its shuffle /
-    // spill bytes into numbers SCALE.md cites as measured.
-    val probeGroup = "graft-probe"
-    val probeStages = ConcurrentHashMap.newKeySet[Int]()
-    val spillListener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-            probeGroup == js.properties.getProperty("spark.jobGroup.id"))
-          js.stageIds.foreach(probeStages.add(_))
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        if (!probeStages.contains(sc.stageInfo.stageId)) return
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) {
-          spillMem.addAndGet(m.memoryBytesSpilled)
-          spillDisk.addAndGet(m.diskBytesSpilled)
-          shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-        lastStageEventNs.set(System.nanoTime())
-      }
-    }
-    spark.sparkContext.addSparkListener(spillListener)
-    spark.sparkContext.setJobGroup(probeGroup, "graft perf probe")
-    // The listener bus is async: wait for stage-event QUIESCENCE (no new
-    // completion for 1 s, capped at 10 s) rather than a fixed nap — a
-    // fixed beat under-counts the final stages' spill on a stalled VM,
-    // and these numbers are cited as MEASURED in SCALE.md.
-    def awaitStageQuiescence(): Unit = {
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (System.nanoTime() < deadline &&
-             System.nanoTime() - lastStageEventNs.get() < 1000L * 1000 * 1000)
-        Thread.sleep(100)
-    }
+    // need MEASURED spilled bytes, not inference. Only the probed queries'
+    // own jobs count (see Meter), and the meter's readings are final the
+    // moment the query returns.
+    val meter = new Meter(spark)
 
     // untimed warmup — guarded like Bench's warmups: a broken loader (the
     // round-7 ts type flip class) must not abort the probe run before any
     // requested query is measured
-    try run(SparkEntry.queries("a14_scalar_stats")(spark, sfDir))
+    try Bench.run(SparkEntry.queries("a14_scalar_stats")(spark, sfDir))
     catch { case e: Exception => println(s"PROBE warmup failed: ${e.getMessage}") }
 
     args.foreach { name =>
       samples.clear()
-      spillMem.set(0); spillDisk.set(0); shuffleWrite.set(0)
-      // refresh the quiescence clock per query: a stale timestamp from
-      // the previous query would let awaitStageQuiescence return before
-      // a backed-up listener bus delivered ANY of this query's events
-      lastStageEventNs.set(System.nanoTime())
-      sampling = true
-      val t0 = System.nanoTime()
-      // Construction is INSIDE the OOM guard's reach too (r14): builders
-      // that run real jobs — g4's edge-aggregate collect, the Lloyd
-      // trainer collects — can hit the same memory wall before run()
-      // ever sees a DataFrame.
+      meter.reset()
       def oomExit(e: Throwable, where: String): Nothing = {
         sampling = false
         println(s"PROBE $name FAILED: out of memory in $where " +
@@ -139,58 +80,44 @@ object Probe {
           "documented in SCALE.md — rerun with SPARK_DRIVER_MEM=64g " +
           "(build.sbt forks the probe JVM with -Xmx$SPARK_DRIVER_MEM, " +
           "default 16g). A real cluster scales executor memory with the data.")
-        spark.sparkContext.removeSparkListener(spillListener)
+        meter.close()
         spark.stop()
         sys.exit(2)
       }
-      val df =
-        try SparkEntry.queries(name)(spark, sfDir)
-        catch { case e: Throwable if isOomClass(e) => oomExit(e, "query construction") }
-      // The POST-execution plan is the only place AQE's runtime decisions
-      // (stage reuse, join demotions, skew splits) are visible — and the
-      // noop write runs its OWN QueryExecution, so the df's never executes.
-      // A listener grabs the write's QE after the action completes.
-      @volatile var finalPlan: String = null
-      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(fn: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
-          finalPlan = qe.executedPlan.toString
-        override def onFailure(fn: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+      val dt = meter {
+        sampling = true
+        val t0 = System.nanoTime()
+        // Construction is INSIDE the OOM guard's reach too (r14): builders
+        // that run real jobs — g4's edge-aggregate collect, the Lloyd
+        // trainer collects — can hit the same memory wall before the run
+        // ever sees a DataFrame.
+        val df =
+          try SparkEntry.queries(name)(spark, sfDir)
+          catch { case e: Throwable if isOomClass(e) => oomExit(e, "query construction") }
+        // Bench's OWN noop-sink action — one shared definition, so the
+        // comparability of Probe and Bench numbers can't silently drift.
+        // Scale-run OOM class (SCALE.md x1000p): local[32] hash aggregation
+        // at 32 concurrent tasks can exhaust the probe JVM's default 16g
+        // heap (AGGREGATE_OUT_OF_MEMORY / SparkOutOfMemoryError). Name the
+        // documented recipe instead of dying with a raw stack — the fix is
+        // an env var, not an operator defect.
+        try Bench.run(df)
+        catch { case e: Throwable if isOomClass(e) => oomExit(e, "execution") }
+        sampling = false
+        (System.nanoTime() - t0) / 1e9
       }
-      if (sys.env.contains("PROBE_FINAL_PLAN")) spark.listenerManager.register(listener)
-      // Scale-run OOM class (SCALE.md x1000p): local[32] hash aggregation
-      // at 32 concurrent tasks can exhaust the probe JVM's default 16g
-      // heap (AGGREGATE_OUT_OF_MEMORY / SparkOutOfMemoryError). Name the
-      // documented recipe instead of dying with a raw stack — the fix is
-      // an env var, not an operator defect.
-      try run(df)
-      catch { case e: Throwable if isOomClass(e) => oomExit(e, "execution") }
-      val dt = (System.nanoTime() - t0) / 1e9
-      sampling = false
-      awaitStageQuiescence()
       def gb(b: Long): String = f"${b / 1e9}%.2f GB"
-      println(f"PROBE $name: $dt%.2f s  [shuffleWrite ${gb(shuffleWrite.get)}, " +
-        s"spill mem ${gb(spillMem.get)} / disk ${gb(spillDisk.get)}]")
-      if (sys.env.contains("PROBE_FINAL_PLAN")) {
-        // the listener bus is async — WAIT for the event before
-        // unregistering, or a listener removed ahead of dispatch leaves
-        // finalPlan permanently null
-        var waited = 0
-        while (finalPlan == null && waited < 50) { Thread.sleep(100); waited += 1 }
-        spark.listenerManager.unregister(listener)
-        println(s"===== $name final plan =====\n$finalPlan")
-      }
-      if (dt > hotMin) {
+      println(f"PROBE $name: $dt%.2f s  [shuffleWrite ${gb(meter.shuffleWriteBytes)}, " +
+        s"spill mem ${gb(meter.memorySpillBytes)} / disk ${gb(meter.diskSpillBytes)}]")
+      println(s"===== $name final plan =====\n${meter.plan}")
+      if (dt > HotMinS) {
         samples.asScala.toSeq.sortBy(-_._2).take(12).foreach { case (f, c) =>
           println(f"  HOT $c%4d  $f")
         }
       }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      GraftSession.clearCaches(spark)
     }
-    // listener-bus hygiene: the probe loop is over, so its accounting
-    // must stop observing the (shared) context before anything else runs
-    spark.sparkContext.removeSparkListener(spillListener)
-    spark.sparkContext.clearJobGroup()
+    meter.close()
     spark.stop()
   }
 }

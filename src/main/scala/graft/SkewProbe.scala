@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The skew story, MEASURED (r14 — SURVEY names "attacker IPs dominate
@@ -32,19 +32,11 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.SkewProbe [skewCorpusDir]   (default /tmp/graft_skew10)
   */
 object SkewProbe {
-  import SkewMeter.Spread
+  import Meter.Spread
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft_skew10")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .config("spark.hadoop.fs.file.impl", "graft.sources.FastLocalFileSystem") // no-fork chmod: see FastLocalFileSystem
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder()
       // the probe's joins must be the shuffle joins skew can hit
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")
       // the skew splitter cuts a reduce partition along MAP-OUTPUT chunk
@@ -61,13 +53,11 @@ object SkewProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val meter = new SkewMeter(spark)
+    val meter = new Meter(spark)
 
-    var failures = 0
-    def check(name: String, ok: Boolean, detail: String): Unit = {
-      println(f"${if (ok) "PASS" else "FAIL"}  $name%-44s $detail")
-      if (!ok) failures += 1
-    }
+    val gate = new Gate("SKEWPROBE")
+    def check(name: String, ok: Boolean, detail: String): Unit =
+      gate.check(ok, f"$name%-44s $detail")
 
     /** Run `df` through the shared noop sink with AQE on or off, and
       * return the per-task shuffle-read profile of the heaviest
@@ -75,28 +65,16 @@ object SkewProbe {
       */
     def measure(adaptive: Boolean)(df: => DataFrame): Spread = {
       spark.conf.set("spark.sql.adaptive.enabled", adaptive.toString)
-      meter.clear()
-      @volatile var plan: String = null
-      val ql = new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(fn: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
-          plan = qe.executedPlan.toString
-        override def onFailure(fn: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-      }
-      spark.listenerManager.register(ql)
-      Bench.run(df)
-      // the query-execution bus is async too; wait for the plan, then
-      // SkewMeter.spread() applies the task-quiescence discipline
-      var waited = 0
-      while (plan == null && waited < 100) { Thread.sleep(100); waited += 1 }
-      spark.listenerManager.unregister(ql)
-      meter.spread(Option(plan).getOrElse(""))
+      meter.reset()
+      meter(Bench.run(df))
+      meter.spread
     }
 
     val ev = Tables.events(spark, dir)
     val total = ev.count()
     val hotShare = ev.filter(col("user_id") === 0L).count().toDouble / total
     println(f"corpus: $dir, hot user owns ${hotShare * 100}%.1f%% of $total%d events")
-    def fmt(s: Spread) = SkewMeter.fmt(s)
+    def fmt(s: Spread) = Meter.fmt(s)
 
     // ---- 1. AQE skew-join split on a hot-key sort-merge join ------------
     // st4's shape at a 30s window (bounded matched-pair output on the hot
@@ -205,8 +183,6 @@ object SkewProbe {
     check("partial agg absorbs groupBy skew", aggS.maxBytes < 2L * 1024 * 1024,
       f"hot key's reduce side reads ${aggS.maxBytes / 1e3}%.0f KB, not 30%% of the corpus")
 
-    spark.stop()
-    println(if (failures == 0) "SKEWPROBE OK" else s"SKEWPROBE $failures FAILURES")
-    if (failures > 0) sys.exit(1)
+    gate.finish(spark)
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -64,24 +64,13 @@ object StreamDegen {
         val cuts = Seq.fill(1 + r.nextInt(4))(r.nextInt(rows.size + 1)).sorted
         ((0 +: cuts) :+ rows.size).sliding(2).map { w => rows.slice(w.head, w.last) }.toSeq
     }
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.hadoop.fs.file.impl", "graft.sources.FastLocalFileSystem") // no-fork chmod: see FastLocalFileSystem
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.open("8")
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-    var failures = 0
-    def check(name: String, ok: Boolean, detail: => String): Unit = {
-      println(s"${if (ok) "PASS" else "FAIL"}  $name${if (ok) "" else s" — $detail"}")
-      if (!ok) failures += 1
-    }
+    val gate = new Gate("STREAMDEGEN")
+    def check(name: String, ok: Boolean, detail: => String): Unit =
+      gate.check(ok, if (ok) name else s"$name — $detail")
 
     // ---- 1. heavyHitterStream: MG candidates cover exact hitters ------
     // keyed on user_id — a planted-null column (event_id 4) plus the
@@ -714,8 +703,6 @@ object StreamDegen {
         a.size > base.size, s"nothing admitted from the delta (base=${base.size}, store=${a.size})")
     }
 
-    spark.stop()
-    println(if (failures == 0) "STREAMDEGEN OK" else s"STREAMDEGEN $failures FAILURES")
-    if (failures > 0) sys.exit(1)
+    gate.finish(spark)
   }
 }

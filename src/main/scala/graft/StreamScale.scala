@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Streaming-ingest scale probe (r12, not part of the driver contract):
@@ -34,17 +33,7 @@ object StreamScale {
   def main(args: Array[String]): Unit = {
     val srcDir = args.headOption.getOrElse("/tmp/graft_sfx10")
     val nBatches = if (args.length > 1) args(1).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .config("spark.hadoop.fs.file.impl", "graft.sources.FastLocalFileSystem") // no-fork chmod: see FastLocalFileSystem
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.open()
 
     val work = java.nio.file.Files.createTempDirectory("graft_stream_scale")
     val streamIn = work.resolve("in"); java.nio.file.Files.createDirectories(streamIn)

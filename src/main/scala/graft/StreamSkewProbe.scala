@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -37,29 +36,16 @@ import org.apache.spark.sql.functions._
 object StreamSkewProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft_skew10")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .config("spark.hadoop.fs.file.impl", "graft.sources.FastLocalFileSystem") // no-fork chmod: see FastLocalFileSystem
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.open()
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-    val meter = new SkewMeter(spark)
-    def spread(): SkewMeter.Spread = meter.spread()
-    def fmt(s: SkewMeter.Spread) = SkewMeter.fmt(s)
+    val meter = new Meter(spark)
+    def fmt(s: Meter.Spread) = Meter.fmt(s)
 
-    var failures = 0
-    def check(name: String, ok: Boolean, detail: String): Unit = {
-      println(f"${if (ok) "PASS" else "FAIL"}  $name%-52s $detail")
-      if (!ok) failures += 1
-    }
+    val gate = new Gate("STREAMSKEW")
+    def check(name: String, ok: Boolean, detail: String): Unit =
+      gate.check(ok, f"$name%-52s $detail")
 
     val ev = Tables.events(spark, dir)
       .filter(col("user_id").isNotNull && col("ts").isNotNull && col("event_type").isNotNull)
@@ -78,15 +64,19 @@ object StreamSkewProbe {
       val mem = MemoryStream[(Long, Timestamp, String)]
       val out = graft.operators.Funnel.conversionStream(
         mem.toDS(), Seq("click", "purchase"), windowMillis = 7L * 24 * 3600 * 1000)
-      meter.clear()
-      val q = out.writeStream.format("memory").queryName("skew_funnel")
-        .outputMode("append").start()
-      rows.grouped(math.max(1, rows.size / 3 + 1)).foreach { c =>
-        mem.addData(c); q.processAllAvailable()
+      meter.reset()
+      // started inside the meter: the stream thread inherits its job tag
+      val stateOps = meter {
+        val q = out.writeStream.format("memory").queryName("skew_funnel")
+          .outputMode("append").start()
+        rows.grouped(math.max(1, rows.size / 3 + 1)).foreach { c =>
+          mem.addData(c); q.processAllAvailable()
+        }
+        val ops = Option(q.lastProgress).toSeq.flatMap(_.stateOperators.toSeq)
+        q.stop()
+        ops
       }
-      val stateOps = Option(q.lastProgress).toSeq.flatMap(_.stateOperators.toSeq)
-      q.stop()
-      val s = spread()
+      val s = meter.spread
       val conversions = spark.table("skew_funnel").count()
       val stateRows = stateOps.map(_.numRowsTotal).sum
       val stateBytes = stateOps.map(_.memoryUsedBytes).sum
@@ -107,15 +97,19 @@ object StreamSkewProbe {
         .orderBy("event_id").as[(Long, Long, Timestamp, String)].collect().toSeq
       val mem = MemoryStream[(Long, Long, Timestamp, String)]
       val out = graft.streaming.StreamingAnalytics.scd2Stream(mem.toDS())
-      meter.clear()
-      val q = out.writeStream.format("memory").queryName("skew_scd2")
-        .outputMode("append").start()
-      rows.grouped(math.max(1, rows.size / 3 + 1)).foreach { c =>
-        mem.addData(c); q.processAllAvailable()
+      meter.reset()
+      // started inside the meter: the stream thread inherits its job tag
+      val stateOps = meter {
+        val q = out.writeStream.format("memory").queryName("skew_scd2")
+          .outputMode("append").start()
+        rows.grouped(math.max(1, rows.size / 3 + 1)).foreach { c =>
+          mem.addData(c); q.processAllAvailable()
+        }
+        val ops = Option(q.lastProgress).toSeq.flatMap(_.stateOperators.toSeq)
+        q.stop()
+        ops
       }
-      val stateOps = Option(q.lastProgress).toSeq.flatMap(_.stateOperators.toSeq)
-      q.stop()
-      val s = spread()
+      val s = meter.spread
       val versions = spark.table("skew_scd2").count()
       val stateRows = stateOps.map(_.numRowsTotal).sum
       val stateBytes = stateOps.map(_.memoryUsedBytes).sum
@@ -129,8 +123,6 @@ object StreamSkewProbe {
         f"$stateRows%d state rows vs $distinctUsers%d users — the hot key's 30%% of events collapse to one open-run record")
     }
 
-    spark.stop()
-    println(if (failures == 0) "STREAMSKEW OK" else s"STREAMSKEW $failures FAILURES")
-    if (failures > 0) sys.exit(1)
+    gate.finish(spark)
   }
 }

@@ -7,12 +7,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 
 /** SparkSessionExtensions entry point: registers the engine's native
   * expressions as SQL functions, so the kernels are reachable from
-  * `spark.sql(...)` as well as the Column API:
+  * `spark.sql(...)` as well as the Column API. Every session built by
+  * [[graft.GraftSession]] sets `spark.sql.extensions` to this class:
   *
   * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-  *   ...
   * spark.sql("SELECT graft_dot(a.embedding, b.embedding) ...")
   * }}}
   *

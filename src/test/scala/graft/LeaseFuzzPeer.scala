@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.docstore.DocStoreMaintenance
 
 /** The forked half of [[LeaseFuzzSpec]]: a SEPARATE JVM (own FileSystem
@@ -20,15 +18,7 @@ object LeaseFuzzPeer {
   def main(args: Array[String]): Unit = {
     val Array(dir, seedS, itersS) = args.take(3)
     val rng = new scala.util.Random(seedS.toLong)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get("/dev/shm/spark-local"))
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-lease-fuzz-peer")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .config("spark.hadoop.fs.file.impl", "graft.sources.FastLocalFileSystem") // no-fork chmod: see FastLocalFileSystem
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("2").appName("graft-lease-fuzz-peer").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     println("PEER_READY"); Console.flush()
     for (i <- 1 to itersS.toInt) {

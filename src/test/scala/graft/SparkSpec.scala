@@ -7,21 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * read-only over it).
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.icu.caseMappings.enabled", "false") // ICU clinit costs minutes; JVM case mapping ≡ ICU on ASCII
-      .config("spark.local.dir", "/dev/shm/spark-local") // shuffle scratch on tmpfs: file create/mmap on this VM disk costs ms
-      .config("spark.hadoop.fs.file.impl", "graft.sources.FastLocalFileSystem") // no-fork chmod: see FastLocalFileSystem
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.open("4")
 }
 
 abstract class SparkSpec extends AnyFunSuite {

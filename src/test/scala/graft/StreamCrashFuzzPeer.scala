@@ -2,8 +2,6 @@ package graft
 
 import java.util.concurrent.atomic.AtomicBoolean
 
-import org.apache.spark.sql.SparkSession
-
 /** Forked-JVM worker for [[StreamCrashFuzzSpec]]: drives a REAL
   * checkpointed streaming query — docstore change-stream source →
   * docstore streaming sink — appending source batches and processing
@@ -55,15 +53,7 @@ object StreamCrashFuzzPeer {
     val halt = haltS == "1"
     val nBatches = nBatchesS.toInt
     val b = batchS.toInt
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-stream-crash-fuzz-peer")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .config("spark.hadoop.fs.file.impl", "graft.sources.FastLocalFileSystem")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("4").appName("graft-stream-crash-fuzz-peer").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

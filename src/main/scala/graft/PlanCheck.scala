@@ -53,13 +53,15 @@ object PlanCheck {
     treeSession.conf.set("spark.sql.adaptive.enabled", "false")
     val treeCache = scala.collection.mutable.HashMap
       .empty[String, Option[org.apache.spark.sql.execution.SparkPlan]]
-    def checkTree(name: String)(asserts: (String, org.apache.spark.sql.execution.SparkPlan => Boolean)*): Unit = {
-      val plan = treeCache.getOrElseUpdate(name,
+    def treePlan(name: String): Option[org.apache.spark.sql.execution.SparkPlan] =
+      treeCache.getOrElseUpdate(name,
         try Some(SparkEntry.queries(name)(treeSession, sfDir).queryExecution.executedPlan)
         catch { case e: Throwable =>
           System.err.println(s"[plancheck] $name plan construction failed: ${e.getMessage}")
           None
         })
+    def checkTree(name: String)(asserts: (String, org.apache.spark.sql.execution.SparkPlan => Boolean)*): Unit = {
+      val plan = treePlan(name)
       asserts.foreach { case (what, pred) =>
         gate.check(plan.exists(pred), s"$name: $what")
       }
@@ -734,14 +736,7 @@ object PlanCheck {
     // child session, where ReuseExchangeAndSubquery has already rewritten
     // the duplicate subtrees into ReusedExchangeExec nodes.
     locally {
-      val noAqe = spark.newSession()
-      noAqe.conf.set("spark.sql.adaptive.enabled", "false")
-      val plan =
-        try Some(SparkEntry.queries("ir_bm25")(noAqe, sfDir).queryExecution.executedPlan)
-        catch { case e: Throwable =>
-          System.err.println(s"[plancheck] ir_bm25 (no-AQE) plan construction failed: ${e.getMessage}")
-          None
-        }
+      val plan = treePlan("ir_bm25")
       val reused = plan.map(_.collect {
         case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec
             if r.output.map(_.name).contains("term") => r
@@ -798,15 +793,7 @@ object PlanCheck {
       "window exchange rides the shingle key" ->
         (p => "hashpartitioning\\(shingle#\\d+".r.findFirstIn(p).isDefined))
     locally {
-      val noAqe = spark.newSession()
-      noAqe.conf.set("spark.sql.adaptive.enabled", "false")
-      val plan =
-        try Some(SparkEntry.queries("tx_decontaminate")(noAqe, sfDir)
-          .queryExecution.executedPlan)
-        catch { case e: Throwable =>
-          System.err.println(s"[plancheck] tx_decontaminate (no-AQE) plan construction failed: ${e.getMessage}")
-          None
-        }
+      val plan = treePlan("tx_decontaminate")
       val scans = plan.map(p => "Scan parquet".r.findAllIn(p.toString).size).getOrElse(99)
       gate.check(scans == 1, s"tx_decontaminate: corpus shingled once ($scans scans)")
     }
@@ -816,15 +803,7 @@ object PlanCheck {
     // branch is a second, deliberate scan (vocabulary-sized broadcast
     // aggregate — cheaper than shuffling the exploded pairs again).
     locally {
-      val noAqe = spark.newSession()
-      noAqe.conf.set("spark.sql.adaptive.enabled", "false")
-      val plan =
-        try Some(SparkEntry.queries("tx_backoff_surprisal")(noAqe, sfDir)
-          .queryExecution.executedPlan)
-        catch { case e: Throwable =>
-          System.err.println(s"[plancheck] tx_backoff_surprisal (no-AQE) plan construction failed: ${e.getMessage}")
-          None
-        }
+      val plan = treePlan("tx_backoff_surprisal")
       val scans = plan.map(p => "Scan parquet".r.findAllIn(p.toString).size).getOrElse(99)
       gate.check(scans <= 2, s"tx_backoff_surprisal: pair explode evaluated once ($scans scans)")
     }
@@ -944,14 +923,7 @@ object PlanCheck {
     // tokenize ONCE, with the LM-count and totals branches reading the
     // same shuffle files.
     locally {
-      val noAqe = spark.newSession()
-      noAqe.conf.set("spark.sql.adaptive.enabled", "false")
-      val plan =
-        try Some(SparkEntry.queries("tx_dsir_weights")(noAqe, sfDir).queryExecution.executedPlan)
-        catch { case e: Throwable =>
-          System.err.println(s"[plancheck] tx_dsir_weights (no-AQE) plan construction failed: ${e.getMessage}")
-          None
-        }
+      val plan = treePlan("tx_dsir_weights")
       val scans = plan.map(p => "Scan parquet".r.findAllIn(p.toString).size).getOrElse(99)
       val reused = plan.map(_.collect {
         case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => r
@@ -981,14 +953,7 @@ object PlanCheck {
     // once, everything else reading reused shuffle files (AQE-off gate,
     // as for ir_bm25/tx_dsir_weights).
     locally {
-      val noAqe = spark.newSession()
-      noAqe.conf.set("spark.sql.adaptive.enabled", "false")
-      val plan =
-        try Some(SparkEntry.queries("ir_prf_expansion")(noAqe, sfDir).queryExecution.executedPlan)
-        catch { case e: Throwable =>
-          System.err.println(s"[plancheck] ir_prf_expansion (no-AQE) plan construction failed: ${e.getMessage}")
-          None
-        }
+      val plan = treePlan("ir_prf_expansion")
       val scans = plan.map(p => "Scan parquet".r.findAllIn(p.toString).size).getOrElse(99)
       val reused = plan.map(_.collect {
         case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => r

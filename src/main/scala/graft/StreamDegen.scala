@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.streaming.StreamRun
+
 /** Degenerate-input lens for the STREAMING twins (r14). The batch degen
   * gate (ship_gate stage 4) runs Verify+DuckDB on a corpus with planted
   * null event_type / null ts / null value / null-text docs / zero-norm
@@ -68,6 +70,10 @@ object StreamDegen {
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
 
+    // the degen corpus' (doc_id, text) in file order, null texts kept
+    lazy val docTexts = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+      .as[(Long, String)].collect().toSeq
+
     val gate = new Gate("STREAMDEGEN")
     def check(name: String, ok: Boolean, detail: => String): Unit =
       gate.check(ok, if (ok) name else s"$name — $detail")
@@ -81,18 +87,13 @@ object StreamDegen {
       // time-ordered feed (nulls first): the lens here is NULL handling,
       // not lateness — unordered chunks would cross the 1h watermark and
       // drop whole windows for a reason unrelated to the plants
-      val rows: Seq[(Timestamp, java.lang.Long)] = Tables.events(spark, dir)
-        .select(col("ts"), col("user_id")).orderBy(asc_nulls_first("ts")).collect()
-        .map(r => (r.getTimestamp(0),
-          if (r.isNullAt(1)) null else java.lang.Long.valueOf(r.getLong(1)))).toSeq
+      val rows = Tables.events(spark, dir).select(col("ts"), col("user_id"))
+        .orderBy(asc_nulls_first("ts")).as[(Timestamp, java.lang.Long)].collect().toSeq
       val mem = MemoryStream[(Timestamp, java.lang.Long)]
       val sdf = graft.streaming.StreamingAnalytics.heavyHitterStream(
         mem.toDF().toDF("ts", "key"), "ts", "key", k)
-      val q = sdf.writeStream.format("memory").queryName("degen_hh")
-        .outputMode("complete").start()
-      feed(rows).foreach { c => mem.addData(c); q.processAllAvailable() }
-      q.stop()
-      val streamed: Map[Timestamp, Set[java.lang.Long]] = spark.table("degen_hh").collect().map { r =>
+      val sink = StreamRun.memory(sdf, "complete", StreamRun.chunks(mem, feed(rows))).sink
+      val streamed: Map[Timestamp, Set[java.lang.Long]] = sink.collect().map { r =>
         r.getTimestamp(0) ->
           r.getSeq[Row](1).map(c => if (c.isNullAt(0)) null
             else java.lang.Long.valueOf(c.getLong(0))).toSet
@@ -122,21 +123,16 @@ object StreamDegen {
 
     // ---- 2. psiDriftStream: streaming == batch minus null-window ------
     {
-      val rows: Seq[(Timestamp, java.lang.Double)] = Tables.events(spark, dir)
-        .select(col("ts"), col("value")).orderBy(asc_nulls_first("ts")).collect()
-        .map(r => (r.getTimestamp(0),
-          if (r.isNullAt(1)) null else java.lang.Double.valueOf(r.getDouble(1)))).toSeq
+      val rows = Tables.events(spark, dir).select(col("ts"), col("value"))
+        .orderBy(asc_nulls_first("ts")).as[(Timestamp, java.lang.Double)].collect().toSeq
       val baseline = Seq.fill(10)(0.1)
       def run(df: DataFrame) = graft.streaming.StreamingAnalytics.psiDriftStream(
         df.toDF("ts", "value"), "ts", "value", baseline, "1 hour")
       val mem = MemoryStream[(Timestamp, java.lang.Double)]
-      val q = run(mem.toDF()).writeStream.format("memory")
-        .queryName("degen_psi").outputMode("complete").start()
-      feed(rows).foreach { c => mem.addData(c); q.processAllAvailable() }
-      q.stop()
+      val sink = StreamRun.memory(run(mem.toDF()), "complete", StreamRun.chunks(mem, feed(rows))).sink
       def key(r: Row) = (r.getTimestamp(0), r.getInt(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4))
-      val streaming = spark.table("degen_psi").collect()
+      val streaming = sink.collect()
         .filter(!_.isNullAt(0)).map(key).toSet
       val batchAll = run(rows.toDF("ts", "value")).collect()
       val batchNullWin = batchAll.filter(_.isNullAt(0))
@@ -163,10 +159,8 @@ object StreamDegen {
       // deterministically the min-doc_id one — the batch twin's minBy.
       // (An unordered feed would make "which duplicate survives" depend on
       // collect() order, a gate-flake waiting for a parquet row reorder.)
-      val docs: Seq[(Long, Timestamp, String)] = Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text")).collect()
-        .map(r => (r.getLong(0), new Timestamp(3600000L + r.getLong(0) * 60000L),
-          if (r.isNullAt(1)) null else r.getString(1))).toSeq.sortBy(_._1)
+      val docs = docTexts.map { case (id, text) =>
+        (id, new Timestamp(3600000L + id * 60000L), text) }.sortBy(_._1)
       val mem = MemoryStream[(Long, Timestamp, String)]
       // The batch twin below is GLOBAL keep-min, which matches the stream
       // only while every duplicate pair sits within the watermark horizon
@@ -181,11 +175,8 @@ object StreamDegen {
         s"${docs.map(_._1).max - docs.map(_._1).min + 60} minutes" else "30 minutes"
       val out = graft.streaming.StreamingAnalytics.cleanCorpusStream(
         mem.toDF().toDF("doc_id", "ts", "text"), "ts", delay)
-      val q = out.writeStream.format("memory").queryName("degen_clean")
-        .outputMode("append").start()
-      feed(docs).foreach { c => mem.addData(c); q.processAllAvailable() }
-      q.stop()
-      val got = spark.table("degen_clean").select("doc_id", "quality").collect()
+      val got = StreamRun.memory(out, "append", StreamRun.chunks(mem, feed(docs))).sink
+        .select("doc_id", "quality").collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
       // batch twin: first copy per text (null-safe grouping — streaming
       // dropDuplicates treats null hashes as one group) through the SAME
@@ -214,11 +205,8 @@ object StreamDegen {
 
     // ---- 4. incrementalDedupStream: per-batch parity on degen docs ----
     {
-      val all: Seq[(Long, String)] = Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text")).collect()
-        .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getString(1))).toSeq
-      val base = all.filter(_._1 % 2 == 0).toDF("doc_id", "text")
-      val arrivals = all.filter(_._1 % 2 == 1)
+      val base = docTexts.filter(_._1 % 2 == 0).toDF("doc_id", "text")
+      val arrivals = docTexts.filter(_._1 % 2 == 1)
       val chunks = feed(arrivals)
       val mem = MemoryStream[(Long, String)]
       val results = scala.collection.mutable.ArrayBuffer.empty[Map[Long, (String, Option[Long])]]
@@ -228,8 +216,7 @@ object StreamDegen {
           .map(r => r.getLong(0) -> ((r.getString(1),
             Option(r.get(2)).map(_.asInstanceOf[Long])))).toMap
       }
-      chunks.foreach { c => mem.addData(c); q.processAllAvailable() }
-      q.stop()
+      StreamRun(q, StreamRun.chunks(mem, chunks))
       val nonEmpty = results.filter(_.nonEmpty).toSeq
       // empty-chunk symmetry under a seeded schedule: an empty micro-batch
       // produces no stream output row and its batch twin is the empty map
@@ -255,20 +242,15 @@ object StreamDegen {
     // sketch contents included, across a mid-corpus micro-batch split.
     {
       val k = 16
-      val rows: Seq[(Timestamp, java.lang.Long)] = Tables.events(spark, dir)
-        .select(col("ts"), col("user_id")).orderBy(asc_nulls_first("ts")).collect()
-        .map(r => (r.getTimestamp(0),
-          if (r.isNullAt(1)) null else java.lang.Long.valueOf(r.getLong(1)))).toSeq
+      val rows = Tables.events(spark, dir).select(col("ts"), col("user_id"))
+        .orderBy(asc_nulls_first("ts")).as[(Timestamp, java.lang.Long)].collect().toSeq
       val mem = MemoryStream[(Timestamp, java.lang.Long)]
       val sdf = graft.streaming.StreamingAnalytics.kmvDistinctStream(
         mem.toDF().toDF("ts", "key"), "ts", "key", k)
-      val q = sdf.writeStream.format("memory").queryName("degen_kmv")
-        .outputMode("complete").start()
-      feed(rows).foreach { c => mem.addData(c); q.processAllAvailable() }
-      q.stop()
+      val sink = StreamRun.memory(sdf, "complete", StreamRun.chunks(mem, feed(rows))).sink
       def canon(df: DataFrame): Set[(Timestamp, Double, Seq[Long])] = df.collect()
         .map(r => (r.getTimestamp(0), r.getDouble(1), r.getSeq[Long](2))).toSet
-      val streamed = canon(spark.table("degen_kmv"))
+      val streamed = canon(sink)
       val batchAll = canon(graft.streaming.StreamingAnalytics.kmvDistinctStream(
         rows.toDF("ts", "key"), "ts", "key", k))
       check("kmvDistinctStream == batch on degen events (sketch-exact through state merges)",
@@ -297,23 +279,17 @@ object StreamDegen {
     // xxhash64(NULL)=seed convention) AND the "new" arm (the empty-text
     // doc, id % 3 == 2, exists only stream-side).
     {
-      val all: Seq[(Long, String)] = Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text")).collect()
-        .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getString(1)))
-        .toSeq.sortBy(_._1)
+      val all = docTexts.sortBy(_._1)
       val base = all.filter(_._1 % 3 != 2).toDF("doc_id", "text")
       val mem = MemoryStream[(Long, String)]
       val out = graft.streaming.StreamingAnalytics.exactDupStream(
         mem.toDF().toDF("doc_id", "text"), base)
-      val q = out.writeStream.format("memory").queryName("degen_xd")
-        .outputMode("append").start()
-      feed(all).foreach { c => mem.addData(c); q.processAllAvailable() }
-      q.stop()
+      val sink = StreamRun.memory(out, "append", StreamRun.chunks(mem, feed(all))).sink
       def canon(df: DataFrame): Map[Long, (String, Option[Long])] = df
         .select("doc_id", "status", "match_id").collect()
         .map(r => r.getLong(0) ->
           ((r.getString(1), if (r.isNullAt(2)) None else Some(r.getLong(2))))).toMap
-      val got = canon(spark.table("degen_xd"))
+      val got = canon(sink)
       val batch = canon(graft.streaming.StreamingAnalytics.exactDupStream(
         all.toDF("doc_id", "text"), base, cacheBase = false))
       check("exactDupStream == batch on degen docs (null-text hash convention identical)",
@@ -343,20 +319,15 @@ object StreamDegen {
       // data"), not a divergence — this lens's axis is TIES, which the
       // contract-ordered feed still exercises fully (equal-ts rows can
       // straddle any micro-batch boundary the seed picks).
-      val rows: Seq[(Long, Long, Timestamp, String)] = Tables.events(spark, dir)
+      val rows = Tables.events(spark, dir)
         .filter(col("user_id").isNotNull && col("ts").isNotNull)
         .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2),
-          if (r.isNullAt(3)) null else r.getString(3))).toSeq
+        .as[(Long, Long, Timestamp, String)].collect().toSeq
         .sortBy(t => (graft.TimeUs.toUs(t._3), if (t._4 == "click") 0 else 1, t._2))
       val mem = MemoryStream[(Long, Long, Timestamp, String)]
       val sdf = graft.streaming.StreamingAnalytics.attributionStream(mem.toDS(), winMicros)
-      val q = sdf.writeStream.format("memory").queryName("degen_attr")
-        .outputMode("append").start()
-      feed(rows).foreach { c => mem.addData(c); q.processAllAvailable() }
-      q.stop()
-      val streaming: Map[Long, Option[Long]] = spark.table("degen_attr").collect()
+      val streaming: Map[Long, Option[Long]] =
+        StreamRun.memory(sdf, "append", StreamRun.chunks(mem, feed(rows))).sink.collect()
         .map(r => r.getLong(1) -> Option(r.get(3)).map(_.asInstanceOf[Long])).toMap
       import org.apache.spark.sql.functions.{unix_micros, when}
       val purchases = rows.filter(_._4 == "purchase").map(t => (t._1, t._2, t._3))
@@ -399,15 +370,10 @@ object StreamDegen {
       val rows: Seq[(Long, Long, Double)] = Tables.events(spark, dir)
         .filter(col("user_id").isNotNull && col("value").isNotNull)
         .select(col("user_id"), col("event_id"), col("value"))
-        .orderBy("event_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+        .orderBy("event_id").as[(Long, Long, Double)].collect().toSeq
       val mem = MemoryStream[(Long, Long, Double)]
       val sdf = graft.streaming.StreamingAnalytics.ewmaStream(mem.toDS(), alpha)
-      val q = sdf.writeStream.format("memory").queryName("degen_ewma")
-        .outputMode("append").start()
-      feed(rows).foreach { c => mem.addData(c); q.processAllAvailable() }
-      q.stop()
-      val streaming = spark.table("degen_ewma").collect()
+      val streaming = StreamRun.memory(sdf, "append", StreamRun.chunks(mem, feed(rows))).sink.collect()
         .map(r => r.getLong(1) -> ((r.getDouble(3), r.getLong(4)))).toMap
       // exact reference: per-key recursive fold in event_id order — the
       // same order the stream folds (within-batch sort + in-order chunks)
@@ -445,17 +411,11 @@ object StreamDegen {
         .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
       val twinDir = "/tmp/graft_sd_scd2_twin"
       evDf.write.mode("overwrite").parquet(s"$twinDir/events.parquet")
-      val rows: Seq[(Long, Long, Timestamp, String)] = evDf.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2),
-          if (r.isNullAt(3)) null else r.getString(3))).toSeq.sortBy(_._2)
+      val rows = evDf.as[(Long, Long, Timestamp, String)].collect().toSeq.sortBy(_._2)
       val chunks = feed(rows)
       val mem = MemoryStream[(Long, Long, Timestamp, String)]
       val sdf = graft.streaming.StreamingAnalytics.scd2Stream(mem.toDS())
-      val q = sdf.writeStream.format("memory").queryName("degen_scd2")
-        .outputMode("append").start()
-      chunks.foreach { c => mem.addData(c); q.processAllAvailable() }
-      q.stop()
-      val streaming = spark.table("degen_scd2").collect()
+      val streaming = StreamRun.memory(sdf, "append", StreamRun.chunks(mem, chunks)).sink.collect()
         .map(r => (r.getLong(0), r.getLong(1)) ->
           ((r.getString(2), r.getTimestamp(3), r.getTimestamp(4), r.getLong(5)))).toMap
 
@@ -524,20 +484,15 @@ object StreamDegen {
       val steps = Seq("view", "click", "purchase")
       val winMs = 24L * 3600 * 1000
       val stepIdx = steps.zipWithIndex.reverse.toMap
-      val rows: Seq[(Long, Timestamp, String)] = Tables.events(spark, dir)
+      val rows = Tables.events(spark, dir)
         .filter(col("user_id").isNotNull && col("ts").isNotNull)
-        .select(col("user_id"), col("ts"), col("event_type")).collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1),
-          if (r.isNullAt(2)) null else r.getString(2))).toSeq
+        .select(col("user_id"), col("ts"), col("event_type"))
+        .as[(Long, Timestamp, String)].collect().toSeq
         .sortBy(t => (graft.TimeUs.toUs(t._2),
           t._3 match { case s if s != null && stepIdx.contains(s) => stepIdx(s); case _ => steps.size }))
       val mem = MemoryStream[(Long, Timestamp, String)]
       val sdf = graft.operators.Funnel.conversionStream(mem.toDS(), steps, winMs)
-      val q = sdf.writeStream.format("memory").queryName("degen_funnel")
-        .outputMode("append").start()
-      feed(rows).foreach { c => mem.addData(c); q.processAllAvailable() }
-      q.stop()
-      val streaming = spark.table("degen_funnel").collect()
+      val streaming = StreamRun.memory(sdf, "append", StreamRun.chunks(mem, feed(rows))).sink.collect()
         .map(r => r.getLong(0) -> r.getSeq[Timestamp](1).map(graft.TimeUs.toUs)).toSet
       // contract model: per user, greedy fold with inline expiry +
       // tombstone, in the fold's own (ts, step position) order
@@ -587,11 +542,9 @@ object StreamDegen {
       val changes: Seq[(Option[Long], Option[Long], String, Option[Double])] =
         Tables.events(spark, dir)
           .select(col("user_id"), col("ts"), col("event_type"), col("value"))
-          .orderBy(asc_nulls_first("ts"), col("event_id")).collect()
-          .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
-            if (r.isNullAt(1)) None else Some(graft.TimeUs.toUs(r.getTimestamp(1))),
-            if (r.isNullAt(2)) null else r.getString(2),
-            if (r.isNullAt(3)) None else Some(r.getDouble(3)))).toSeq
+          .orderBy(asc_nulls_first("ts"), col("event_id"))
+          .as[(Option[Long], Option[Timestamp], String, Option[Double])].collect()
+          .map { case (u, ts, tpe, v) => (u, ts.map(graft.TimeUs.toUs), tpe, v) }.toSeq
       val storeDir = "/tmp/graft_sd_upsert_store"
       org.apache.hadoop.fs.FileSystem.get(new org.apache.hadoop.conf.Configuration())
         .delete(new org.apache.hadoop.fs.Path(storeDir), true)
@@ -604,8 +557,7 @@ object StreamDegen {
       val q = graft.streaming.StreamingAnalytics.upsertStream(
         mem.toDF().toDF("user_id", "seq", "event_type", "value"),
         storeDir, keyCol = "user_id", seqCol = "seq")
-      chunks.foreach { c => mem.addData(c); q.processAllAvailable() }
-      q.stop()
+      StreamRun(q, StreamRun.chunks(mem, chunks))
       // contract model: per chunk, per key, winner by (seq DESC NULLS
       // LAST, tieBreak ASC) — the tie-break computed by the same
       // expression the stream uses, then last-batch-wins into the store
@@ -614,12 +566,8 @@ object StreamDegen {
       chunks.filter(_.nonEmpty).foreach { chunk =>
         val df = chunk.toDF("user_id", "seq", "event_type", "value")
         val tb = xxhash64(struct(df.columns.map(col).toIndexedSeq: _*))
-        val picked = df.filter(col("user_id").isNotNull).withColumn("_tb", tb).collect()
-          .map(r => (r.getLong(0),
-            if (r.isNullAt(1)) None else Some(r.getLong(1)),
-            if (r.isNullAt(2)) null else r.getString(2),
-            if (r.isNullAt(3)) None else Some(r.getDouble(3)),
-            r.getLong(4)))
+        val picked = df.filter(col("user_id").isNotNull).withColumn("_tb", tb)
+          .as[(Long, Option[Long], String, Option[Double], Long)].collect()
           .groupBy(_._1).map { case (u, g) =>
             val w = g.minBy(x => (x._2.isEmpty, x._2.map(-_).getOrElse(0L), x._5))
             u -> ((w._2, w._3, w._4))
@@ -627,11 +575,9 @@ object StreamDegen {
         picked.foreach { case (u, v) => store(u) = v }
       }
       val back = spark.read.format("docstore").load(storeDir)
-        .select("user_id", "seq", "event_type", "value").collect()
-        .map(r => r.getLong(0) -> ((
-          if (r.isNullAt(1)) None else Some(r.getLong(1)),
-          if (r.isNullAt(2)) null else r.getString(2),
-          if (r.isNullAt(3)) None else Some(r.getDouble(3))))).toMap
+        .select("user_id", "seq", "event_type", "value")
+        .as[(Long, Option[Long], String, Option[Double])].collect()
+        .map { case (u, seq, tpe, v) => u -> ((seq, tpe, v)) }.toMap
       check("upsertStream final store == last-writer contract model on degen changes",
         back == store.toMap && back.nonEmpty,
         s"store=${back.size} model=${store.size} " +
@@ -648,10 +594,7 @@ object StreamDegen {
     // second store: foreachBatch plumbing vs direct calls must converge
     // to byte-identical admission decisions.
     locally {
-      val docs: Seq[(Long, String)] = Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text")).collect()
-        .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getString(1)))
-        .toSeq.sortBy(_._1)
+      val docs = docTexts.sortBy(_._1)
       val base = docs.filter(_._1 % 3 == 0)
       val delta = docs.filterNot(_._1 % 3 == 0)
       val chunks = feed(delta)
@@ -668,8 +611,7 @@ object StreamDegen {
       val mem = MemoryStream[(Long, String)]
       val q = graft.streaming.StreamingAnalytics.streamingIngest(
         mem.toDF().toDF("doc_id", "text"), dirs.head, n = 5, threshold = 0.5, maxDf = 100)
-      chunks.foreach { c => mem.addData(c); q.processAllAvailable() }
-      q.stop()
+      StreamRun(q, StreamRun.chunks(mem, chunks))
       chunks.filter(_.nonEmpty).foreach { c =>
         graft.streaming.StreamingAnalytics.ingestBatch(
           c.toDF("doc_id", "text"), dirs(1), n = 5, threshold = 0.5, maxDf = 100)
@@ -681,11 +623,10 @@ object StreamDegen {
       val qI = graft.streaming.StreamingAnalytics.streamingIngest(
         memI.toDF().toDF("doc_id", "text"), dirs(2), n = 5, threshold = 0.5,
         maxDf = 100, indexDir = Some(idxDir), indexCompactEvery = 2)
-      chunks.foreach { c => memI.addData(c); qI.processAllAvailable() }
-      qI.stop()
+      StreamRun(qI, StreamRun.chunks(memI, chunks))
       def read(p: String): Map[Long, String] =
-        spark.read.format("docstore").load(p).select("doc_id", "text").collect()
-          .map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getString(1))).toMap
+        spark.read.format("docstore").load(p).select("doc_id", "text")
+          .as[(Long, String)].collect().toMap
       val a = read(dirs.head)
       val b = read(dirs(1))
       val c = read(dirs(2))

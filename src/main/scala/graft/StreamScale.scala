@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.functions._
 
+import graft.streaming.StreamRun
+
 /** Streaming-ingest scale probe (r12, not part of the driver contract):
   * runs the END-TO-END [[graft.streaming.StreamingAnalytics.streamingIngest]]
   * pipe — change-stream → clean gates → incremental dedup → docstore
@@ -84,16 +86,10 @@ object StreamScale {
       storeA, checkpointDir = Some(ckpt))
     val t0 = System.nanoTime()
     feed(0, nBatches / 2)
-    val q1 = startIngest()
-    q1.processAllAvailable()
-    val progress1 = q1.recentProgress.toSeq.filter(_.numInputRows > 0)
-    q1.stop()
+    val progress1 = StreamRun(startIngest())
     feed(nBatches / 2, nBatches)
-    val q = startIngest()
-    q.processAllAvailable()
+    val progress = (progress1 ++ StreamRun(startIngest())).filter(_.numInputRows > 0)
     val streamSec = (System.nanoTime() - t0) / 1e9
-    val progress = progress1 ++ q.recentProgress.toSeq.filter(_.numInputRows > 0)
-    q.stop()
 
     // ---- batch twin: same chunks, same order, the shared ingestBatch ----
     val storeB = seedStore()

@@ -2,8 +2,11 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+
+import graft.streaming.StreamRun
 
 /** Streaming-side skew measurement (r15 — the batch [[SkewProbe]] covers
   * joins/windows/aggregates; the stateful streaming path has the same
@@ -41,7 +44,6 @@ object StreamSkewProbe {
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
 
     val meter = new Meter(spark)
-    def fmt(s: Meter.Spread) = Meter.fmt(s)
 
     val gate = new Gate("STREAMSKEW")
     def check(name: String, ok: Boolean, detail: String): Unit =
@@ -54,34 +56,36 @@ object StreamSkewProbe {
     val distinctUsers = ev.select("user_id").distinct().count()
     println(f"corpus: $dir, hot user owns ${hotShare * 100}%.1f%% of $total%d events, $distinctUsers%d distinct users")
 
-    // ---- 1. conversionStream: funnel fold on the hot key ----------------
-    // fed in event-time order (3 chunks) so the 1-hour watermark never
-    // drops rows for a reason unrelated to skew
-    locally {
-      val rows: Seq[(Long, Timestamp, String)] = ev
-        .select(col("user_id"), col("ts"), col("event_type"))
-        .orderBy("ts", "user_id").as[(Long, Timestamp, String)].collect().toSeq
-      val mem = MemoryStream[(Long, Timestamp, String)]
-      val out = graft.operators.Funnel.conversionStream(
-        mem.toDS(), Seq("click", "purchase"), windowMillis = 7L * 24 * 3600 * 1000)
+    /** One lens: feed `rows` through `fold` as a real streaming query in
+      * three in-order chunks, metering the stateful stage; prints and
+      * returns the stage's task spread and the state rows held after the
+      * last trigger (the state store's own `numRowsTotal`). */
+    def lens[T: Encoder](name: String, emitted: String, rows: Seq[T])(
+        fold: Dataset[T] => Dataset[_]): (Meter.Spread, Long) = {
+      val mem = MemoryStream[T]
+      val out = fold(mem.toDS())
+      val chunks = rows.grouped(math.max(1, rows.size / 3 + 1)).toSeq
       meter.reset()
       // started inside the meter: the stream thread inherits its job tag
-      val stateOps = meter {
-        val q = out.writeStream.format("memory").queryName("skew_funnel")
-          .outputMode("append").start()
-        rows.grouped(math.max(1, rows.size / 3 + 1)).foreach { c =>
-          mem.addData(c); q.processAllAvailable()
-        }
-        val ops = Option(q.lastProgress).toSeq.flatMap(_.stateOperators.toSeq)
-        q.stop()
-        ops
-      }
+      val run = meter { StreamRun.memory(out, "append", StreamRun.chunks(mem, chunks)) }
       val s = meter.spread
-      val conversions = spark.table("skew_funnel").count()
+      val stateOps = run.progress.lastOption.toSeq.flatMap(_.stateOperators.toSeq)
       val stateRows = stateOps.map(_.numRowsTotal).sum
       val stateBytes = stateOps.map(_.memoryUsedBytes).sum
-      println(s"  conversionStream stateful stage: ${fmt(s)}")
-      println(f"  conversionStream state: $stateRows%d rows, ${stateBytes / 1e6}%.2f MB (${conversions}%d conversions emitted)")
+      println(s"  $name stateful stage: ${Meter.fmt(s)}")
+      println(f"  $name state: $stateRows%d rows, ${stateBytes / 1e6}%.2f MB (${run.sink.count()}%d $emitted emitted)")
+      (s, stateRows)
+    }
+
+    // ---- 1. conversionStream: funnel fold on the hot key ----------------
+    // fed in event-time order so the 1-hour watermark never drops rows for
+    // a reason unrelated to skew
+    locally {
+      val rows = ev.select(col("user_id"), col("ts"), col("event_type"))
+        .orderBy("ts", "user_id").as[(Long, Timestamp, String)].collect().toSeq
+      val (s, stateRows) = lens("conversionStream", "conversions", rows)(ds =>
+        graft.operators.Funnel.conversionStream(
+          ds, Seq("click", "purchase"), windowMillis = 7L * 24 * 3600 * 1000))
       check("funnel fold concentrates the hot key (1 task, unsplittable)",
         s.maxOverMedian > 5,
         f"hot task reads ${s.maxOverMedian}%.1fx the median — per-key folds cannot be split, the streaming window-ceiling sibling")
@@ -92,29 +96,10 @@ object StreamSkewProbe {
 
     // ---- 2. scd2Stream: open-run fold on the hot key --------------------
     locally {
-      val rows: Seq[(Long, Long, Timestamp, String)] = ev
-        .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
+      val rows = ev.select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
         .orderBy("event_id").as[(Long, Long, Timestamp, String)].collect().toSeq
-      val mem = MemoryStream[(Long, Long, Timestamp, String)]
-      val out = graft.streaming.StreamingAnalytics.scd2Stream(mem.toDS())
-      meter.reset()
-      // started inside the meter: the stream thread inherits its job tag
-      val stateOps = meter {
-        val q = out.writeStream.format("memory").queryName("skew_scd2")
-          .outputMode("append").start()
-        rows.grouped(math.max(1, rows.size / 3 + 1)).foreach { c =>
-          mem.addData(c); q.processAllAvailable()
-        }
-        val ops = Option(q.lastProgress).toSeq.flatMap(_.stateOperators.toSeq)
-        q.stop()
-        ops
-      }
-      val s = meter.spread
-      val versions = spark.table("skew_scd2").count()
-      val stateRows = stateOps.map(_.numRowsTotal).sum
-      val stateBytes = stateOps.map(_.memoryUsedBytes).sum
-      println(s"  scd2Stream stateful stage: ${fmt(s)}")
-      println(f"  scd2Stream state: $stateRows%d rows, ${stateBytes / 1e6}%.2f MB (${versions}%d closed versions emitted)")
+      val (s, stateRows) = lens("scd2Stream", "closed versions", rows)(
+        graft.streaming.StreamingAnalytics.scd2Stream)
       check("scd2 fold concentrates the hot key (1 task, unsplittable)",
         s.maxOverMedian > 5,
         f"hot task reads ${s.maxOverMedian}%.1fx the median")

@@ -85,24 +85,6 @@ object ShingleIndex {
 
   private def th(c: Column): Column = when(c.isNotNull, xxhash64(c))
 
-  /** Derive one segment's three frames from raw docs. `stats` keeps one
-    * row per doc (n_total = 0 for null/short texts); `postings` drops
-    * shingle-less docs with the same plain `explode` the re-derive path
-    * uses.
-    */
-  private[graft] def segmentFrames(docs: DataFrame, idCol: String,
-                                   textCol: String, n: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val shingles = array_distinct(TextFunctions.wordShingles(col(textCol), n))
-    val stats = docs.select(col(idCol).as("base_id"),
-      th(col(textCol)).as("th"),
-      coalesce(size(shingles).cast("long"), lit(0L)).as("n_total"))
-    val postings = docs.select(col(idCol).as("base_id"),
-      explode(shingles).as("shingle"))
-    val dfPartial = postings.groupBy("shingle").agg(count(lit(1)).as("df"))
-    (postings, stats, dfPartial)
-  }
-
   private def writeSegmentData(docs: DataFrame, idCol: String,
                                textCol: String, n: Int, seg: Path): Unit = {
     // ONE tokenization per segment (r17, second cut): each write action

@@ -36,9 +36,8 @@ import org.apache.spark.sql.functions._
   *     streaming ingest pipe classifies against the docstore without
   *     clustering).
   *   - convergence is a `changed` flag computed INSIDE the propagation
-  *     round (nbr_min < component) — detecting it is a short-circuiting
-  *     local scan of the already-materialized checkpoint blocks, not a
-  *     separate join job.
+  *     round (nbr_min < component) — counting it is the same job that
+  *     materializes the round's checkpoint, not a separate join job.
   *   - a component with diameter > maxIter would exit with wrong,
   *     partially-propagated labels — that silently corrupts canonical
   *     dedup ids downstream, so non-convergence THROWS instead. For
@@ -60,18 +59,11 @@ object Graphs {
     * queries: another query's `cache()` landing in the snapshot window
     * would be claimed here and wrongly unpersisted later.
     */
-  /** LAZY variant (r18): `localCheckpoint(eager = false)` defers the
-    * materialization into the CALLER's next action instead of running a
-    * dedicated job — the CC loop pairs it with a full-scan `count()` on
-    * the checkpointed frame, so each round pays ONE job (materialize +
-    * convergence signal) where the eager form paid two (checkpoint job,
-    * then the changed-row probe). The triggering action must compute ALL
-    * partitions (Spark's documented lazy-checkpoint contract — a
-    * short-circuiting limit/isEmpty would truncate lineage with only the
-    * touched partitions persisted); `count()` does.
-    */
-  private def checkpointTracked(df: DataFrame, eager: Boolean = true): (DataFrame, Seq[RDD[_]]) = {
-    val out = df.localCheckpoint(eager)
+  private def checkpointTracked(df: DataFrame): (DataFrame, Seq[RDD[_]]) =
+    track(df.localCheckpoint())
+
+  /** The blocks behind an already checkpointed frame (see above). */
+  private def track(out: DataFrame): (DataFrame, Seq[RDD[_]]) = {
     val blocks = out.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD => Seq(lr.rdd)
       case other =>
@@ -82,6 +74,23 @@ object Graphs {
         Seq.empty
     }
     (out, blocks)
+  }
+
+  /** One propagation round's labels: a LAZY `localCheckpoint` (r18) of
+    * `round`, materialized by a full-scan count of its `changed` rows —
+    * ONE job per round that both persists the labels and answers
+    * convergence (the eager form paid a checkpoint job, then a probe job).
+    * Spark's lazy-checkpoint contract is that the triggering action
+    * computes EVERY partition; a short-circuiting probe (limit/isEmpty)
+    * would truncate lineage with only the touched partitions persisted.
+    * The count runs here, so no caller can pick a different probe.
+    * Returns the checkpointed frame (`changed` dropped), its blocks, and
+    * whether no row changed.
+    */
+  private def checkpointRound(round: DataFrame): (DataFrame, Seq[RDD[_]], Boolean) = {
+    val (next, blocks) = track(round.localCheckpoint(eager = false))
+    val converged = next.filter(col("changed")).count() == 0
+    (next.drop("changed"), blocks, converged)
   }
 
   /** Both orientations of an edge list from ONE scan of the input plan,
@@ -124,19 +133,15 @@ object Graphs {
         .join(labels.select(col("node").as("dst"), col("component").as("nbr")), "dst")
         .select(col("src").as("node"), col("nbr"))
         .groupBy("node").agg(min("nbr").as("nbr_min"))
-      // LAZY checkpoint + full-scan count: one job materializes the
-      // round's labels AND answers convergence (r18 — the eager form ran
-      // a dedicated checkpoint job, then a second probe job per round).
-      val (next, nextBlocks) = checkpointTracked(
+      val (next, nextBlocks, done) = checkpointRound(
         labels.join(nbrMin, "node")
           .select(col("node"),
             least(col("component"), col("nbr_min")).as("component"),
-            (col("nbr_min") < col("component")).as("changed")),
-        eager = false)
-      converged = next.filter(col("changed")).count() == 0
+            (col("nbr_min") < col("component")).as("changed")))
+      converged = done
       labelBlocks.foreach(_.unpersist(blocking = false))
       labelBlocks = nextBlocks
-      labels = next.select("node", "component")
+      labels = next
       iter += 1
     }
     symBlocks.foreach(_.unpersist(blocking = false))
@@ -183,20 +188,18 @@ object Graphs {
       // Path-halving: follow the own-parent pointer one extra hop. This is
       // the star-collapsing step that makes rounds logarithmic.
       val grand = parents.select(col("node").as("p1"), col("parent").as("gp"))
-      // same lazy-checkpoint + one-job convergence as connectedComponents
-      val (next, nextBlocks) = checkpointTracked(
+      val (next, nextBlocks, done) = checkpointRound(
         parents.join(nbrMin, Seq("node"), "left")
           .join(grand, col("parent") === col("p1"), "left")
           .select(col("node"),
             least(col("parent"), coalesce(col("nbr_min"), col("parent")),
               coalesce(col("gp"), col("parent"))).as("parent"),
             (least(coalesce(col("nbr_min"), col("parent")),
-              coalesce(col("gp"), col("parent"))) < col("parent")).as("changed")),
-        eager = false)
-      converged = next.filter(col("changed")).count() == 0
+              coalesce(col("gp"), col("parent"))) < col("parent")).as("changed")))
+      converged = done
       parentBlocks.foreach(_.unpersist(blocking = false))
       parentBlocks = nextBlocks
-      parents = next.select("node", "parent")
+      parents = next
       iter += 1
     }
     symBlocks.foreach(_.unpersist(blocking = false))

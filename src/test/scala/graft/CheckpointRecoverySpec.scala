@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.streaming.StreamingQueryException
 
-import graft.streaming.CheckpointRecovery
+import graft.streaming.{CheckpointRecovery, StreamRun}
 
 /** Deterministic pin of the r16 crash-fuzz window (seed 20260912,
   * diagnosed r17): a kill -9 inside the FIRST offsets write leaves only
@@ -34,12 +34,11 @@ class CheckpointRecoverySpec extends SparkSpec {
   }
 
   private def runOnce(src: String, tgt: String, ckpt: String): Unit = {
-    val q = spark.readStream.format("docstore")
+    StreamRun(spark.readStream.format("docstore")
       .schema("doc_id BIGINT, text STRING").load(src)
       .writeStream.format("docstore")
       .option("checkpointLocation", ckpt)
-      .outputMode("append").start(tgt)
-    try q.processAllAvailable() finally q.stop()
+      .outputMode("append").start(tgt))
   }
 
   private def plantOrphan(ckpt: String): Unit = {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.StreamingAnalytics
+import graft.streaming.{StreamRun, StreamingAnalytics}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.sql.Timestamp
 
@@ -23,12 +23,7 @@ class CustomSessionsSpec extends SparkSpec {
     ))
     val sessions = StreamingAnalytics.customSessions(
       mem.toDS(), gapMillis = 10 * 60 * 1000, terminalType = "purchase")
-    val q = sessions.writeStream.format("memory").queryName("custom_sessions")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-
-    val out = spark.table("custom_sessions")
+    val out = StreamRun.memory(sessions, "append").sink
       .collect()
       .map(r => (r.getString(0), r.getTimestamp(1), r.getLong(3), r.getString(4)))
       .toSet
@@ -45,18 +40,12 @@ class CustomSessionsSpec extends SparkSpec {
     val sessions = StreamingAnalytics.customSessions(
       mem.toDS(), gapMillis = 10 * 60 * 1000, terminalType = "purchase",
       watermarkDelay = "1 minute")
-    val q = sessions.writeStream.format("memory").queryName("custom_sessions_timeout")
-      .outputMode("append").start()
-    // Batch 1: u1 has an open 2-event session, then goes idle forever.
-    mem.addData(Seq(("u1", t(0), "view"), ("u1", t(2), "click")))
-    q.processAllAvailable()
-    // Batch 2: another key advances the watermark past u1's last+gap
-    // (10:02 + 10 min < 10:40 - 1 min) → u1's state must time out.
-    mem.addData(Seq(("u9", t(40), "view")))
-    q.processAllAvailable()
-    q.stop()
-
-    val out = spark.table("custom_sessions_timeout")
+    val out = StreamRun.memory(sessions, "append", StreamRun.chunks(mem, Seq(
+      // Batch 1: u1 has an open 2-event session, then goes idle forever.
+      Seq(("u1", t(0), "view"), ("u1", t(2), "click")),
+      // Batch 2: another key advances the watermark past u1's last+gap
+      // (10:02 + 10 min < 10:40 - 1 min) → u1's state must time out.
+      Seq(("u9", t(40), "view"))))).sink
       .collect()
       .map(r => (r.getString(0), r.getTimestamp(1), r.getLong(3), r.getString(4)))
       .toSet

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import graft.streaming.StreamRun
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -26,13 +27,12 @@ class DocStoreStreamingSpec extends SparkSpec {
       .outputMode("append")
       .start()
 
-    in.addData((1L, "alice"), (2L, "bob"))
-    q.processAllAvailable()
-    assert(spark.read.format("docstore").load(dir).count() == 2)
-
-    in.addData((3L, "carol"))
-    q.processAllAvailable()
-    q.stop()
+    StreamRun(q, Seq(
+      () => in.addData((1L, "alice"), (2L, "bob")),
+      () => {
+        assert(spark.read.format("docstore").load(dir).count() == 2)
+        in.addData((3L, "carol"))
+      }))
 
     val back = spark.read.format("docstore").load(dir)
     assert(back.orderBy("id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq ==
@@ -46,9 +46,7 @@ class DocStoreStreamingSpec extends SparkSpec {
       .writeStream.format("docstore").option("path", gzDir)
       .option("compression", "gzip")
       .option("checkpointLocation", gzCkpt).outputMode("append").start()
-    in2.addData((1L, "z"))
-    q2.processAllAvailable()
-    q2.stop()
+    StreamRun(q2, StreamRun.chunks(in2, Seq(Seq((1L, "z")))))
     val gzShards = Files.list(java.nio.file.Paths.get(gzDir)).toArray.map(_.toString)
       .map(p => p.substring(p.lastIndexOf('/') + 1))
       .filter(_.startsWith("part-e")) // basename filter: skips .crc sidecars
@@ -65,7 +63,6 @@ class DocStoreStreamingSpec extends SparkSpec {
 
   test("readStream change-stream: batch appends surface as micro-batches, filter applies") {
     val dir = Files.createTempDirectory("graft_docstore_src").toString
-    val ckpt = Files.createTempDirectory("graft_docstore_src_ckpt").toString
 
     Seq((1L, "a"), (2L, "b")).toDF("id", "name").coalesce(1)
       .write.format("docstore").mode("overwrite").save(dir)
@@ -73,17 +70,14 @@ class DocStoreStreamingSpec extends SparkSpec {
     val stream = spark.readStream.format("docstore")
       .schema("id BIGINT, name STRING").load(dir)
       .filter(col("id") >= 2)
-    val q = stream.writeStream.format("memory").queryName("docstore_src_test")
-      .option("checkpointLocation", ckpt).outputMode("append").start()
-    q.processAllAvailable()
-    assert(spark.table("docstore_src_test").count() == 1) // only id=2
+    val (q, sink) = StreamRun.startMemory(stream, "append")
+    StreamRun(q, Seq { () =>
+      assert(spark.table(sink).count() == 1) // only id=2
+      Seq((3L, "c"), (4L, "d")).toDF("id", "name").coalesce(1)
+        .write.format("docstore").mode("append").save(dir)
+    })
 
-    Seq((3L, "c"), (4L, "d")).toDF("id", "name").coalesce(1)
-      .write.format("docstore").mode("append").save(dir)
-    q.processAllAvailable()
-    q.stop()
-
-    val got = spark.table("docstore_src_test").collect()
+    val got = spark.table(sink).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(got == Set((2L, "b"), (3L, "c"), (4L, "d")))
   }
@@ -98,7 +92,7 @@ class DocStoreStreamingSpec extends SparkSpec {
       val q = agg.writeStream.format("docstore")
         .option("path", dir).option("checkpointLocation", ckpt)
         .outputMode("complete").start()
-      try { in.addData((1L, "x")); q.processAllAvailable() } finally q.stop()
+      StreamRun(q, StreamRun.chunks(in, Seq(Seq((1L, "x")))))
     }
     def chain(t: Throwable): Seq[Throwable] =
       Option(t).toSeq.flatMap(e => e +: chain(e.getCause))
@@ -111,13 +105,9 @@ class DocStoreStreamingSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_docstore_verstream").toString
     Seq((1L, "a")).toDF("id", "name")
       .write.format("docstore").mode("overwrite").save(dir)
-    val ckpt = Files.createTempDirectory("graft_docstore_verstream_ckpt").toString
     val ex = intercept[Exception] {
-      val q = spark.readStream.format("docstore")
-        .option("version", 1).load(dir)
-        .writeStream.format("memory").queryName("verstream_test")
-        .option("checkpointLocation", ckpt).start()
-      try q.processAllAvailable() finally q.stop()
+      StreamRun.memory(spark.readStream.format("docstore")
+        .option("version", 1).load(dir), "append")
     }
     def chain(t: Throwable): Seq[Throwable] =
       Option(t).toSeq.flatMap(e => e +: chain(e.getCause))
@@ -134,8 +124,7 @@ class DocStoreStreamingSpec extends SparkSpec {
       val q = in.toDF().toDF("id", "name").writeStream.format("docstore")
         .option("path", dir).option("checkpointLocation", ckpt)
         .outputMode("append").start()
-      try { ids.foreach { i => in.addData((i, s"$tag$i")); q.processAllAvailable() } }
-      finally q.stop()
+      StreamRun(q, StreamRun.chunks(in, ids.map(i => Seq((i, s"$tag$i")))))
     }
     // both queries run epochs 0..2 against the same collection; the
     // epoch-replay cleanup is query-tag-scoped, so their same-numbered

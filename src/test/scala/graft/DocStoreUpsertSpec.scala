@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.sources.docstore.DocStoreMaintenance
+import graft.streaming.StreamRun
 
 /** Bulk replace_one(upsert=true): replaced/inserted counts, whole-document
   * replace semantics (absent batch column → stored null), key-pruned shard
@@ -87,13 +88,11 @@ class DocStoreUpsertSpec extends SparkSpec {
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, String, Double)]
     val q = graft.streaming.StreamingAnalytics.upsertStream(
       mem.toDF().toDF("seq", "id", "name", "score"), dir, keyCol = "id", seqCol = "seq")
-    // batch 1: two versions of id=2 (seq 1 then 2 — latest wins) + a new id
-    mem.addData(Seq((1L, 2L, "v1", 0.0), (2L, 2L, "v2", 0.0), (3L, 50L, "new", 1.0)))
-    q.processAllAvailable()
-    // batch 2: a later correction of the same key across batches
-    mem.addData(Seq((4L, 50L, "new2", 2.0)))
-    q.processAllAvailable()
-    q.stop()
+    StreamRun(q, StreamRun.chunks(mem, Seq(
+      // batch 1: two versions of id=2 (seq 1 then 2 — latest wins) + a new id
+      Seq((1L, 2L, "v1", 0.0), (2L, 2L, "v2", 0.0), (3L, 50L, "new", 1.0)),
+      // batch 2: a later correction of the same key across batches
+      Seq((4L, 50L, "new2", 2.0)))))
     val back = spark.read.format("docstore").load(dir)
     assert(back.count() == 6L)
     assert(back.filter(col("id") === 2L).head().getAs[String]("name") == "v2")
@@ -111,9 +110,8 @@ class DocStoreUpsertSpec extends SparkSpec {
     // the null-key row is unidentifiable — it must be dropped, not allowed
     // to trip upsert's null-key require (which would kill the query and
     // every checkpoint replay of the same batch)
-    mem.addData(Seq((1L, Some(1L), "ok", 0.0), (2L, None, "poison", 0.0)))
-    q.processAllAvailable()
-    q.stop()
+    StreamRun(q, StreamRun.chunks(mem,
+      Seq(Seq((1L, Some(1L), "ok", 0.0), (2L, None, "poison", 0.0)))))
     val back = spark.read.format("docstore").load(dir)
     assert(back.count() == 3L)
     assert(back.filter(col("id") === 1L).head().getAs[String]("name") == "ok")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.StreamingAnalytics
+import graft.streaming.{StreamRun, StreamingAnalytics}
 import java.nio.file.Files
 
 /** Real file-source streaming ingest (S1's streaming twin): raw log lines
@@ -12,7 +12,6 @@ class FileStreamSpec extends SparkSpec {
 
   test("readStream.text directory ingest: parse + count equals batch") {
     val dir = Files.createTempDirectory("graft_stream_in").toFile
-    val ckpt = Files.createTempDirectory("graft_stream_ckpt").toFile
     val lines = Seq(
       "Dec 10 06:55:46 LabSZ sshd[1]: Invalid user a from 1.2.3.4",
       "Dec 10 06:56:00 LabSZ sshd[2]: Invalid user b from 1.2.3.5",
@@ -25,13 +24,7 @@ class FileStreamSpec extends SparkSpec {
     val parsed = StreamingAnalytics.parseStream(stream)
     val counts = parsed.groupBy("event").count()
 
-    val q = counts.writeStream.format("memory").queryName("file_stream_test")
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .outputMode("complete").start()
-    q.processAllAvailable()
-    q.stop()
-
-    val streaming = spark.table("file_stream_test").collect()
+    val streaming = StreamRun.memory(counts, "complete").sink.collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(streaming == Map("invalid_user" -> 2L, "failed_password" -> 1L))
   }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Funnel
+import graft.streaming.StreamRun
 import org.apache.spark.sql.functions._
 
 /** Fixture semantics for the windowed ordered funnel — the cases the
@@ -63,15 +64,11 @@ class FunnelSpec extends SparkSpec {
       (3L, 0, "view"), (3L, 1, "purchase"))
     val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
     val sdf = Funnel.conversionStream(mem.toDS(), steps, 60L * 60 * 1000)
-    val q = sdf.writeStream.format("memory").queryName("funnel_stream")
-      .outputMode("append").start()
     // two micro-batches, split mid-stream, in event-time order per user
     val all = rows.map { case (u, h, t) => (u, ts(h), t) }.sortBy(_._2.getTime)
-    mem.addData(all.take(4)); q.processAllAvailable()
-    mem.addData(all.drop(4)); q.processAllAvailable()
-    q.stop()
-    val streaming = spark.table("funnel_stream").as[(Long, Seq[java.sql.Timestamp])]
-      .collect().toSet
+    val streaming = StreamRun.memory(sdf, "append",
+      StreamRun.chunks(mem, Seq(all.take(4), all.drop(4))))
+      .sink.as[(Long, Seq[java.sql.Timestamp])].collect().toSet
     val batch = Funnel.stepTimes(
       rows.map { case (u, h, t) => (u, ts(h), t) }.toDF("user_id", "ts", "event_type"),
       "user_id", "ts", "event_type", steps, oneHour)
@@ -87,20 +84,16 @@ class FunnelSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
     val sdf = Funnel.conversionStream(mem.toDS(), steps, 60L * 60 * 1000)
-    val q = sdf.writeStream.format("memory").queryName("funnel_reanchor")
-      .outputMode("append").start()
-    // batch 1 anchors a chain at 00:00 that will die (no click within 1h)
-    mem.addData(Seq((1L, ts(0), "view"))); q.processAllAvailable()
-    // batch 2 delivers a COMPLETE fresh chain hours later, while the dead
-    // chain still occupies state (the user was never idle a batch, so the
-    // EventTimeTimeout cannot have fired) — the inline expiry must
-    // re-anchor at the 03:00 view or the conversion is silently lost and
-    // the result depends on micro-batch slicing
-    mem.addData(Seq((1L, ts(3), "view"), (1L, ts(4), "click"), (1L, ts(5), "purchase")))
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("funnel_reanchor").as[(Long, Seq[java.sql.Timestamp])]
-      .collect().toSet
+    val got = StreamRun.memory(sdf, "append", StreamRun.chunks(mem, Seq(
+      // batch 1 anchors a chain at 00:00 that will die (no click within 1h)
+      Seq((1L, ts(0), "view")),
+      // batch 2 delivers a COMPLETE fresh chain hours later, while the dead
+      // chain still occupies state (the user was never idle a batch, so the
+      // EventTimeTimeout cannot have fired) — the inline expiry must
+      // re-anchor at the 03:00 view or the conversion is silently lost and
+      // the result depends on micro-batch slicing
+      Seq((1L, ts(3), "view"), (1L, ts(4), "click"), (1L, ts(5), "purchase")))))
+      .sink.as[(Long, Seq[java.sql.Timestamp])].collect().toSet
     assert(got == Set((1L, Seq(ts(3), ts(4), ts(5)))))
   }
 

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import graft.streaming.StreamRun
+
 /** Cross-PROCESS crash fuzz for the docstore STREAMING commit path (r16
   * verdict task 5 — the LeaseFuzzSpec technique pointed at the epoch
   * machinery that had only ever been tested in-process). Each seed:
@@ -144,12 +146,8 @@ class StreamCrashFuzzSpec extends SparkSpec {
 
       // offset/listing consistency: a fresh change-stream over the target
       // must surface the same exactly-once set from its live listing
-      val q = spark.readStream.format("docstore")
-        .schema("doc_id BIGINT, text STRING").load(tgtDir)
-        .writeStream.format("memory").queryName(s"scf_reread_$k")
-        .outputMode("append").start()
-      q.processAllAvailable(); q.stop()
-      val reread = spark.table(s"scf_reread_$k").select("doc_id")
+      val reread = StreamRun.memory(spark.readStream.format("docstore")
+        .schema("doc_id BIGINT, text STRING").load(tgtDir), "append").sink.select("doc_id")
         .collect().map(_.getLong(0))
       assert(reread.length == expected.size && reread.toSet == expected,
         s"seed $seed: change-stream reread diverged (${reread.length} rows)")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.StreamingAnalytics
+import graft.streaming.{StreamRun, StreamingAnalytics}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.sql.Timestamp
 
@@ -25,12 +25,7 @@ class StreamingDedupSpec extends SparkSpec {
 
     val out = StreamingAnalytics.dedupStream(
       mem.toDF().toDF("doc_id", "ts", "text"), "ts", "text", "30 minutes")
-    val q = out.writeStream.format("memory").queryName("dedup_stream")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-
-    val got = spark.table("dedup_stream").select("doc_id").as[Long].collect().toSet
+    val got = StreamRun.memory(out, "append").sink.select("doc_id").as[Long].collect().toSet
     assert(got == Set(1L, 2L, 4L)) // first copy of each distinct text
     assert(got.size == rows.map(_._3).distinct.size)
   }
@@ -79,11 +74,7 @@ class StreamingDedupSpec extends SparkSpec {
 
     val out = graft.streaming.StreamingAnalytics.cleanCorpusStream(
       mem.toDF().toDF("doc_id", "ts", "text"), "ts", "30 minutes")
-    val q = out.writeStream.format("memory").queryName("clean_stream")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("clean_stream")
+    val got = StreamRun.memory(out, "append").sink
       .select("doc_id", "quality").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
 
@@ -107,12 +98,7 @@ class StreamingDedupSpec extends SparkSpec {
 
     val out = StreamingAnalytics.exactDupStream(
       mem.toDF().toDF("doc_id", "text"), base)
-    val q = out.writeStream.format("memory").queryName("exact_stream")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-
-    val got = spark.table("exact_stream")
+    val got = StreamRun.memory(out, "append").sink
       .select("doc_id", "status", "match_id").collect()
       .map(r => r.getLong(0) -> ((r.getString(1), Option(r.get(2))))).toMap
     assert(got(10L) == (("exact_dup", Some(1L))))
@@ -138,9 +124,7 @@ class StreamingDedupSpec extends SparkSpec {
       out => results += out.collect()
         .map(r => r.getLong(0) -> ((r.getString(1), Option(r.get(2)).map(_.asInstanceOf[Long])))).toMap
     }
-    mem.addData(b1); q.processAllAvailable()
-    mem.addData(b2); q.processAllAvailable()
-    q.stop()
+    StreamRun(q, StreamRun.chunks(mem, Seq(b1, b2)))
 
     val nonEmpty = results.filter(_.nonEmpty)
     assert(nonEmpty.length == 2)

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.streaming.StreamingAnalytics
+import graft.streaming.{StreamRun, StreamingAnalytics}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** End-to-end streaming ingest pipe (change-stream → clean gates →
@@ -61,10 +61,7 @@ class StreamingIngestSpec extends SparkSpec {
     val mem = MemoryStream[(Long, String)]
     val q = StreamingAnalytics.streamingIngest(
       mem.toDF().toDF("doc_id", "text"), dir, n = 5, threshold = 0.5, maxDf = 100)
-    try batches.foreach { b =>
-      mem.addData(b)
-      q.processAllAvailable()
-    } finally q.stop()
+    StreamRun(q, StreamRun.chunks(mem, batches))
     spark.read.format("docstore").load(dir)
       .select("doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -99,9 +96,7 @@ class StreamingIngestSpec extends SparkSpec {
     val mem = MemoryStream[(Long, String)]
     val q = StreamingAnalytics.streamingIngest(
       mem.toDF().toDF("doc_id", "text"), dir, n = 5, threshold = 0.5, maxDf = 100)
-    try Seq(delta.slice(0, 2), delta.slice(2, 5), delta.slice(5, 7)).foreach { b =>
-      mem.addData(b); q.processAllAvailable()
-    } finally q.stop()
+    StreamRun(q, StreamRun.chunks(mem, Seq(delta.slice(0, 2), delta.slice(2, 5), delta.slice(5, 7))))
     def readStore() = spark.read.format("docstore").load(dir)
       .select("doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -135,15 +130,10 @@ class StreamingIngestSpec extends SparkSpec {
       .schema("doc_id BIGINT, text STRING").load(src)
     val q = StreamingAnalytics.streamingIngest(stream, dir,
       n = 5, threshold = 0.5, maxDf = 100)
-    try {
-      q.processAllAvailable()
-      delta.slice(2, 5).toDF("doc_id", "text").coalesce(1)
+    StreamRun(q, Seq(delta.slice(2, 5), delta.slice(5, 7)).map { d => () =>
+      d.toDF("doc_id", "text").coalesce(1)
         .write.format("docstore").mode("append").save(src)
-      q.processAllAvailable()
-      delta.slice(5, 7).toDF("doc_id", "text").coalesce(1)
-        .write.format("docstore").mode("append").save(src)
-      q.processAllAvailable()
-    } finally q.stop()
+    })
 
     val got = spark.read.format("docstore").load(dir)
       .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -219,8 +209,7 @@ class StreamingIngestSpec extends SparkSpec {
       spark.readStream.format("docstore").schema("doc_id BIGINT, text STRING").load(src),
       dir, n = 5, threshold = 0.5, maxDf = 100, checkpointDir = Some(ckpt))
 
-    val q1 = start()
-    try q1.processAllAvailable() finally q1.stop() // batch 0 fully committed
+    StreamRun(start()) // batch 0 fully committed
     // simulate the crash: the sink write happened (store already holds
     // 101), but the engine never recorded the batch as committed
     val commits = new java.io.File(s"$ckpt/commits").listFiles()
@@ -234,8 +223,7 @@ class StreamingIngestSpec extends SparkSpec {
 
     delta.slice(3, 7).toDF("doc_id", "text").coalesce(1)
       .write.format("docstore").mode("append").save(src)
-    val q2 = start() // restart: replays batch 0 first, then the new data
-    try q2.processAllAvailable() finally q2.stop()
+    StreamRun(start()) // restart: replays batch 0 first, then the new data
 
     val got = spark.read.format("docstore").load(dir)
       .select("doc_id", "text").collect()
@@ -257,10 +245,7 @@ class StreamingIngestSpec extends SparkSpec {
     val q = StreamingAnalytics.streamingIngest(
       mem.toDF().toDF("doc_id", "text"), dir, n = 5, threshold = 0.5,
       maxDf = 100, indexDir = Some(idx), indexCompactEvery = compactEvery)
-    try batches.foreach { b =>
-      mem.addData(b)
-      q.processAllAvailable()
-    } finally q.stop()
+    StreamRun(q, StreamRun.chunks(mem, batches))
     (spark.read.format("docstore").load(dir)
       .select("doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap, idx)
@@ -326,8 +311,7 @@ class StreamingIngestSpec extends SparkSpec {
     // window A: crash AFTER the index segment committed but before the
     // engine's offset commit — the replay classifies every doc as an
     // exact dup of its own store copy and must be a full no-op
-    val q1 = start()
-    try q1.processAllAvailable() finally q1.stop()
+    StreamRun(start())
     dropLastEngineCommit()
 
     // window B on the NEXT batch: crash after the upsert but BEFORE the
@@ -336,8 +320,7 @@ class StreamingIngestSpec extends SparkSpec {
     // commits the segment first-time
     delta.slice(3, 7).toDF("doc_id", "text").coalesce(1)
       .write.format("docstore").mode("append").save(src)
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
+    StreamRun(start())
     dropLastEngineCommit()
     val markers = new java.io.File(idx).listFiles()
       .filter(_.getName.matches("_seg_b\\d+\\.json"))
@@ -347,8 +330,7 @@ class StreamingIngestSpec extends SparkSpec {
     val mcrc = new java.io.File(idx, s".${markers.last.getName}.crc")
     if (mcrc.exists()) assert(mcrc.delete())
 
-    val q3 = start() // replays the last batch through both windows
-    try q3.processAllAvailable() finally q3.stop()
+    StreamRun(start()) // replays the last batch through both windows
 
     val got = spark.read.format("docstore").load(dir)
       .select("doc_id", "text").collect()

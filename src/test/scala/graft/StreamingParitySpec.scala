@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.StreamingAnalytics
+import graft.streaming.{StreamRun, StreamingAnalytics}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
@@ -24,11 +24,7 @@ class StreamingParitySpec extends SparkSpec {
     mem.addData(events.map(e => (e.ts, e.key)))
     val sdf = StreamingAnalytics.tumblingCounts(
       mem.toDF().toDF("ts", "key"), "ts", "key", "15 minutes")
-    val q = sdf.writeStream.format("memory").queryName("tumbling_test")
-      .outputMode("complete").start()
-    q.processAllAvailable()
-    q.stop()
-    val streaming = spark.table("tumbling_test")
+    val streaming = StreamRun.memory(sdf, "complete").sink
       .select("window_start", "key", "count")
       .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
 
@@ -46,11 +42,7 @@ class StreamingParitySpec extends SparkSpec {
     mem.addData(events.map(e => (e.ts, e.key)))
     val sdf = StreamingAnalytics.slidingCounts(
       mem.toDF().toDF("ts", "key"), "ts", "key", "30 minutes", "15 minutes")
-    val q = sdf.writeStream.format("memory").queryName("sliding_test")
-      .outputMode("complete").start()
-    q.processAllAvailable()
-    q.stop()
-    val streaming = spark.table("sliding_test")
+    val streaming = StreamRun.memory(sdf, "complete").sink
       .select("window_start", "key", "count")
       .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
     val batch = StreamingAnalytics.slidingCounts(
@@ -70,12 +62,8 @@ class StreamingParitySpec extends SparkSpec {
     mem.addData(data.take(25)); // split mid-window: buffers must merge across batches
     val sdf = StreamingAnalytics.heavyHitterStream(
       mem.toDF().toDF("ts", "key"), "ts", "key", k)
-    val q = sdf.writeStream.format("memory").queryName("hh_test")
-      .outputMode("complete").start()
-    q.processAllAvailable()
-    mem.addData(data.drop(25)); q.processAllAvailable()
-    q.stop()
-    val streamed: Map[Timestamp, Set[Long]] = spark.table("hh_test").collect().map { r =>
+    val streamed: Map[Timestamp, Set[Long]] = StreamRun.memory(sdf, "complete",
+      StreamRun.chunks(mem, Seq(data.drop(25)))).sink.collect().map { r =>
       r.getTimestamp(0) -> r.getSeq[org.apache.spark.sql.Row](1).map(_.getLong(0)).toSet
     }.toMap
     // exact per-window truth
@@ -106,14 +94,10 @@ class StreamingParitySpec extends SparkSpec {
     mem.addData(data.take(23)) // split mid-window: sketch buffers must
     val sdf = StreamingAnalytics.kmvDistinctStream( // merge through state
       mem.toDF().toDF("ts", "key"), "ts", "key", k)
-    val q = sdf.writeStream.format("memory").queryName("kmv_test")
-      .outputMode("complete").start()
-    q.processAllAvailable()
-    mem.addData(data.drop(23)); q.processAllAvailable()
-    q.stop()
+    val sink = StreamRun.memory(sdf, "complete", StreamRun.chunks(mem, Seq(data.drop(23)))).sink
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getTimestamp(0), r.getDouble(1), r.getSeq[Long](2))).toSet
-    val streamed = rows(spark.table("kmv_test"))
+    val streamed = rows(sink)
     val batch = rows(StreamingAnalytics.kmvDistinctStream(
       data.toDF("ts", "key"), "ts", "key", k))
     // EXACT equality, sketch contents included — the KMV buffer is a pure
@@ -141,14 +125,10 @@ class StreamingParitySpec extends SparkSpec {
     mem.addData(docsSeq.take(3)) // split mid-source: web spans both batches
     val sdf = StreamingAnalytics.incrementalReportStream(
       mem.toDF().toDF("text", "source"))
-    val q = sdf.writeStream.format("memory").queryName("inc_report_stream")
-      .outputMode("complete").start()
-    q.processAllAvailable()
-    mem.addData(docsSeq.drop(3)); q.processAllAvailable()
-    q.stop()
+    val sink = StreamRun.memory(sdf, "complete", StreamRun.chunks(mem, Seq(docsSeq.drop(3)))).sink
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSet
-    val streamed = rows(spark.table("inc_report_stream"))
+    val streamed = rows(sink)
     val batch = rows(QueriesExt.mergeReport(QueriesExt.reportPartials(
       docsSeq.toDF("text", "source"), lit(0L))))
     // EXACT equality — counters are additive, the KMV buffer is a pure
@@ -169,11 +149,7 @@ class StreamingParitySpec extends SparkSpec {
     mem.addData(lines)
     val sdf = StreamingAnalytics.parseStream(mem.toDF().toDF("value"))
       .select("event", "ip", "user")
-    val q = sdf.writeStream.format("memory").queryName("parse_test")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    val streaming = spark.table("parse_test").collect()
+    val streaming = StreamRun.memory(sdf, "append").sink.collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
     val batch = StreamingAnalytics.parseStream(lines.toDF("value"))
       .select("event", "ip", "user").collect()
@@ -199,11 +175,7 @@ class StreamingParitySpec extends SparkSpec {
     rMem.addData(clicks)
     val sdf = joined(lMem.toDF().toDF("err_id", "err_ts", "err_key"),
       rMem.toDF().toDF("click_id", "click_ts", "click_key"))
-    val q = sdf.writeStream.format("memory").queryName("ssjoin_test")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    val streaming = spark.table("ssjoin_test").collect()
+    val streaming = StreamRun.memory(sdf, "append").sink.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
     val batch = joined(errs.toDF("err_id", "err_ts", "err_key"),
@@ -234,11 +206,7 @@ class StreamingParitySpec extends SparkSpec {
       .select(col("doc_id"),
         graft.functions.NativeExpressions.repetitionStats(col("text")).as("s"))
       .select(col("doc_id"), col("s.n_tok"), col("s.n_distinct"), col("s.top_bigram"))
-    val q = stats(mem.toDF()).writeStream.format("memory")
-      .queryName("rep_stats_test").outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    val streaming = spark.table("rep_stats_test").collect()
+    val streaming = StreamRun.memory(stats(mem.toDF()), "append").sink.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3))).toSet
     val batch = stats(docs.toDF("doc_id", "text")).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3))).toSet
@@ -260,17 +228,14 @@ class StreamingParitySpec extends SparkSpec {
     def run(df: org.apache.spark.sql.DataFrame) =
       StreamingAnalytics.psiDriftStream(df.toDF("ts", "value"), "ts", "value",
         baseline, "1 hour")
-    val q = run(mem.toDF()).writeStream.format("memory")
-      .queryName("psi_test").outputMode("complete").start()
-    q.processAllAvailable()
-    q.stop()
+    val sink = StreamRun.memory(run(mem.toDF()), "complete").sink
     def key(r: org.apache.spark.sql.Row) =
       (r.getTimestamp(0), r.getInt(1), r.getLong(2), r.getDouble(3), r.getDouble(4))
-    val streaming = spark.table("psi_test").collect().map(key).toSet
+    val streaming = sink.collect().map(key).toSet
     val batch = run(vals.toDF("ts", "value")).collect().map(key).toSet
     assert(streaming == batch && streaming.size == 20, "2 windows x 10 bins, identical numbers")
     // the 11:00 window is dominated by high values -> positive drift vs the low-skewed baseline
-    val w11 = spark.table("psi_test").collect()
+    val w11 = sink.collect()
       .filter(_.getTimestamp(0) == Timestamp.valueOf("2024-01-01 11:00:00"))
     assert(w11.nonEmpty && w11.head.getDouble(4) > 0.0)
   }
@@ -279,17 +244,13 @@ class StreamingParitySpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[(Long, Long, Timestamp, String)]
     val sdf = StreamingAnalytics.scd2Stream(mem.toDS())
-    val q = sdf.writeStream.format("memory").queryName("scd2_nonmono")
-      .outputMode("append").start()
     // successor run 'browse' has rows by event_id at ts 10:05 then 10:01 —
     // batch j12 closes 'login' at the successor's MIN (10:01), so the
     // stream must defer emission past the first successor row (which would
     // report 10:05) until the successor's in-batch min is settled
-    mem.addData(Seq((1L, 1L, t(0), "login"),
-      (1L, 2L, t(5), "browse"), (1L, 3L, t(1), "browse")))
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("scd2_nonmono").collect()
+    val rows = StreamRun.memory(sdf, "append", StreamRun.chunks(mem, Seq(Seq(
+      (1L, 1L, t(0), "login"), (1L, 2L, t(5), "browse"), (1L, 3L, t(1), "browse")))))
+      .sink.collect()
     assert(rows.length == 1)
     val r = rows(0)
     assert(r.getString(2) == "login" && r.getTimestamp(3) == t(0) &&
@@ -305,13 +266,8 @@ class StreamingParitySpec extends SparkSpec {
       .sortBy(_._2)
     val mem = MemoryStream[(Long, Long, Timestamp, String)]
     val sdf = StreamingAnalytics.scd2Stream(mem.toDS())
-    val q = sdf.writeStream.format("memory").queryName("scd2_test")
-      .outputMode("append").start()
-    rows.grouped((rows.length + 2) / 3).foreach { chunk =>
-      mem.addData(chunk.toSeq); q.processAllAvailable()
-    }
-    q.stop()
-    val streaming = spark.table("scd2_test").collect()
+    val streaming = StreamRun.memory(sdf, "append",
+      StreamRun.chunks(mem, rows.grouped((rows.length + 2) / 3).map(_.toSeq).toSeq)).sink.collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getString(2), r.getTimestamp(3), r.getTimestamp(4), r.getLong(5))).toMap
 
@@ -365,15 +321,11 @@ class StreamingParitySpec extends SparkSpec {
       (6L, 15L, ts(6, 8), "click"), (6L, 16L, ts(6, 12), "purchase"))
     val mem = MemoryStream[(Long, Long, Timestamp, String)]
     val sdf = StreamingAnalytics.attributionStream(mem.toDS(), win)
-    val q = sdf.writeStream.format("memory").queryName("attr_test")
-      .outputMode("append").start()
     // chunk 1 ends after user 5's click, so that click sits in STATE when
     // user 5's earlier-event-time purchase arrives in chunk 2
     val split = data.indexWhere(_._2 == 12L) + 1
-    mem.addData(data.take(split)); q.processAllAvailable()
-    mem.addData(data.drop(split)); q.processAllAvailable()
-    q.stop()
-    val streaming = spark.table("attr_test").collect()
+    val streaming = StreamRun.memory(sdf, "append",
+      StreamRun.chunks(mem, Seq(data.take(split), data.drop(split)))).sink.collect()
       .map(r => r.getLong(1) -> (Option(r.get(3)).map(_.asInstanceOf[Long]), r.getBoolean(4)))
       .toMap
     assert(streaming.keySet == Set(2L, 3L, 6L, 8L, 9L, 10L, 13L, 16L), "one row per purchase")
@@ -415,13 +367,9 @@ class StreamingParitySpec extends SparkSpec {
       (2L, 5L, 50.0), (1L, 6L, 40.0), (2L, 7L, 75.0), (1L, 8L, 8.0))
     val mem = MemoryStream[(Long, Long, Double)]
     val sdf = StreamingAnalytics.ewmaStream(mem.toDS(), alpha)
-    val q = sdf.writeStream.format("memory").queryName("ewma_test")
-      .outputMode("append").start()
     // split mid-key: state must carry each key's ewma across batches
-    mem.addData(data.take(3)); q.processAllAvailable()
-    mem.addData(data.drop(3)); q.processAllAvailable()
-    q.stop()
-    val streaming = spark.table("ewma_test").collect()
+    val streaming = StreamRun.memory(sdf, "append",
+      StreamRun.chunks(mem, Seq(data.take(3), data.drop(3)))).sink.collect()
       .map(r => r.getLong(1) -> (r.getDouble(3), r.getLong(4))).toMap
 
     // reference: plain Scala recursive fold per key in event_id order

@@ -1103,6 +1103,34 @@ object PlanCheck {
       "single entropy kernel evaluation" ->
         (p => "graft_char_entropy_stats".r.findAllIn(p).size == 1))
 
+    // The SSH dashboard panels over a parsed log (not registry queries).
+    // The per-IP summary's distinct counts are set sizes, so it is one
+    // aggregate around one exchange on ip; a countDistinct there would
+    // bring back RewriteDistinctAggregates' Expand, a second exchange and
+    // a SortAggregate. The chart series sort in one partition: a range
+    // exchange would add a sampling job per panel under AQE.
+    val sshLog = java.nio.file.Files.createTempFile("plancheck_ssh", ".log")
+    java.nio.file.Files.write(sshLog, java.util.Arrays.asList(
+      "Dec 10 07:00:01 h sshd[1]: Failed password for root from 10.0.0.1 port 1111 ssh2",
+      "Dec 10 08:00:02 h sshd[2]: Invalid user admin from 10.0.0.1",
+      "Dec 11 09:00:03 h sshd[3]: Accepted password for alice from 10.0.0.2 port 3333 ssh2"))
+    val sshParsed = graft.ingest.LogParser.parse(spark.read.text(sshLog.toString))
+    def sshPlan(panel: org.apache.spark.sql.DataFrame): String = panel.queryExecution.executedPlan.toString
+    checkAux("ssh_dashboard[ip_summary]")(sshPlan(graft.analytics.SshAnalytics.ipEventSummary(sshParsed)))(
+      "no distinct-aggregate Expand" -> (p => !p.contains("Expand")),
+      "no SortAggregate" -> (p => !p.contains("SortAggregate")),
+      "exactly one hash exchange on ip" -> (p => "hashpartitioning\\(ip".r.findAllIn(p).size == 1))
+    Seq(
+      "access_by_hour" -> graft.analytics.SshAnalytics.accessByHour(sshParsed, "failed_password"),
+      "access_by_day" -> graft.analytics.SshAnalytics.accessByDay(sshParsed, "invalid_user"),
+      "suspicious_daily" -> graft.analytics.SshAnalytics.suspiciousVsNormalDaily(sshParsed),
+      "histogram" -> graft.analytics.SshAnalytics.histogram(sshParsed, org.apache.spark.sql.functions.col("port"), 1000.0)
+    ).foreach { case (panel, df) =>
+      checkAux(s"ssh_dashboard[$panel]")(sshPlan(df))(
+        "no range exchange (series sorted in one partition)" -> (p => !p.contains("rangepartitioning")))
+    }
+    java.nio.file.Files.delete(sshLog)
+
     gate.finish(spark)
   }
 }

@@ -91,6 +91,17 @@ object StreamScale {
     val progress = (progress1 ++ StreamRun(startIngest())).filter(_.numInputRows > 0)
     val streamSec = (System.nanoTime() - t0) / 1e9
 
+    // AQE as a foreachBatch body sees it: the batch frame's session is the
+    // one the stream runs on, which is what ingestBatch plans with inside
+    // a trigger (the batch twin below plans with `spark`). A probe query
+    // over the same source reads it; its body runs no job.
+    val batchAqe = new java.util.concurrent.atomic.AtomicReference("unread")
+    StreamRun(spark.readStream.schema(docs.schema).parquet(streamIn.toString)
+      .writeStream.foreachBatch {
+        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+          batchAqe.set(batch.sparkSession.conf.get("spark.sql.adaptive.enabled"))
+      }.start())
+
     // ---- batch twin: same chunks, same order, the shared ingestBatch ----
     val storeB = seedStore()
     val twinSecs = (0 until nBatches).map { b =>
@@ -124,7 +135,7 @@ object StreamScale {
     println(f"STREAMSCALE docs=${docs.count()} batches=$nBatches " +
       f"restartAfter=${nBatches / 2} " +
       f"stream=${streamSec}%.1f s (triggers ${fmt(triggerSecs)}) " +
-      f"twin=${twinSecs.sum}%.1f s (batches ${fmt(twinSecs)}) " +
+      f"twin=${twinSecs.sum}%.1f s (batches ${fmt(twinSecs)}) aqeInBatch=${batchAqe.get} " +
       f"admitted=$nA parity=${if (onlyA == 0 && onlyB == 0) "OK" else s"DIVERGED($onlyA/$onlyB)"} " +
       f"storeBytes=${dirBytes(storeA)} checkpointBytes=${dirBytes(ckpt)}")
     spark.stop()

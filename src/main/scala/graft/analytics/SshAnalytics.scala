@@ -11,9 +11,17 @@ import graft.ingest.LogParser
   * separate full-frame passes (six `df.groupby('ip')` calls at
   * stats_dashboard.py:103-117 plus two filtered re-scans). Here it is ONE
   * `groupBy("ip")` pass — conditional aggregates replace the pivot-then-graft
-  * pattern — so at cluster scale the whole summary costs a single shuffle on
-  * `ip`. Hot attacker IPs skew that shuffle at 100 TB; AQE skew-join/salting
-  * is the mitigation (partial aggregation already cuts the map-side volume).
+  * pattern, and set sizes replace `countDistinct` — so the whole summary
+  * plans as one partial/final ObjectHashAggregate pair around a single
+  * hash exchange on `ip` (then the range sort of its unbounded output).
+  * Hot attacker IPs skew that exchange at 100 TB; AQE skew handling or
+  * salting is the mitigation (partial aggregation already cuts the
+  * map-side volume).
+  *
+  * The chart panels (hour, day, daily pivot, histogram) end in a series of
+  * at most 24 hours, 366 days or one row per bucket, which the dashboard
+  * collects anyway, so they sort in one partition ([[sortedSeries]])
+  * instead of paying a range exchange and its sampling job.
   */
 object SshAnalytics {
 
@@ -46,7 +54,20 @@ object SshAnalytics {
   // half cases)
   private def rnd(c: Column, d: Int): Column = graft.functions.Rounding.roundAt(c, d)
 
-  /** Global dashboard metrics (stats_dashboard.py:35-42) in one pass. */
+  /** A chart series ordered by `by`, sorted inside one partition. The
+    * series is an aggregate keyed by hour, date or bucket that the
+    * dashboard collects to the driver whole, so one task can sort it;
+    * `orderBy` would add a range exchange and, under AQE, a sampling job.
+    */
+  private def sortedSeries(series: DataFrame, by: String): DataFrame =
+    series.coalesce(1).sortWithinPartitions(by)
+
+  /** Global dashboard metrics (stats_dashboard.py:35-42) in one pass. The
+    * three `countDistinct`s keep Spark's distinct-aggregate `Expand`,
+    * unlike [[ipEventSummary]]: a global aggregate has one group, so a
+    * `collect_set` would hold every user or IP of the log in a single
+    * buffer, while the `Expand` spreads the distinct values over a shuffle.
+    */
   def globalMetrics(raw: DataFrame): DataFrame =
     prepare(raw).agg(
       count(lit(1)).as("total_records"),
@@ -62,14 +83,14 @@ object SshAnalytics {
     prepare(raw).filter(col("event") === eventFilter)
       .groupBy(hour(col("datetime")).as("hour")).count()
       .withColumn("hour_label", lpad(col("hour").cast("string"), 2, "0"))
-      .orderBy("hour")
+      .transform(sortedSeries(_, "hour"))
 
   /** Per-event access evolution grouped by day (stats_dashboard.py:65-69). */
   def accessByDay(raw: DataFrame, eventFilter: String): DataFrame =
     prepare(raw).filter(col("event") === eventFilter)
       .groupBy(to_date(col("datetime")).as("date")).count()
       .withColumn("date_label", date_format(col("date"), "MMM dd"))
-      .orderBy("date")
+      .transform(sortedSeries(_, "date"))
 
   /** Suspicious-vs-Normal daily pivot (stats_dashboard.py:82-86). */
   def suspiciousVsNormalDaily(raw: DataFrame): DataFrame =
@@ -77,13 +98,23 @@ object SshAnalytics {
       .groupBy(to_date(col("datetime")).as("date"))
       .pivot("event_type", Seq("Suspicious", "Normal")).count()
       .na.fill(0L, Seq("Suspicious", "Normal"))
-      .orderBy("date")
+      .transform(sortedSeries(_, "date"))
 
   /** The per-IP summary (stats_dashboard.py:103-144) in ONE aggregation pass.
     * Produces: the 11 pivoted event counts, total_events,
     * distinct_source_ports, source_ports_list, first_seen, last_seen,
     * failed_logins, failed_users, tried_root_admin, event_diversity,
     * suspicious_score, attacker/bot/authorized percentages.
+    *
+    * The two distinct counts are set sizes, not `countDistinct`s. Mixing
+    * distinct with plain aggregates makes Spark's RewriteDistinctAggregates
+    * plan an `Expand` of every row, an aggregate keyed on (ip, port, event),
+    * and a second exchange and sort-based aggregate to fold it back per ip.
+    * `distinct_source_ports` is instead the size of the port set the
+    * summary already collects: the int→string cast is injective and both
+    * forms skip nulls, so the count is the same. `event_diversity` is the
+    * size of a per-ip event set, bounded by the 11 tags. The plan is one
+    * ObjectHashAggregate pair around a single hash exchange on `ip`.
     */
   def ipEventSummary(raw: DataFrame): DataFrame = {
     // DELIBERATE divergence from the pandas reference: rows with a null ip
@@ -99,17 +130,18 @@ object SshAnalytics {
     val rootAdmin = lower(col("user")).isin("root", "admin")
 
     val pivotCols = eventTags.map(t => cnt(col("event") === t).as(t))
+    val ports = collect_set(col("port").cast("string"))
     val aggs = pivotCols ++ Seq(
       count(lit(1)).as("total_events"),
-      countDistinct(col("port")).as("distinct_source_ports"),
-      sort_array(collect_set(col("port").cast("string"))).as("source_ports_list"),
+      size(ports).cast("bigint").as("distinct_source_ports"),
+      sort_array(ports).as("source_ports_list"),
       min(col("datetime")).as("first_seen"),
       max(col("datetime")).as("last_seen"),
       cnt(susp).as("failed_logins"),
       // user is non-null here by construction (prepare() na.fill's it)
       sort_array(collect_set(when(susp, col("user")))).as("failed_users"),
       cnt(rootAdmin).as("tried_root_admin"),
-      countDistinct(col("event")).as("event_diversity"))
+      size(collect_set(col("event"))).cast("bigint").as("event_diversity"))
 
     val base = df.groupBy(col("ip")).agg(aggs.head, aggs.tail: _*)
 
@@ -144,7 +176,7 @@ object SshAnalytics {
     * (stats_dashboard.py:163's nbins analog, engine-side).
     */
   def histogram(df: DataFrame, c: Column, width: Double): DataFrame =
-    df.groupBy(floor(c / width).as("bucket")).count().orderBy("bucket")
+    sortedSeries(df.groupBy(floor(c / width).as("bucket")).count(), "bucket")
 
   /** Top-k by count with an "Others" rollup bucket — the reference's
     * draw_pie (stats_dashboard.py:217-224). NOT a global ranking window:

@@ -1,9 +1,11 @@
 package graft
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{GraftListenerBus, SparkSession}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
@@ -21,6 +23,10 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
   * Exactness: the listener bus is asynchronous, so `apply` drains it
   * before returning; every task-end and SQL-execution-end event of the
   * measured jobs has then been delivered, and the readings are final.
+  *
+  * [[codegenCompiles]] is the one reading not scoped by the job tag:
+  * Spark counts compiles JVM-wide, so it is exact only when nothing else
+  * runs in the JVM during the metered block.
   */
 final class Meter(spark: SparkSession) {
   import Meter._
@@ -31,6 +37,7 @@ final class Meter(spark: SparkSession) {
   private val executions = ConcurrentHashMap.newKeySet[Long]()
   private val tasks = new ConcurrentLinkedQueue[TaskRow]()
   @volatile private var lastPlan = ""
+  private val compiles = new AtomicLong
 
   private val listener = new SparkListener {
     override def onJobStart(js: SparkListenerJobStart): Unit =
@@ -61,17 +68,19 @@ final class Meter(spark: SparkSession) {
     * event of those jobs has been delivered.
     */
   def apply[T](body: => T): T = {
+    val compiled0 = compileCount
     sc.addJobTag(tag)
     try body
     finally {
       sc.removeJobTag(tag)
       GraftListenerBus.drain(sc)
+      compiles.addAndGet(compileCount - compiled0)
     }
   }
 
   /** Forget everything measured so far. */
   def reset(): Unit = {
-    stages.clear(); executions.clear(); tasks.clear(); lastPlan = ""
+    stages.clear(); executions.clear(); tasks.clear(); lastPlan = ""; compiles.set(0L)
   }
 
   private def total(f: TaskRow => Long): Long = tasks.asScala.iterator.map(f).sum
@@ -79,6 +88,10 @@ final class Meter(spark: SparkSession) {
   def shuffleWriteBytes: Long = total(_.shuffleWriteBytes)
   def memorySpillBytes: Long = total(_.memorySpillBytes)
   def diskSpillBytes: Long = total(_.diskSpillBytes)
+
+  /** Classes Spark compiled (generated-code cache misses) while metered
+    * blocks ran; JVM-wide, see the class doc. */
+  def codegenCompiles: Long = compiles.get
 
   /** The executed plan of the last measured query that succeeded ("" if none). */
   def plan: String = lastPlan
@@ -107,6 +120,9 @@ final class Meter(spark: SparkSession) {
 }
 
 object Meter {
+  /** Spark's JVM-wide count of generated-code compiles so far. */
+  private def compileCount: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   final case class TaskRow(stageId: Int, shuffleReadBytes: Long, shuffleWriteBytes: Long,
                            memorySpillBytes: Long, diskSpillBytes: Long, durMs: Long)
   final case class Spread(maxOverMedian: Double, maxBytes: Long, tasks: Int,

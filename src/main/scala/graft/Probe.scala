@@ -61,7 +61,9 @@ object Probe {
     // the form "the decade-ratio drift is spill, not a superlinear term"
     // need MEASURED spilled bytes, not inference. Only the probed queries'
     // own jobs count (see Meter), and the meter's readings are final the
-    // moment the query returns.
+    // moment the query returns. Its codegen compile count shows a cost the
+    // sampler below sees only as class-path lookups (ZipFile, HashMap
+    // frames): generated classes that missed Spark's compile cache.
     val meter = new Meter(spark)
 
     // untimed warmup — guarded like Bench's warmups: a broken loader (the
@@ -108,7 +110,8 @@ object Probe {
       }
       def gb(b: Long): String = f"${b / 1e9}%.2f GB"
       println(f"PROBE $name: $dt%.2f s  [shuffleWrite ${gb(meter.shuffleWriteBytes)}, " +
-        s"spill mem ${gb(meter.memorySpillBytes)} / disk ${gb(meter.diskSpillBytes)}]")
+        s"spill mem ${gb(meter.memorySpillBytes)} / disk ${gb(meter.diskSpillBytes)}, " +
+        s"codegen compiles ${meter.codegenCompiles}]")
       println(s"===== $name final plan =====\n${meter.plan}")
       if (dt > HotMinS) {
         samples.asScala.toSeq.sortBy(-_._2).take(12).foreach { case (f, c) =>

@@ -84,12 +84,19 @@ object StreamScale {
       spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1).parquet(streamIn.toString),
       storeA, checkpointDir = Some(ckpt))
+    // Each half runs under its own Meter for its codegen compile count:
+    // generated-class compiles are the per-run cost a trigger pays and a
+    // warm batch twin may not, and nothing else runs in this JVM meanwhile.
+    val streamMeter = new Meter(spark)
     val t0 = System.nanoTime()
-    feed(0, nBatches / 2)
-    val progress1 = StreamRun(startIngest())
-    feed(nBatches / 2, nBatches)
-    val progress = (progress1 ++ StreamRun(startIngest())).filter(_.numInputRows > 0)
+    val progress = streamMeter {
+      feed(0, nBatches / 2)
+      val progress1 = StreamRun(startIngest())
+      feed(nBatches / 2, nBatches)
+      (progress1 ++ StreamRun(startIngest())).filter(_.numInputRows > 0)
+    }
     val streamSec = (System.nanoTime() - t0) / 1e9
+    streamMeter.close()
 
     // AQE as a foreachBatch body sees it: the batch frame's session is the
     // one the stream runs on, which is what ingestBatch plans with inside
@@ -104,13 +111,17 @@ object StreamScale {
 
     // ---- batch twin: same chunks, same order, the shared ingestBatch ----
     val storeB = seedStore()
-    val twinSecs = (0 until nBatches).map { b =>
-      val tb = System.nanoTime()
-      graft.streaming.StreamingAnalytics.ingestBatch(
-        spark.read.parquet(streamIn.resolve(f"chunk-$b%03d.parquet").toString),
-        storeB, n = 5, threshold = 0.5, maxDf = 100)
-      (System.nanoTime() - tb) / 1e9
+    val twinMeter = new Meter(spark)
+    val twinSecs = twinMeter {
+      (0 until nBatches).map { b =>
+        val tb = System.nanoTime()
+        graft.streaming.StreamingAnalytics.ingestBatch(
+          spark.read.parquet(streamIn.resolve(f"chunk-$b%03d.parquet").toString),
+          storeB, n = 5, threshold = 0.5, maxDf = 100)
+        (System.nanoTime() - tb) / 1e9
+      }
     }
+    twinMeter.close()
 
     // ---- parity ----
     def storeDocs(p: String) = spark.read.format("docstore").load(p)
@@ -134,8 +145,9 @@ object StreamScale {
     def fmt(xs: Seq[Double]) = xs.map(x => f"$x%.1f").mkString("[", ", ", "]")
     println(f"STREAMSCALE docs=${docs.count()} batches=$nBatches " +
       f"restartAfter=${nBatches / 2} " +
-      f"stream=${streamSec}%.1f s (triggers ${fmt(triggerSecs)}) " +
-      f"twin=${twinSecs.sum}%.1f s (batches ${fmt(twinSecs)}) aqeInBatch=${batchAqe.get} " +
+      f"stream=${streamSec}%.1f s (triggers ${fmt(triggerSecs)}, ${streamMeter.codegenCompiles} compiles) " +
+      f"twin=${twinSecs.sum}%.1f s (batches ${fmt(twinSecs)}, ${twinMeter.codegenCompiles} compiles) " +
+      f"aqeInBatch=${batchAqe.get} " +
       f"admitted=$nA parity=${if (onlyA == 0 && onlyB == 0) "OK" else s"DIVERGED($onlyA/$onlyB)"} " +
       f"storeBytes=${dirBytes(storeA)} checkpointBytes=${dirBytes(ckpt)}")
     spark.stop()

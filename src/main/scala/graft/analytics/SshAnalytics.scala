@@ -63,20 +63,36 @@ object SshAnalytics {
     series.coalesce(1).sortWithinPartitions(by)
 
   /** Global dashboard metrics (stats_dashboard.py:35-42) in one pass. The
-    * three `countDistinct`s keep Spark's distinct-aggregate `Expand`,
-    * unlike [[ipEventSummary]]: a global aggregate has one group, so a
+    * three distinct counts go through an `Expand`, unlike
+    * [[ipEventSummary]]: a global aggregate has one group, so a
     * `collect_set` would hold every user or IP of the log in a single
     * buffer, while the `Expand` spreads the distinct values over a shuffle.
+    * The `Expand` comes from grouping sets, one row per distinct user, IP
+    * or event plus one grand-total row, counted by a global aggregate on
+    * top. Three `countDistinct`s would plan the same shape, but Spark's
+    * rewrite orders their `Expand` projections by the hash of fresh
+    * expression ids, so each refresh planned a different order and
+    * compiled new classes for it. Grouping sets keep the written order.
     */
-  def globalMetrics(raw: DataFrame): DataFrame =
-    prepare(raw).agg(
-      count(lit(1)).as("total_records"),
-      countDistinct(col("user")).as("unique_users"),
-      countDistinct(col("ip")).as("unique_ips"),
-      countDistinct(col("event")).as("distinct_events"),
-      cnt(col("event").isin(suspiciousEvents: _*)).as("failed_events"),
-      rnd(cnt(col("event").isin(suspiciousEvents: _*)) * 100.0 / count(lit(1)), 2)
-        .as("failed_rate_pct"))
+  def globalMetrics(raw: DataFrame): DataFrame = {
+    val perSet = prepare(raw)
+      .groupingSets(Seq(Seq(), Seq(col("user")), Seq(col("ip")), Seq(col("event"))),
+        col("user"), col("ip"), col("event"))
+      .agg(count(lit(1)).as("n"), cnt(col("event").isin(suspiciousEvents: _*)).as("failed"),
+        grouping("user").as("g_user"), grouping("ip").as("g_ip"), grouping("event").as("g_event"))
+    val total = col("g_user") === 1 && col("g_ip") === 1 && col("g_event") === 1
+    // a null ip or event is its own group, and count skips it, as countDistinct does
+    def distinctOf(c: String): Column = count(when(col(s"g_$c") === 0, col(c)))
+    val records = coalesce(sum(when(total, col("n"))), lit(0L))
+    val failed = sum(when(total, col("failed")))
+    perSet.agg(
+      records.as("total_records"),
+      distinctOf("user").as("unique_users"),
+      distinctOf("ip").as("unique_ips"),
+      distinctOf("event").as("distinct_events"),
+      failed.as("failed_events"),
+      rnd(failed * 100.0 / records, 2).as("failed_rate_pct"))
+  }
 
   /** Per-event access evolution grouped by hour (stats_dashboard.py:60-63). */
   def accessByHour(raw: DataFrame, eventFilter: String): DataFrame =

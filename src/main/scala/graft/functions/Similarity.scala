@@ -265,6 +265,9 @@ object Similarity {
     // probe touches roughly one partition instead of scanning the full
     // train set just to learn the cap is a no-op. Only a corpus that
     // actually exceeds the cap pays the exact count that sizes m.
+    // `take` of zero-column rows, not `limit(k).count()`: a counted limit
+    // plans a codegen'd LocalLimit whose counter Spark names from a
+    // JVM-global sequence, so every run compiled a fresh class.
     // clamp: maxTrainRows is a caller-supplied Long, and (cap+1).toInt
     // silently overflows negative for cap >= Int.MaxValue (limit() would
     // throw AnalysisException at runtime). At that magnitude the limit
@@ -272,7 +275,7 @@ object Similarity {
     // count instead of the probe — the cap stays honest for any Long.
     val over =
       if (maxTrainRows >= Int.MaxValue.toLong - 1) corpus.count() > maxTrainRows
-      else corpus.limit((maxTrainRows + 1).toInt).count() > maxTrainRows
+      else corpus.select().take((maxTrainRows + 1).toInt).length > maxTrainRows
     if (!over) corpus
     else {
       val n = corpus.count()

@@ -613,10 +613,13 @@ object StreamingAnalytics {
           .incrementalStatusIndexed(idx, kept, "doc_id", "text", threshold, maxDf)
           .filter(col("status") === "new").select("doc_id"),
         "doc_id").persist()
-      val clash = idx.stats
+      // isEmpty, not limit(1).count(): a counted limit compiles a fresh
+      // class on every trigger (Spark names its counter from a JVM-global
+      // sequence), while isEmpty's CollectLimit generates no limit code.
+      val noClash = idx.stats
         .join(broadcast(fresh.select(col("doc_id").as("base_id"))), "base_id")
-        .limit(1).count()
-      require(clash == 0L,
+        .isEmpty
+      require(noClash,
         "ingestBatchIndexed: a batch doc's id already exists in the shingle " +
           "index with different content — the append-only index cannot track " +
           "an upsert-replace. Revision streams belong in upsertStream; " +

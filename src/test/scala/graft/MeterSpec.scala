@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit, sum}
 
 /** [[Meter]]'s contract: readings are final the moment a metered run
   * returns (no sleep, no poll), and only the metered run's own jobs
-  * count.
+  * count. Its codegen compile count is the exception: JVM-wide, exact
+  * while nothing else runs.
   */
 class MeterSpec extends SparkSpec {
   test("a metered shuffle query's bytes and plan are final when it returns; unmetered jobs don't count") {
@@ -27,6 +28,22 @@ class MeterSpec extends SparkSpec {
 
       meter.reset()
       assert(meter.shuffleReadBytes == 0L && meter.plan.isEmpty)
+    } finally meter.close()
+  }
+
+  test("a metered query with a fresh literal compiles a class; the same query again compiles none") {
+    // a long literal is inlined into the generated source, so a value no
+    // earlier run used makes a class body Spark's cache has never seen
+    val fresh = System.nanoTime() % 1000000007L
+    def query = Bench.run(spark.range(0, 1000, 1, 2).select((col("id") * lit(fresh)).as("x")).agg(sum("x")))
+    val meter = new Meter(spark)
+    try {
+      meter(query)
+      assert(meter.codegenCompiles >= 1, "the fresh query compiled no class")
+      meter.reset()
+      assert(meter.codegenCompiles == 0L)
+      meter(query)
+      assert(meter.codegenCompiles == 0L, s"the same query compiled ${meter.codegenCompiles} classes again")
     } finally meter.close()
   }
 }

@@ -129,6 +129,27 @@ class SshAnalyticsSpec extends SparkSpec {
     assert(got(Some("10.0.0.2")) == ((0L, 1L))) // only null ports; null event skipped
   }
 
+  test("globalMetrics: grouping-set counts equal countDistinct, on the frame and on no rows") {
+    def reference(raw: org.apache.spark.sql.DataFrame) = {
+      val failed = sum(when(col("event").isin(LogParser.suspiciousEvents: _*), 1L).otherwise(0L))
+      raw.na.fill(Map("user" -> "")).na.drop(Seq("datetime")).agg(
+        count(lit(1)).as("total_records"), countDistinct(col("user")).as("unique_users"),
+        countDistinct(col("ip")).as("unique_ips"), countDistinct(col("event")).as("distinct_events"),
+        failed.as("failed_events"),
+        graft.functions.Rounding.roundAt(failed * 100.0 / count(lit(1)), 2).as("failed_rate_pct"))
+    }
+    for (raw <- Seq(edgy, edgy.filter(lit(false)))) {
+      val got = SshAnalytics.globalMetrics(raw)
+      val want = reference(raw)
+      assert(got.schema.fields.map(f => f.name -> f.dataType).toSeq ==
+        want.schema.fields.map(f => f.name -> f.dataType).toSeq)
+      assert(got.collect().toSeq == want.collect().toSeq)
+    }
+    val m = SshAnalytics.globalMetrics(edgy).head()
+    assert(m.getAs[Long]("unique_ips") == 9L) // 10.0.0.1, 10.0.0.2, 10.1.0.0-6; the null ip skipped
+    assert(m.getAs[Long]("distinct_events") == 6L) // the null event skipped
+  }
+
   test("chart panels return their series in ascending key order") {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
     def key[K](df: org.apache.spark.sql.DataFrame, k: String) = df.collect().toSeq.map(_.getAs[K](k))

@@ -33,6 +33,7 @@ final class Meter(spark: SparkSession) {
 
   private val sc = spark.sparkContext
   private val tag = s"graft-meter-${java.util.UUID.randomUUID()}"
+  private val jobIds = ConcurrentHashMap.newKeySet[Int]()
   private val stages = ConcurrentHashMap.newKeySet[Int]()
   private val executions = ConcurrentHashMap.newKeySet[Long]()
   private val tasks = new ConcurrentLinkedQueue[TaskRow]()
@@ -43,6 +44,7 @@ final class Meter(spark: SparkSession) {
     override def onJobStart(js: SparkListenerJobStart): Unit =
       if (js.properties != null &&
           Option(js.properties.getProperty("spark.job.tags")).exists(_.split(",").contains(tag))) {
+        jobIds.add(js.jobId)
         js.stageIds.foreach(stages.add(_))
         Option(js.properties.getProperty("spark.sql.execution.id")).foreach(id => executions.add(id.toLong))
       }
@@ -80,7 +82,7 @@ final class Meter(spark: SparkSession) {
 
   /** Forget everything measured so far. */
   def reset(): Unit = {
-    stages.clear(); executions.clear(); tasks.clear(); lastPlan = ""; compiles.set(0L)
+    jobIds.clear(); stages.clear(); executions.clear(); tasks.clear(); lastPlan = ""; compiles.set(0L)
   }
 
   private def total(f: TaskRow => Long): Long = tasks.asScala.iterator.map(f).sum
@@ -88,6 +90,10 @@ final class Meter(spark: SparkSession) {
   def shuffleWriteBytes: Long = total(_.shuffleWriteBytes)
   def memorySpillBytes: Long = total(_.memorySpillBytes)
   def diskSpillBytes: Long = total(_.diskSpillBytes)
+
+  /** Spark jobs started by metered blocks (an adaptive query's shuffle
+    * stages each run as their own job). */
+  def jobs: Int = jobIds.size
 
   /** Classes Spark compiled (generated-code cache misses) while metered
     * blocks ran; JVM-wide, see the class doc. */

@@ -41,6 +41,8 @@ object Dedup {
     * That variant shuffles the text bytes (the price of certainty); the
     * hash still leads the key so groups stay balanced and comparisons
     * short-circuit on the 8-byte prefix.
+    *
+    * Jobs and caches: building it runs no job and caches nothing.
     */
   def exact(docs: DataFrame, idCol: String, textCol: String,
             verifyText: Boolean = false): DataFrame = {
@@ -65,30 +67,6 @@ object Dedup {
     }
   }
 
-  /** N-gram Jaccard near-dup pairs via inverted-index self-join.
-    * Returns (doc_a, doc_b, jaccard) for pairs ≥ threshold, doc_a < doc_b.
-    *
-    * The df cap: the ABSOLUTE cap `maxDf` drops shingles appearing in more
-    * than maxDf docs — it bounds the inverted-index bucket size, which is
-    * what keeps the self-join sub-quadratic: a bucket of df docs costs df²
-    * pairs, so the per-shingle join cost is capped at maxDf² regardless of
-    * corpus size. The cap runs as a map-side-aggregated df table +
-    * broadcast LEFT ANTI join of the HOT shingle set (a per-shingle WINDOW
-    * would shuffle and sort the ENTIRE exploded index just to drop the hot
-    * tail); the hot set is small by construction — it IS the boilerplate
-    * tail the cap exists to remove. `maxDfFraction` (optional) RELAXES the
-    * cap to `max(maxDf, fraction·|corpus|)`; use it only when shingles are
-    * so non-discriminative that an absolute cap drops the true-pair signal
-    * — and know the price: a fractional cap's bucket cost grows as
-    * (fraction·N)², reintroducing the quadratic blowup at scale (measured
-    * here: bigram shingles + 0.2·N cap at sf0.1 computed 10.3M candidate
-    * pairs and 15.7 s where 5-gram shingles + absolute cap 100 computed
-    * 1 460 pairs in <1 s — SAME 256-pair truth set). The scale-correct
-    * lever for discriminativeness is a LONGER shingle (n-gram diversity
-    * grows exponentially in n, so df collapses), not a bigger cap. The
-    * corpus size, when used, arrives as a broadcast 1-row cross join,
-    * never a driver collect.
-    */
   /** The jaccard assembly + threshold shared by every exact-verification
     * path ([[ngramJaccardPairs]]'s full pair join and
     * [[minhashLshVerifiedPairs]]'s candidate-restricted join): one
@@ -110,54 +88,146 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
-  /** (doc, sh) — per-doc DISTINCT shingle arrays, the slim pre-explode
-    * form every shingle consumer derives from. Cached by the batch
-    * callers (r17): tokenization (WordShingles over the full text column)
-    * is the heaviest per-row kernel in the family, and each downstream
-    * consumer that re-evaluates the subtree re-tokenizes the corpus —
-    * materializing the arrays once turns every re-evaluation into a
-    * cheap explode of cached rows. Intra-query only (computed from the
-    * inputs on every invocation; Spark spills it if large).
-    */
-  private def shingleArrays(docs: DataFrame, idCol: String, textCol: String,
-                            n: Int): DataFrame =
-    // spread BEFORE the kernel: a one-split corpus file would tokenize —
-    // and feed every cache consumer — on a single core (Guards.spread;
-    // identity when the scan already has cluster-width splits)
-    graft.operators.Guards.spread(docs.select(col(idCol).as("doc"), col(textCol)))
-      .select(col("doc"),
-        array_distinct(TextFunctions.wordShingles(col(textCol), n)).as("sh"))
+  // ---- the shingle-index steps, shared with ShingleIndex -----------------
 
+  /** Content hash of the exact arms. Null text hashes to NULL (not
+    * xxhash64's non-null seed constant), so an equi-join on it never pairs
+    * two null-text docs: a null-text delta doc is 'new', matching SQL
+    * `base.text = delta.text` semantics (the near-dup arm already agrees:
+    * no shingles → no candidates).
+    */
+  private[functions] def th(c: Column): Column = when(c.isNotNull, xxhash64(c))
+
+  /** The slim pre-explode frame every shingle consumer derives from:
+    * (`idAs`, [th,] sh) — the id, the content hash when `hash`, and the
+    * doc's DISTINCT word n-gram shingles as an array. Tokenization
+    * (WordShingles over the full text column) is the heaviest per-row
+    * kernel in the family, so batch callers cache this frame (r17): every
+    * consumer that re-evaluates it then explodes cached rows instead of
+    * re-tokenizing the corpus. The input is spread BEFORE the kernel
+    * (Guards.spread): a one-split corpus file would otherwise tokenize —
+    * and feed every cache consumer — on a single core; identity when the
+    * scan already has cluster-width splits.
+    */
+  private[functions] def shingleSlim(docs: DataFrame, idCol: String, textCol: String,
+                                     n: Int, idAs: String, hash: Boolean): DataFrame = {
+    val text = col(textCol)
+    val cols = col(idAs) +: (if (hash) Seq(th(text).as("th")) else Nil) :+
+      array_distinct(TextFunctions.wordShingles(text, n)).as("sh")
+    graft.operators.Guards.spread(docs.select(col(idCol).as(idAs), text)).select(cols: _*)
+  }
+
+  /** (`id`, shingle) rows of a slim frame: the uncapped inverted index. */
+  private[functions] def shingleRows(slim: DataFrame, id: String): DataFrame =
+    slim.select(col(id), explode(col("sh")).as("shingle"))
+
+  /** (shingle, df) over (id, shingle) rows with one row per doc and shingle. */
+  private[functions] def docFreq(rows: DataFrame): DataFrame =
+    rows.groupBy("shingle").agg(count(lit(1)).as("df"))
+
+  /** The hot set of a (shingle, df) table: shingles in more than `maxDf`
+    * docs. Small by construction — it IS the boilerplate tail the cap
+    * exists to remove.
+    */
+  private[functions] def hotSet(dfTab: DataFrame, maxDf: Long): DataFrame =
+    dfTab.filter(col("df") > maxDf).select("shingle")
+
+  /** The df cap applied to (id, shingle) rows: a map-only broadcast LEFT
+    * ANTI join of the hot set (a per-shingle window would shuffle and sort
+    * the entire exploded index just to drop the hot tail).
+    */
+  private[functions] def dropHot(rows: DataFrame, hot: DataFrame): DataFrame =
+    rows.join(broadcast(hot), Seq("shingle"), "left_anti")
+
+  /** `rows` capped by their own df table. */
+  private def capped(rows: DataFrame, maxDf: Long): DataFrame =
+    dropHot(rows, hotSet(docFreq(rows), maxDf))
+
+  /** Batch callers cache; a per-trigger caller must not. Every `.cache()`
+    * registers a CacheManager entry the caller cannot reach to uncache, so
+    * a stream that cached per trigger would pin one more plan on every
+    * trigger, without end. Uncached, the subtree is re-evaluated per
+    * consumer within the one action — the right trade for micro-batches.
+    */
+  private def cachedUnless(perTrigger: Boolean)(df: DataFrame): DataFrame =
+    if (perTrigger) df else df.cache()
+
+  /** The classification tail of [[incrementalStatus]] and
+    * [[ShingleIndex.incrementalStatusIndexed]]: the exact arm, the capped
+    * jaccard, the best near match (max jaccard, ties to min base id) and
+    * the status. Inputs: `ids` (doc_id), one row per delta doc; `bh`
+    * (base_id, th); `dh` (doc_id, th); `deltaShU` the delta's capped
+    * (doc_id, shingle) rows; `common` (doc_id, base_id, common); and
+    * `baseSizes` (base_id, size_b) covering every candidate base doc. The
+    * callers keep their own hot set and `size_b` derivations. `bc` wraps
+    * every delta-side join input: a broadcast, or the degraded-path guard.
+    * `baseSizes` may be corpus-sized and the candidate set (delta ×
+    * capped matches) is the small side, so the candidates take `bc` and
+    * the sizes join streams the big table map-side.
+    */
+  private[functions] def classify(ids: DataFrame, bh: DataFrame, dh: DataFrame,
+                                  deltaShU: DataFrame, common: DataFrame,
+                                  baseSizes: DataFrame, threshold: Double,
+                                  bc: DataFrame => DataFrame): DataFrame = {
+    val exactM = bh.join(bc(dh), "th")
+      .groupBy("doc_id").agg(min("base_id").as("exact_match"))
+    val deltaSizes = deltaShU.groupBy("doc_id").agg(count(lit(1)).as("size_d"))
+    val rawJ = col("common").cast("double") * 1.0 /
+      (col("size_d") + col("size_b") - col("common"))
+    val best = Window.partitionBy("doc_id").orderBy(desc("j"), col("base_id"))
+    val nearM = baseSizes
+      .join(bc(common.join(bc(deltaSizes), "doc_id")), "base_id")
+      .filter(rawJ >= threshold)
+      .withColumn("j", rawJ)
+      .withColumn("rn", row_number().over(best))
+      .filter(col("rn") === 1)
+      .select(col("doc_id"), col("base_id").as("near_match"),
+        Rounding.round4(col("j")).as("near_jaccard"))
+    ids
+      .join(bc(exactM), Seq("doc_id"), "left")
+      .join(bc(nearM), Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        when(col("exact_match").isNotNull, "exact_dup")
+          .when(col("near_match").isNotNull, "near_dup")
+          .otherwise("new").as("status"),
+        coalesce(col("exact_match"), col("near_match")).as("match_id"),
+        when(col("exact_match").isNull, col("near_jaccard")).as("jaccard"))
+  }
+
+  // ---- entry points ------------------------------------------------------
+
+  /** N-gram Jaccard near-dup pairs via inverted-index self-join.
+    * Returns (doc_a, doc_b, jaccard) for pairs ≥ threshold, doc_a < doc_b.
+    *
+    * The df cap: the ABSOLUTE cap `maxDf` drops shingles appearing in more
+    * than maxDf docs — it bounds the inverted-index bucket size, which is
+    * what keeps the self-join sub-quadratic: a bucket of df docs costs df²
+    * pairs, so the per-shingle join cost is capped at maxDf² regardless of
+    * corpus size. The cap runs as a map-side-aggregated df table +
+    * broadcast LEFT ANTI join of the HOT shingle set. The scale-correct
+    * lever for discriminativeness is a LONGER shingle (n-gram diversity
+    * grows exponentially in n, so df collapses), not a bigger cap.
+    *
+    * Jobs and caches: a batch call (the default) runs ONE job while the
+    * DataFrame is built — the warm-up `count()` of the cached shingle
+    * arrays — and leaves two cache entries (the shingle arrays and the
+    * capped index) for [[graft.GraftSession.clearCaches]]. `perTrigger =
+    * true` (a caller that runs once per streaming trigger) runs no job and
+    * caches nothing.
+    */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         n: Int, threshold: Double, maxDf: Long = 100,
-                        maxDfFraction: Double = 0.0,
-                        cacheIndex: Boolean = true): DataFrame = {
-    // cacheIndex=false for PER-TRIGGER callers (streamingIngest): every
-    // .cache() registers a CacheManager entry the caller cannot reach to
-    // uncache, so a long-running stream would accumulate one pinned plan
-    // per trigger. Uncached, the index subtree is re-evaluated per
-    // consumer within the one action — the right trade for micro-batches.
-    val sh0 = shingleArrays(docs, idCol, textCol, n)
-    val sh = if (cacheIndex) sh0.cache() else sh0
+                        perTrigger: Boolean = false): DataFrame = {
+    val cached = cachedUnless(perTrigger) _
+    val sh = cached(shingleSlim(docs, idCol, textCol, n, "doc", hash = false))
     // WARM the cache before consumers race it (r18): AQE launches the
     // independent consumer stages concurrently, and every stage that
     // arrives before the blocks exist recomputes the full tokenization —
     // measured as 3× duplicate ~0.2-0.5 s stages per query. One eager
     // count() materializes the blocks once; every consumer then reads
-    // them. Batch callers only (a per-trigger stream skips the cache AND
-    // the warm-up pass).
-    if (cacheIndex) sh.count()
-    val exploded = sh.select(col("doc"), explode(col("sh")).as("shingle"))
-    val dfTab = exploded.groupBy("shingle").agg(count(lit(1)).as("df"))
-    val hot =
-      if (maxDfFraction > 0) {
-        val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-        dfTab.crossJoin(broadcast(nDocs))
-          .filter(col("df") > greatest(lit(maxDf), col("n_docs") * maxDfFraction))
-          .select("shingle")
-      } else dfTab.filter(col("df") > maxDf).select("shingle")
-    val idx0 = exploded.join(broadcast(hot), Seq("shingle"), "left_anti")
-    val idx = if (cacheIndex) idx0.cache() else idx0
+    // them.
+    if (!perTrigger) sh.count()
+    val idx = cached(capped(shingleRows(sh, "doc"), maxDf))
     val sizes = idx.groupBy("doc").agg(count(lit(1)).as("n_shingles"))
 
     val common = idx.as("a").join(idx.as("b"),
@@ -177,13 +247,6 @@ object Dedup {
   def minhashSignature(shingles: Column, k: Int): Column =
     NativeExpressions.minhashSignature(shingles, k)
 
-  /** MinHash + LSH banding near-dup candidates, verified with signature
-    * similarity. bands×rows = k. Join key is (band, hash of band slice) —
-    * shuffle is O(docs × bands), never all-pairs. The candidate self-join
-    * and its distinct carry ONLY (band-key, doc id) — signatures are
-    * re-attached to the surviving pairs afterwards, so no wide arrays move
-    * through the pair shuffle.
-    */
   /** Self-join of a bucket index (doc, keyCol, …) on the bucket key with
     * doc_a < doc_b — the LSH candidate join shared by the simhash block
     * scheme and the minhash banding, STAGE-BOUNDED so the data-sized
@@ -243,6 +306,16 @@ object Dedup {
       .distinct()
   }
 
+  /** MinHash + LSH banding near-dup candidates, verified with signature
+    * similarity. bands×rows = k. Join key is (band, hash of band slice) —
+    * shuffle is O(docs × bands), never all-pairs. The candidate self-join
+    * and its distinct carry ONLY (band-key, doc id) — signatures are
+    * re-attached to the surviving pairs afterwards, so no wide arrays move
+    * through the pair shuffle.
+    *
+    * Jobs and caches: building it runs no job; it leaves one cache entry
+    * (the signatures) for [[graft.GraftSession.clearCaches]].
+    */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
                       shingleN: Int = 3, k: Int = 32, bands: Int = 8,
                       threshold: Double = 0.5): DataFrame = {
@@ -286,46 +359,39 @@ object Dedup {
     * Scale shape: banding shuffle is docs × bands narrow rows; the
     * verification joins explode each CANDIDATE pair by its capped shingle
     * lists (≤ candidate-count × shingles-per-doc rows), never corpus².
-    * The df-cap window runs over the full corpus index BEFORE the
-    * candidate semi-join, so sizes and intersections match
-    * [[ngramJaccardPairs]] exactly.
+    * The df cap runs over the full corpus index BEFORE the candidate
+    * semi-join, so sizes and intersections match [[ngramJaccardPairs]]
+    * exactly.
+    *
+    * Jobs and caches: building the DataFrame runs ONE job — the warm-up
+    * `count()` of the cached shingle arrays — and leaves three cache
+    * entries (the shingle arrays, the LSH candidates and the candidate
+    * docs' capped index) for [[graft.GraftSession.clearCaches]]. Batch
+    * callers only: a per-trigger caller would pin three plans per trigger.
     */
   def minhashLshVerifiedPairs(docs: DataFrame, idCol: String, textCol: String,
                               shingleN: Int = 5, k: Int = 32, bands: Int = 16,
-                              threshold: Double = 0.5, maxDf: Long = 100,
-                              cacheIndex: Boolean = true): DataFrame = {
-    // cacheIndex=false for PER-TRIGGER callers, exactly as in
-    // ngramJaccardPairs/incrementalStatus (r17 advisory): each .cache()
-    // here registers a CacheManager entry the caller cannot reach to
-    // uncache — three per invocation (sh, cands, idxC) — so a long-running
-    // stream calling this per trigger would accumulate pinned plans.
-    // No per-trigger caller exists today (the batch dd_minhash_lsh carrier
-    // is the only one); the flag makes the contract mechanical instead of
-    // documentary.
-    def cached(df: DataFrame): DataFrame = if (cacheIndex) df.cache() else df
+                              threshold: Double = 0.5, maxDf: Long = 100): DataFrame = {
     // ONE tokenization (r17): the cached (doc, sh) arrays feed the minhash
     // signatures, the df table, AND the capped index — previously each of
     // the three re-tokenized the corpus from text. Signatures are
     // bit-identical: the kernel's per-position min is insensitive to
     // duplicates, so distinct arrays hash to the same signature as the
     // raw shingle stream, and empty-array docs drop exactly as before.
-    val sh = cached(shingleArrays(docs, idCol, textCol, shingleN))
+    val sh = shingleSlim(docs, idCol, textCol, shingleN, "doc", hash = false).cache()
     // cache warm-up before concurrent consumers race it (see
     // ngramJaccardPairs); cands/idxC are NOT warmed — their consumers
     // chain sequentially enough that an extra eager job measured as a
     // wash here
-    if (cacheIndex) sh.count()
+    sh.count()
     val sigs = sh.filter(size(col("sh")) > 0)
       .select(col("doc"), minhashSignature(col("sh"), k).as("sig"))
-    val cands = cached(bandedCandidates(sigs, k, bands))
+    val cands = bandedCandidates(sigs, k, bands).cache()
 
-    val exploded = sh.select(col("doc"), explode(col("sh")).as("shingle"))
-    val dfTab = exploded.groupBy("shingle").agg(count(lit(1)).as("df"))
-    val hot = dfTab.filter(col("df") > maxDf).select("shingle")
-    val idx = exploded.join(broadcast(hot), Seq("shingle"), "left_anti")
+    val idx = capped(shingleRows(sh, "doc"), maxDf)
     val candDocs = cands.select(col("doc_a").as("doc"))
       .union(cands.select(col("doc_b").as("doc"))).distinct()
-    val idxC = cached(idx.join(candDocs, Seq("doc"), "left_semi"))
+    val idxC = idx.join(candDocs, Seq("doc"), "left_semi").cache()
     val sizes = idxC.groupBy("doc").agg(count(lit(1)).as("n_shingles"))
     val common = cands
       .join(idxC.select(col("doc").as("doc_a"), col("shingle")), Seq("doc_a"))
@@ -369,8 +435,8 @@ object Dedup {
     * quadratic in the self-join at corpus scale. Block-PAIR keys keep the
     * effective key 16 bits wide (n/65536 occupancy, same as before) and
     * buy the d≤6 guarantee for a 28-row-per-doc narrow explode.
-    */
-  /** The blocking keys are parameterized Manku-style as (blocks, subset):
+    *
+    * The blocking keys are parameterized Manku-style as (blocks, subset):
     * the 64-bit signature splits into `blocks` nearly-equal bit ranges,
     * and candidates are blocked on equality of every
     * (blocks − maxDist)-subset of them. Pigeonhole: Hamming ≤ maxDist
@@ -394,6 +460,9 @@ object Dedup {
     *   - the subset count C(blocks, blocks−maxDist) is the per-doc
     *     explode factor — capped below so a mis-parameterization cannot
     *     emit thousands of rows per doc.
+    *
+    * Jobs and caches: building it runs no job; it leaves one cache entry
+    * (the signatures) for [[graft.GraftSession.clearCaches]].
     */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
                    maxDist: Int = 6, md5Sig: Boolean = false,
@@ -466,6 +535,8 @@ object Dedup {
     * doc×doc comparison exists anywhere, and at 100 TB the join key
     * becomes xxhash64(shingle) so only 8-byte keys move (raw shingles ship
     * here so a SQL oracle can replicate the grouping exactly).
+    *
+    * Jobs and caches: building it runs no job and caches nothing.
     */
   def substringSpans(docs: DataFrame, idCol: String, textCol: String,
                      n: Int, minTokens: Int): DataFrame = {
@@ -515,27 +586,45 @@ object Dedup {
     *
     * The delta-side broadcasts are a CONTRACT — and since round 10 the
     * contract is MECHANICAL, not documentary: the operator counts the
-    * delta once and, above `deltaBroadcastLimit` rows, degrades every
-    * delta-side broadcast to a keyed shuffle join (both shingle-join
-    * inputs explicitly repartitioned on the key under AQE — the explode
-    * hides their true size from static estimation, the exact
-    * blind-broadcast class SCALE.md's x100p run measured at 145 s /
+    * delta once and, above `deltaBroadcastLimit` rows (or 2M exploded
+    * shingle rows), degrades every delta-side broadcast to a keyed
+    * shuffle join (both shingle-join inputs stage-bound on the key under
+    * AQE — the explode hides their true size from static estimation, the
+    * exact blind-broadcast class SCALE.md's x100p run measured at 145 s /
     * driver-threatening — or pinned to sort-merge with AQE off).
     * Chunking the delta is NOT needed for correctness — delta docs are
     * only ever compared to base, never to each other, so the degraded
     * plan computes the identical answer in one base pass instead of one
-    * per chunk. Callers with genuinely bounded batches (a crawl
-    * snapshot, a micro-batch —
-    * [[graft.streaming.StreamingAnalytics.streamingIngest]] feeds exactly
-    * those) never hit the count threshold and keep the broadcast plan; a
+    * per chunk. Callers with genuinely bounded batches (a crawl snapshot)
+    * never hit the count threshold and keep the broadcast plan; a
     * corpus-vs-corpus comparison still belongs to [[ngramJaccardPairs]],
-    * whose index self-join is built for it.
+    * whose index self-join is built for it. `deltaBroadcastLimit` is a
+    * setting so that a small fixture can reach the degraded plan
+    * (DedupSpec's two degraded-path tests); production callers keep the
+    * default.
+    *
+    * `perTrigger = true` is the setting for a caller that runs once per
+    * streaming trigger ([[graft.streaming.StreamingAnalytics]]'s
+    * `incrementalDedupStream` and `streamingIngest`): nothing is cached,
+    * and the delta — a micro-batch, bounded by the stream's own contract —
+    * keeps the broadcast plan without the count, whose job would
+    * re-tokenize the uncached delta on every trigger.
+    *
+    * Jobs and caches: a batch call (the default) runs ONE job while the
+    * DataFrame is built — the delta count above — and leaves two cache
+    * entries (the delta's and the base's slim shingle frames) for
+    * [[graft.GraftSession.clearCaches]]. A `perTrigger` call runs no job
+    * and caches nothing.
     */
   def incrementalStatus(base: DataFrame, delta: DataFrame, idCol: String,
                         textCol: String, n: Int, threshold: Double,
-                        maxDf: Long, cacheIndex: Boolean = true,
-                        deltaBroadcastLimit: Long = 500000L,
-                        shingleBroadcastLimit: Long = 2000000L): DataFrame = {
+                        maxDf: Long, perTrigger: Boolean = false,
+                        deltaBroadcastLimit: Long = 500000L): DataFrame = {
+    val cached = cachedUnless(perTrigger) _
+    // ONE delta scan + tokenization (r17): the count, the text-hash
+    // projection, the shingle explode, and the final id frame all derive
+    // from the slim (doc_id, th, sh) frame.
+    val dSlim = cached(shingleSlim(delta, idCol, textCol, n, "doc_id", hash = true))
     // One map-only pass over the delta (the contractually small side) buys
     // a plan decision the static estimator cannot make: row count AND the
     // exploded shingle volume — the latter is what actually broadcasts
@@ -543,29 +632,12 @@ object Dedup {
     // explode), so a 50k-doc delta of long documents degrades even though
     // its row count looks harmless. 2M shingle rows ≈ low hundreds of MB
     // broadcast — a deliberate ceiling far under driver-threatening.
-    // `deltaBroadcastLimit = Long.MaxValue` is the documented opt-out for
-    // per-trigger streaming callers whose micro-batches are already
-    // contract-bounded: the stats job (a full re-tokenization of an
-    // uncached delta, every trigger, forever) would cost more than the
-    // risk it retires there, and `small` is then true by definition.
-    // ONE delta scan + tokenization (r17): the stats probe, the text-hash
-    // projection, the shingle explode, and the final id frame previously
-    // each re-read (and the first and third re-tokenized) the delta. The
-    // slim (doc_id, th, sh) frame is computed once; cached for batch
-    // callers, uncached for per-trigger streaming callers exactly like
-    // the index (cacheIndex gates both).
-    val dSlim0 = graft.operators.Guards.spread(
-        delta.select(col(idCol).as("doc_id"), col(textCol)))
-      .select(col("doc_id"),
-        when(col(textCol).isNotNull, xxhash64(col(textCol))).as("th"),
-        array_distinct(TextFunctions.wordShingles(col(textCol), n)).as("sh"))
-    val dSlim = if (cacheIndex) dSlim0.cache() else dSlim0
-    val small = deltaBroadcastLimit == Long.MaxValue || {
+    val small = perTrigger || {
       val stats = dSlim.agg(
         count(lit(1)).as("rows"),
         coalesce(sum(size(col("sh"))), lit(0L)).as("sh")).head()
       stats.getLong(0) <= deltaBroadcastLimit &&
-        stats.getLong(1) <= shingleBroadcastLimit
+        stats.getLong(1) <= ShingleBroadcastLimit
     }
     val aqe = delta.sparkSession.conf
       .get("spark.sql.adaptive.enabled", "true").equalsIgnoreCase("true")
@@ -577,79 +649,40 @@ object Dedup {
     def bcD(df: DataFrame): DataFrame =
       if (small) broadcast(df) else if (aqe) df else df.hint("merge")
 
-    // null text hashes to NULL (not xxhash64's non-null seed constant), so
-    // the equi-join below never pairs two null-text docs — a null-text
-    // delta doc is 'new', matching SQL `base.text = delta.text` semantics
-    // (the near-dup arm already agrees: no shingles → no candidates).
-    def th(c: Column): Column = when(c.isNotNull, xxhash64(c))
     // ONE base scan + tokenization (r17): the slim (base_id, th, sh) frame
     // serves the exact-hash join AND all shingle consumers; the cached
-    // form holds per-doc ARRAYS — strictly smaller than the previously
-    // cached exploded index, which each consumer now derives with a cheap
-    // explode of cached rows. Spark spills it if large;
-    // cacheIndex=false for per-trigger callers (see ngramJaccardPairs).
-    val bSlim0 = graft.operators.Guards.spread(
-        base.select(col(idCol).as("base_id"), col(textCol)))
-      .select(col("base_id"), th(col(textCol)).as("th"),
-        array_distinct(TextFunctions.wordShingles(col(textCol), n)).as("sh"))
-    val bSlim = if (cacheIndex) bSlim0.cache() else bSlim0
-    // NOT warmed (unlike ngramJaccardPairs' sh): the consumer races here
+    // form holds per-doc ARRAYS, which each consumer explodes. NOT warmed
+    // (unlike ngramJaccardPairs' arrays): the consumer races here
     // recompute the base tokenize in PARALLEL stages, and the A/B showed
     // the extra eager count() job costs more wall-clock than the
     // duplicated-but-concurrent compute it removes (1.99 vs 1.77 s warm
     // min at sf0.1)
-    val bh = bSlim.select(col("base_id"), col("th"))
+    val bSlim = cached(shingleSlim(base, idCol, textCol, n, "base_id", hash = true))
     val dh0 = dSlim.select(col("doc_id"), col("th"))
     // the one delta projection with no natural stage boundary: give it the
     // join's own shuffle as a boundary (reused, not extra) so AQE sizes it
     val dh = if (small || !aqe) dh0 else dh0.repartition(col("th"))
-    val exactM = bh.join(bcD(dh), "th")
-      .groupBy("doc_id").agg(min("base_id").as("exact_match"))
 
-    val baseSh = bSlim.select(col("base_id"), explode(col("sh")).as("shingle"))
-    val dfTab = baseSh.groupBy("shingle").agg(count(lit(1)).as("df"))
-    val hot = dfTab.filter(col("df") > maxDf).select("shingle")
-    val baseIdx = baseSh.join(broadcast(hot), Seq("shingle"), "left_anti")
-    val deltaShU = dSlim.select(col("doc_id"), explode(col("sh")).as("shingle"))
-      .join(broadcast(hot), Seq("shingle"), "left_anti")
-
+    val baseSh = shingleRows(bSlim, "base_id")
+    val hot = hotSet(docFreq(baseSh), maxDf)
+    val baseIdx = dropHot(baseSh, hot)
+    val deltaShU = dropHot(shingleRows(dSlim, "doc_id"), hot)
     val baseSizes = baseIdx.groupBy("base_id").agg(count(lit(1)).as("size_b"))
-    val deltaSizes = deltaShU.groupBy("doc_id").agg(count(lit(1)).as("size_d"))
 
     // Degraded path: BOTH shingle-join inputs are un-materialized explodes
     // whose static estimate is the slim pre-explode projection — stage-bound
     // both on the join key (co-partitioned: one logical shuffle, no extra
-    // exchange) so AQE sizes them at runtime; with AQE off pin sort-merge.
+    // exchange).
+    def bound(df: DataFrame) = graft.operators.Guards.stageBound(df, col("shingle"))
     val common = (
       if (small) baseIdx.join(broadcast(deltaShU), "shingle")
-      else if (aqe) baseIdx.repartition(col("shingle"))
-        .join(deltaShU.repartition(col("shingle")), "shingle")
-      else baseIdx.hint("merge").join(deltaShU.hint("merge"), "shingle"))
+      else bound(baseIdx).join(bound(deltaShU), "shingle"))
       .groupBy("doc_id", "base_id").agg(count(lit(1)).as("common"))
 
-    val rawJ = col("common").cast("double") * 1.0 /
-      (col("size_d") + col("size_b") - col("common"))
-    val best = Window.partitionBy("doc_id").orderBy(desc("j"), col("base_id"))
-    // baseSizes is corpus-sized; the candidate set (delta × capped matches)
-    // is the small side — pin it broadcast so the sizes join streams the
-    // big table map-side instead of depending on stats estimation.
-    val nearM = baseSizes
-      .join(bcD(common.join(bcD(deltaSizes), "doc_id")), "base_id")
-      .filter(rawJ >= threshold)
-      .withColumn("j", rawJ)
-      .withColumn("rn", row_number().over(best))
-      .filter(col("rn") === 1)
-      .select(col("doc_id"), col("base_id").as("near_match"),
-        Rounding.round4(col("j")).as("near_jaccard"))
-
-    dSlim.select(col("doc_id"))
-      .join(bcD(exactM), Seq("doc_id"), "left")
-      .join(bcD(nearM), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("exact_match").isNotNull, "exact_dup")
-          .when(col("near_match").isNotNull, "near_dup")
-          .otherwise("new").as("status"),
-        coalesce(col("exact_match"), col("near_match")).as("match_id"),
-        when(col("exact_match").isNull, col("near_jaccard")).as("jaccard"))
+    classify(dSlim.select(col("doc_id")), bSlim.select(col("base_id"), col("th")), dh,
+      deltaShU, common, baseSizes, threshold, bcD)
   }
+
+  /** [[incrementalStatus]]'s exploded-shingle ceiling for the broadcast plan. */
+  private val ShingleBroadcastLimit = 2000000L
 }

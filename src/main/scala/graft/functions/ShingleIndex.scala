@@ -2,9 +2,8 @@ package graft.functions
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 import graft.sources.docstore.MetaIO
 
@@ -83,38 +82,21 @@ object ShingleIndex {
   private def compactMarker(k: Int) = f"_compact_$k%06d.json"
   private def compactDir(k: Int) = f"cseg_$k%06d"
 
-  private def th(c: Column): Column = when(c.isNotNull, xxhash64(c))
-
   private def writeSegmentData(docs: DataFrame, idCol: String,
                                textCol: String, n: Int, seg: Path): Unit = {
-    // ONE tokenization per segment (r17, second cut): each write action
-    // re-executes its subtree, so the stats write (size()) and the
-    // postings write (explode()) each re-ran WordShingles over the
-    // segment's full text column. A cached slim (base_id, th, sh) frame
-    // tokenizes once; both writes derive from it with narrow projections,
-    // and the df partial aggregates the just-written 2-column postings
-    // parquet (zero tokenize, r17 first cut). The cache is unpersisted
-    // before returning — a per-trigger streaming append must not
-    // accumulate pinned plans (the ngramJaccardPairs lesson); Spark
-    // spills it if a batch segment is large.
-    // spread BEFORE the kernel (Guards.spread): a one-split segment input
-    // would tokenize and write on a single core; identity when the input
-    // already carries cluster-width splits
-    val base = graft.operators.Guards.spread(
-        docs.select(col(idCol).as("base_id"), col(textCol)))
-      .select(col("base_id"), th(col(textCol)).as("th"),
-        array_distinct(TextFunctions.wordShingles(col(textCol), n)).as("sh"))
-      .cache()
+    // ONE tokenization per segment (r17): each write action re-executes
+    // its subtree, so a cached slim (base_id, th, sh) frame tokenizes once
+    // and all three writes derive from it with narrow projections. The
+    // cache is unpersisted before returning — a per-trigger streaming
+    // append must not accumulate pinned plans.
+    val base = Dedup.shingleSlim(docs, idCol, textCol, n, "base_id", hash = true).cache()
     try {
-      val postingsPath = new Path(seg, "postings").toString
-      base.select(col("base_id"), explode(col("sh")).as("shingle"))
-        .write.mode("overwrite").parquet(postingsPath)
+      val postings = Dedup.shingleRows(base, "base_id")
+      postings.write.mode("overwrite").parquet(new Path(seg, "postings").toString)
       base.select(col("base_id"), col("th"),
           coalesce(size(col("sh")).cast("long"), lit(0L)).as("n_total"))
         .write.mode("overwrite").parquet(new Path(seg, "stats").toString)
-      docs.sparkSession.read.parquet(postingsPath)
-        .groupBy("shingle").agg(count(lit(1)).as("df"))
-        .write.mode("overwrite").parquet(new Path(seg, "df").toString)
+      Dedup.docFreq(postings).write.mode("overwrite").parquet(new Path(seg, "df").toString)
     } finally base.unpersist(false)
   }
 
@@ -319,20 +301,12 @@ object ShingleIndex {
   def incrementalStatusIndexed(idx: Frames, delta: DataFrame, idCol: String,
                                textCol: String, threshold: Double,
                                maxDf: Long): DataFrame = {
-    val n = idx.n
-    val dh = delta.select(col(idCol).as("doc_id"), th(col(textCol)).as("th"))
-    val exactM = idx.stats.select(col("base_id"), col("th"))
-      .join(broadcast(dh), "th")
-      .groupBy("doc_id").agg(min("base_id").as("exact_match"))
-
+    val dh = delta.select(col(idCol).as("doc_id"), Dedup.th(col(textCol)).as("th"))
     // current hot set: merged df over partials, strictly above the cap
-    val hot = idx.dfPartials.groupBy("shingle").agg(sum("df").as("df"))
-      .filter(col("df") > maxDf).select("shingle")
-
-    val deltaShU = delta.select(col(idCol).as("doc_id"),
-        explode(array_distinct(TextFunctions.wordShingles(col(textCol), n))).as("shingle"))
-      .join(broadcast(hot), Seq("shingle"), "left_anti")
-    val deltaSizes = deltaShU.groupBy("doc_id").agg(count(lit(1)).as("size_d"))
+    val hot = Dedup.hotSet(idx.dfPartials.groupBy("shingle").agg(sum("df").as("df")), maxDf)
+    val deltaShU = Dedup.dropHot(delta.select(col(idCol).as("doc_id"),
+        explode(array_distinct(TextFunctions.wordShingles(col(textCol), idx.n))).as("shingle")),
+      hot)
 
     // postings store hot shingles too, but deltaShU already excludes
     // them, so this equals the re-derive path's baseIdx ⋈ deltaShU
@@ -350,26 +324,8 @@ object ShingleIndex {
       .select(col("base_id"),
         (col("n_total") - coalesce(col("hot_cnt"), lit(0L))).as("size_b"))
 
-    val rawJ = col("common").cast("double") * 1.0 /
-      (col("size_d") + col("size_b") - col("common"))
-    val best = Window.partitionBy("doc_id").orderBy(desc("j"), col("base_id"))
-    val nearM = baseSizes
-      .join(broadcast(common.join(broadcast(deltaSizes), "doc_id")), "base_id")
-      .filter(rawJ >= threshold)
-      .withColumn("j", rawJ)
-      .withColumn("rn", row_number().over(best))
-      .filter(col("rn") === 1)
-      .select(col("doc_id"), col("base_id").as("near_match"),
-        Rounding.round4(col("j")).as("near_jaccard"))
-
-    delta.select(col(idCol).as("doc_id"))
-      .join(broadcast(exactM), Seq("doc_id"), "left")
-      .join(broadcast(nearM), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("exact_match").isNotNull, "exact_dup")
-          .when(col("near_match").isNotNull, "near_dup")
-          .otherwise("new").as("status"),
-        coalesce(col("exact_match"), col("near_match")).as("match_id"),
-        when(col("exact_match").isNull, col("near_jaccard")).as("jaccard"))
+    Dedup.classify(delta.select(col(idCol).as("doc_id")),
+      idx.stats.select(col("base_id"), col("th")), dh, deltaShU, common, baseSizes,
+      threshold, (df: DataFrame) => broadcast(df))
   }
 }

@@ -353,11 +353,11 @@ object StreamingAnalytics {
     // so without this the base's hash + groupBy reduction would re-run per
     // micro-batch forever. The base is immutable by contract, so the cache
     // plan is trigger-invariant (ONE CacheManager entry per distinct base
-    // plan, same rationale as incrementalStatus's cacheIndex). Lifecycle:
-    // the entry lives until the session ends — right for the intended
-    // shape (one long-running stream per base); an application that builds
-    // many short-lived streams over DIFFERENT bases should pass
-    // cacheBase=false and persist/unpersist the base itself.
+    // plan). Lifecycle: the entry lives until the session ends — right for
+    // the intended shape (one long-running stream per base); an
+    // application that builds many short-lived streams over DIFFERENT
+    // bases should pass cacheBase=false and persist/unpersist the base
+    // itself.
     val bh = if (cacheBase) reduced.persist() else reduced
     docs.withColumn("_th", xxhash64(col(textCol)))
       .join(broadcast(bh), Seq("_th"), "left")
@@ -372,19 +372,17 @@ object StreamingAnalytics {
     * shape — each micro-batch is classified by the BATCH operator
     * [[graft.functions.Dedup.incrementalStatus]] verbatim. One shared
     * definition, so stream and batch classifications can never drift;
-    * per-batch cost is the batch operator's (delta = the micro-batch).
+    * per-batch cost is the batch operator's (delta = the micro-batch),
+    * called with `perTrigger = true`: no job before the batch's own
+    * action, and no cache entry left behind by any trigger.
     */
   def incrementalDedupStream(docs: DataFrame, base: DataFrame,
                              n: Int, threshold: Double, maxDf: Long)
                             (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // Long.MaxValue delta limit = skip the guard's stats job: the
-        // micro-batch IS the bounded-delta contract here, and the job
-        // would re-tokenize the uncached batch every trigger
         sink(graft.functions.Dedup.incrementalStatus(
-          base, batch, "doc_id", "text", n, threshold, maxDf,
-          deltaBroadcastLimit = Long.MaxValue))
+          base, batch, "doc_id", "text", n, threshold, maxDf, perTrigger = true))
     }.start()
 
   /** Streaming CDC apply: merge a change stream into a docstore collection
@@ -535,7 +533,7 @@ object StreamingAnalytics {
                                  maxBatchPairs: Int = 2000000): Unit = {
     val spark = batch.sparkSession
     // Per-trigger cache discipline: the Dedup helpers are called with
-    // cacheIndex=false (a .cache() inside them would register a
+    // perTrigger = true (a .cache() inside them would register a
     // CacheManager entry per trigger that this caller can never uncache —
     // RDD-level unpersist frees blocks but leaves the cached-plan entry,
     // and a session-wide snapshot sweep could steal a concurrent query's
@@ -548,14 +546,11 @@ object StreamingAnalytics {
       // fresh is consumed by THREE actions (pair collect, upsert's key
       // collect, upsert's write) — persist it so cleanGates + the
       // store-sized incrementalStatus classification run once per trigger.
-      // Long.MaxValue delta limit: the micro-batch is contract-bounded and
-      // the guard's stats job would recompute cleanGates + exact dedup for
-      // the uncached `kept` once more per trigger (the pair-graph collect
-      // below has its own mechanical maxBatchPairs bound)
+      // (The pair-graph collect below has its own mechanical maxBatchPairs
+      // bound.)
       fresh = kept.join(
         graft.functions.Dedup.incrementalStatus(store, kept, "doc_id", "text",
-            n, threshold, maxDf, cacheIndex = false,
-            deltaBroadcastLimit = Long.MaxValue)
+            n, threshold, maxDf, perTrigger = true)
           .filter(col("status") === "new").select("doc_id"),
         "doc_id").persist()
       val admitted = greedyAdmit(spark, fresh, n, threshold, maxDf, maxBatchPairs)
@@ -662,7 +657,7 @@ object StreamingAnalytics {
                           n: Int, threshold: Double, maxDf: Long,
                           maxBatchPairs: Int): DataFrame = {
     val pairs = graft.functions.Dedup.ngramJaccardPairs(fresh, "doc_id", "text",
-        n, threshold, maxDf, cacheIndex = false)
+        n, threshold, maxDf, perTrigger = true)
       // min() guards the +1 against Int overflow: the require message
       // tells operators to raise maxBatchPairs deliberately, and
       // Int.MaxValue must mean "unbounded", not limit(-2147483648)

@@ -177,4 +177,47 @@ class DedupSpec extends SparkSpec {
     assert(plan.toString.contains("SortMergeJoin"))
     assert(degraded.collect().map(_.getLong(0)).sorted.toSeq == Seq(11L, 15L))
   }
+
+  test("a binding df cap: LSH-verified pairs equal the pair join, indexed status equals re-derive") {
+    // Every doc ends in the same 24-token boilerplate: its 23 bigrams sit
+    // in all 8 docs, far above maxDf = 3, so the cap drops them. Uncapped,
+    // the boilerplate alone makes any two docs a pair (23/39 ≈ 0.59);
+    // capped, only the 8 unique bigrams per doc are left.
+    val boiler = (1 to 24).map(i => s"boiler$i").mkString(" ")
+    def doc(family: String, edit: Int = 0) =
+      ((1 to 8).map(i => if (i == edit) s"edited$i" else s"$family$i") :+ boiler).mkString(" ")
+    val capDocs = Seq(
+      1L -> doc("a"), 2L -> doc("a", edit = 4), 3L -> doc("a"),
+      4L -> doc("b"), 5L -> doc("c"), 6L -> doc("d"), 7L -> doc("e"), 8L -> doc("f")
+    ).toDF("doc_id", "text")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val capped = pairs(Dedup.ngramJaccardPairs(capDocs, "doc_id", "text",
+      n = 2, threshold = 0.5, maxDf = 3))
+    // not vacuous: the cap removes the boilerplate-only pairs
+    assert(capped.map(p => (p._1, p._2)) == Set((1L, 2L), (1L, 3L), (2L, 3L)), capped)
+    assert(pairs(Dedup.ngramJaccardPairs(capDocs, "doc_id", "text",
+      n = 2, threshold = 0.5, maxDf = 100)).size == 28)
+    assert(pairs(Dedup.minhashLshVerifiedPairs(capDocs, "doc_id", "text",
+      shingleN = 2, k = 64, bands = 32, threshold = 0.5, maxDf = 3)) == capped)
+
+    val base = capDocs.filter(col("doc_id") =!= 2L && col("doc_id") =!= 3L)
+    val delta = capDocs.filter(col("doc_id") === 2L || col("doc_id") === 3L)
+      .union(Seq(9L -> doc("g")).toDF("doc_id", "text"))
+    def status(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getString(1), Option(r.get(2)), Option(r.get(3))))
+        .sortBy(_._1).toSeq
+    val rederive = status(Dedup.incrementalStatus(base, delta, "doc_id", "text",
+      n = 2, threshold = 0.5, maxDf = 3))
+    assert(rederive.map(r => r._1 -> r._2) ==
+      Seq(2L -> "near_dup", 3L -> "exact_dup", 9L -> "new"), rederive)
+    // not vacuous: without the cap the new doc matches on boilerplate
+    assert(status(Dedup.incrementalStatus(base, delta, "doc_id", "text",
+      n = 2, threshold = 0.5, maxDf = 100)).map(_._2).last == "near_dup")
+    val idxDir = java.nio.file.Files.createTempDirectory("graft_dedup_cap").toString
+    graft.functions.ShingleIndex.bootstrap(base, "doc_id", "text", n = 2, idxDir)
+    assert(status(graft.functions.ShingleIndex.incrementalStatusIndexed(
+      graft.functions.ShingleIndex.read(spark, idxDir), delta, "doc_id", "text",
+      threshold = 0.5, maxDf = 3)) == rederive)
+  }
 }

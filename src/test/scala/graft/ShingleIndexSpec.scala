@@ -110,6 +110,18 @@ class ShingleIndexSpec extends SparkSpec {
     assert(hotCount > 0, "fixture must actually cross the df cap")
   }
 
+  test("a segment write derives all three tables from one tokenization, re-reading none") {
+    // postings, stats and the df partial all from the cached slim frame;
+    // reading the just-written postings back for the df partial would add
+    // a parquet schema job
+    val idxDir = tmp("graft_shidx_jobs")
+    val meter = new Meter(spark)
+    try {
+      meter(ShingleIndex.bootstrap(base, "doc_id", "text", n = 2, idxDir))
+      assert(meter.jobs == 4)
+    } finally meter.close()
+  }
+
   test("append is idempotent by segment id (streaming replay contract)") {
     val idxDir = tmp("graft_shidx_idem")
     ShingleIndex.bootstrap(base, "doc_id", "text", n = 2, idxDir)

@@ -1777,10 +1777,9 @@ object QueriesExt {
     * per (vector, table).
     */
   private val sm4 = QueryDef("sim_ann_lsh",
-    Some(annLshOracleSql(tables = 8, bits = 8, probes = 2, k = 5)),
+    Some(annLshOracleSql(tables = Similarity.LshTables, bits = 8, probes = 2, k = 5)),
     (s, d) => Similarity.lshTopK(
-      emb(s, d), emb(s, d).filter(col("vec_id") < 10), k = 5,
-      tables = 8, bits = 8, probes = 2)
+      emb(s, d), emb(s, d).filter(col("vec_id") < 10), k = 5, bits = 8, probes = 2)
       .orderBy("query_id", "rank"))
 
   /** Generic sequential-fold dot product over two array-column refs. */
@@ -1810,13 +1809,13 @@ object QueriesExt {
     * to REAL (both engines: IEEE round-to-nearest); emptied cells keep
     * their previous centroid via the LEFT JOIN coalesce.
     */
-  /** The Lloyd trainers' train-set CTE, mirroring the Spark side exactly:
-    * the caller's vec_id%2 sample, then [[graft.functions.Similarity
-    * .ivfCentroids]]/pqCodebooks' MECHANICAL cap — a scalar-subquery
+  /** The Lloyd trainer's train-set CTE, mirroring the Spark side exactly:
+    * the vec_id % TrainModulus sample, then the trainer's MECHANICAL cap
+    * ([[graft.functions.Similarity.MaxTrainRows]]) — a scalar-subquery
     * m = ceil(n / MaxTrainRows) over the same count, 1-in-m keyed on the
     * 60-bit md5 hash of vec_id (the a18b cross-engine derivation; a bare
-    * vec_id modulus would compose badly with the callers' own vec_id%2
-    * pre-sample). At registered corpora m = 1 (no-op), but the oracle
+    * vec_id modulus would compose badly with the vec_id % TrainModulus
+    * sample). At registered corpora m = 1 (no-op), but the oracle
     * replays the cap formula so a capped train run stays hash-checkable.
     */
   private def cappedTrainSql(cols: String = "*"): String =
@@ -1826,7 +1825,7 @@ object QueriesExt {
     s"""vecs AS (SELECT * FROM embeddings
        |  WHERE embedding IS NOT NULL AND len(embedding) > 0
        |    AND len(list_filter(embedding, x -> x IS NULL OR isnan(x) OR isinf(x))) = 0),
-       |t0 AS (SELECT $cols FROM vecs WHERE vec_id % 2 = 0),
+       |t0 AS (SELECT $cols FROM vecs WHERE vec_id % ${Similarity.TrainModulus} = 0),
        |tp AS (SELECT greatest(1, cast(ceil(count(*) /
        |  ${graft.functions.Similarity.MaxTrainRows}.0) AS bigint)) AS m FROM t0),
        |train AS (SELECT t0.* FROM t0, tp
@@ -1868,11 +1867,11 @@ object QueriesExt {
             |c0 AS (
             |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cidx, embedding AS ce
             |  FROM (SELECT vec_id, embedding FROM train ORDER BY vec_id LIMIT 16)),
-            |${lloydCteSql(2, "train")}
+            |${lloydCteSql(Similarity.IvfLloydIters, "train")}
             |vc AS (
             |  SELECT e.vec_id, c.cidx,
             |    ${ivfCosSql("e.embedding", "c.ce")} AS cos
-            |  FROM vecs e CROSS JOIN c2 c),
+            |  FROM vecs e CROSS JOIN c${Similarity.IvfLloydIters} c),
             |assign AS (
             |  SELECT vec_id, cidx AS cell FROM
             |    (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cidx) AS rn FROM vc)
@@ -1896,8 +1895,7 @@ object QueriesExt {
             |SELECT query_id, neighbor_id, cos, rank FROM ranked
             |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
     (s, d) => Similarity.ivfTopK(
-      emb(s, d), emb(s, d).filter(col("vec_id") < 10), k = 5, nCentroids = 16, nProbe = 4,
-      trainModulus = 2)
+      emb(s, d), emb(s, d).filter(col("vec_id") < 10), k = 5, nCentroids = 16, nProbe = 4)
       .orderBy("query_id", "rank"))
 
   /** K-means clustering summary over the embedding corpus — cluster sizes,
@@ -1927,7 +1925,7 @@ object QueriesExt {
             |                    (p, q) -> p + q) / count(*) * 10000 + 0.5) / 10000 AS avg_cos
             |FROM assign GROUP BY cell ORDER BY cell""".stripMargin),
     (s, d) => Similarity.kmeansClusterStats(
-      emb(s, d), nCentroids = 16, lloydIters = 2, trainModulus = 2))
+      emb(s, d), nCentroids = 16, lloydIters = 2))
 
   /** SemDeDup semantic dedup — same deterministic trainer as sim_kmeans,
     * so the oracle replays training + assignment with the shared Lloyd
@@ -1938,14 +1936,14 @@ object QueriesExt {
     *
     * nCentroids is NOT a manual knob here: both engines derive
     * k = max(16, ⌊√n⌋) from the corpus count
-    * ([[graft.functions.Similarity.semanticDedupAuto]] / the `kk` CTE),
+    * ([[graft.functions.Similarity.semanticDedup]] / the `kk` CTE),
     * so cells stay ~√n-bounded as the corpus grows and the oracle stays
     * replayable — floor(sqrt(bigint)) is integer-exact IEEE on both.
     */
   private val sm8 = QueryDef("sim_semantic_dedup",
     Some(s"""WITH ${cappedTrainSql()},
             |kk AS (
-            |  SELECT greatest(16, cast(floor(sqrt(count(*))) AS bigint)) AS k
+            |  SELECT greatest(${Similarity.MinDedupCentroids}, cast(floor(sqrt(count(*))) AS bigint)) AS k
             |  FROM vecs),
             |c0 AS (
             |  SELECT cidx, ce FROM (
@@ -1972,8 +1970,7 @@ object QueriesExt {
             |  (p.pruned_by IS NULL) AS keep, p.pruned_by
             |FROM assign a LEFT JOIN pr p ON p.vec_id = a.vec_id
             |ORDER BY a.vec_id""".stripMargin),
-    (s, d) => Similarity.semanticDedupAuto(emb(s, d), lloydIters = 2,
-      trainModulus = 2, threshold = 0.45)
+    (s, d) => Similarity.semanticDedup(emb(s, d), lloydIters = 2, threshold = 0.45)
       .orderBy("vec_id"))
 
   /** Per-subspace PQ oracle CTEs: sub-sliced train set, seed codebook,
@@ -2002,10 +1999,11 @@ object QueriesExt {
     * exact re-rank all re-derived in ANSI SQL (the [[lloydCteSql]] replay
     * per subspace), so the whole compressed-domain retrieval pipeline is
     * hash-compared, not just spot-checked. m=16 subspaces × 4 dims,
-    * 16 codes each, 1 Lloyd round on the vec_id%2 sample; shortlist 8k by
-    * approximate cosine, exact top-5 re-rank (params picked by a recall
-    * sweep: this config measures 0.94 recall@5 vs brute force at sf0.01 —
-    * asserted with headroom in SimilaritySpec).
+    * 16 codes each, PqLloydIters Lloyd rounds on the train sample;
+    * shortlist ShortlistFactor·k by approximate cosine, exact top-5
+    * re-rank (params picked by a recall sweep: this config measures 0.94
+    * recall@5 vs brute force at sf0.01 — asserted with headroom in
+    * SimilaritySpec).
     */
   private val sm7 = {
     val m = 16; val sub = 4; val k = 5
@@ -2015,7 +2013,7 @@ object QueriesExt {
     val reconSq = (0 until m).map(j => foldDot(s"x.ce$j", s"x.ce$j")).mkString(" + ")
     QueryDef("sim_pq",
       Some(s"""WITH ${cappedTrainSql("vec_id, embedding")},
-              |${(0 until m).map(j => pqSubspaceCtes(j, sub, 16, 1)).mkString("\n")}
+              |${(0 until m).map(j => pqSubspaceCtes(j, sub, 16, Similarity.PqLloydIters)).mkString("\n")}
               |enc AS (
               |  SELECT e0.vec_id, ${(0 until m).map(j => s"c$j, ce$j").mkString(", ")}
               |  FROM e0 ${(1 until m).map(j => s"JOIN e$j USING (vec_id)").mkString(" ")}),
@@ -2032,7 +2030,7 @@ object QueriesExt {
               |    SELECT *, row_number() OVER (PARTITION BY query_id
               |                                 ORDER BY adc_cos DESC, neighbor_id) AS srank
               |    FROM scored WHERE adc_cos IS NOT NULL AND NOT isnan(adc_cos))
-              |  WHERE srank <= ${8 * k}),
+              |  WHERE srank <= ${Similarity.ShortlistFactor * k}),
               |rer AS (
               |  SELECT s.query_id, s.neighbor_id, s.adc_cos,
               |    ${ivfCosSql("qe.embedding", "ne.embedding")} AS cos
@@ -2046,8 +2044,7 @@ object QueriesExt {
               |SELECT query_id, neighbor_id, adc_cos, cos, rank FROM ranked
               |WHERE rank <= $k ORDER BY query_id, rank""".stripMargin),
       (s, d) => Similarity.pqTopK(emb(s, d), emb(s, d).filter(col("vec_id") < 10),
-        k = k, dim = 64, m = m, codesPerSub = 16, lloydIters = 1, trainModulus = 2,
-        shortlistFactor = 8)
+        k = k, dim = 64, m = m, codesPerSub = 16)
         .orderBy("query_id", "rank"))
   }
 
@@ -2064,7 +2061,7 @@ object QueriesExt {
     * their vector's score, dropping degenerates exactly as rankTopK does.
     */
   private val sm9 = {
-    val k = 5; val sl = 8 * k
+    val k = 5; val sl = Similarity.ShortlistFactor * k
     QueryDef("sim_sq8",
       Some(s"""WITH dims AS (SELECT cast(i AS int) AS i FROM range(1, 65) t(i)),
               |st AS (
@@ -2105,7 +2102,7 @@ object QueriesExt {
               |SELECT query_id, neighbor_id, sq_cos, cos, rank FROM ranked
               |WHERE rank <= $k ORDER BY query_id, rank""".stripMargin),
       (s, d) => Similarity.sq8TopK(emb(s, d), emb(s, d).filter(col("vec_id") < 10),
-        k = k, dim = 64, shortlistFactor = 8)
+        k = k, dim = 64)
         .orderBy("query_id", "rank"))
   }
 

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.operators.Guards
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -11,18 +12,54 @@ import org.apache.spark.sql.functions._
   *     kernel — same sequential-fold semantics as the HOF composition (and
   *     the DuckDB oracle), ~100× faster per pair.
   *   - norms are computed ONCE per vector before any pairing, so a pair
-  *     costs one dot product, not three.
+  *     costs one dot product, not three ([[queryFrame]], [[corpusFrame]],
+  *     scored by [[pairCos]]).
   *   - brute-force top-k broadcasts the (small) QUERY set against the full
   *     corpus — the corpus is never broadcast and never shuffled with its
   *     embeddings; only narrow (query_id, neighbor_id, cos) rows move. A
-  *     per-partition pre-rank bounds the final per-query window to
-  *     #partitions × k rows, so one hot query key cannot skew the shuffle.
+  *     per-partition pre-rank ([[topKCut]]) bounds the final per-query
+  *     window to #partitions × k rows, so one hot query key cannot skew the
+  *     shuffle.
   *   - the LSH variant buckets vectors by deterministic random-hyperplane
   *     sign bits ([[NativeExpressions.HyperplaneBuckets]]); the candidate
   *     join is bucket-equality on ids only (shuffle O(n·tables) narrow
   *     rows), embeddings are re-attached per candidate afterwards.
+  *   - the trained family (IVF, k-means, SemDeDup, PQ) shares one Lloyd
+  *     trainer ([[lloyd]]) and one train sample ([[trainSample]]).
+  *
+  * Constants, not options: each value below is the one every registered
+  * query uses, and the DuckDB oracles in `QueriesExt` interpolate the same
+  * constant, so an engine-side change cannot drift from its replay.
+  * Options that remain are the ones a test sets to a value the registry
+  * does not use, to reach a path: `maxTrainRows` (the train-set cap),
+  * ivfTopK's `nCentroids`/`nProbe` (probing every cell equals brute
+  * force), lshTopK's `bits`/`probes` (single-probe on a tiny fixture) and
+  * mmrTopK's `lam`/`penW` (the diversity arm).
   */
 object Similarity {
+
+  /** The trained family learns from the deterministic 1-in-2 sample
+    * vec_id % 2 == 0: centroids need only a representative sketch of the
+    * distribution, and the trainer's ordered-fold pass is the one
+    * corpus-proportional stage (measured 6.3x at a 10x scale-up when
+    * training on everything). Every vector is still ASSIGNED. */
+  val TrainModulus: Int = 2
+
+  /** PQ and SQ8 send ShortlistFactor·k approximate candidates per query
+    * to the exact re-rank. */
+  val ShortlistFactor: Int = 8
+
+  /** SemDeDup's floor on its derived centroid count k = max(16, ⌊√n⌋). */
+  val MinDedupCentroids: Int = 16
+
+  /** Lloyd rounds of ivfTopK's coarse quantizer. */
+  val IvfLloydIters: Int = 2
+
+  /** Lloyd rounds of pqTopK's codebooks. */
+  val PqLloydIters: Int = 1
+
+  /** Hash tables of lshTopK. */
+  val LshTables: Int = 8
 
   /** Sequential-fold dot product in double precision (floats widen exactly,
     * fold order is left-to-right — bit-reproducible across engines).
@@ -49,57 +86,91 @@ object Similarity {
     * and `NaN >= threshold` is TRUE — without the arm, one NaN component
     * makes its vector "similar" to EVERYTHING and floods every
     * threshold-filtered pair set (radius, near-dup, SemDeDup prune) while
-    * the ranking paths only survive via rankTopK's explicit isnan filter.
+    * the ranking paths only survive via topKCut's explicit isnan filter.
     * (Found by the round-10 degenerate-corpus gate; the DuckDB oracles
     * carry the same two-arm guard.)
     */
   private def safeCos(d: Column, na: Column, nb: Column): Column =
     when(na * nb > 0 && !isnan(na * nb), d / (na * nb))
 
-  /** (query_id, neighbor_id, cos) for all candidate pairs, given frames that
-    * carry precomputed norms. cos = dot/(norm_a·norm_b) is bit-identical to
+  /** (query_id, qe, qn): the query side of every pair scorer. */
+  private def queryFrame(queries: DataFrame): DataFrame =
+    queries.select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+      .withColumn("qn", l2Norm(col("qe")))
+
+  /** (neighbor_id, ne, nn): the corpus side of every pair scorer. With
+    * `cents` (IVF) the frame is spread and carries each vector's `cell`
+    * before its norm; without, it stays unspread — the dot-product kernel
+    * over this corpus is too light to pay for a round-robin exchange (r18
+    * A/B: Guards.spread in bruteForceTopK measured sim_knn_brute 0.66 s vs
+    * 0.46 s warm, and sim_retrieve/sim_mmr/ir_ndcg_eval ride it).
+    */
+  private def corpusFrame(corpus: DataFrame,
+                          cents: Option[Array[Array[Float]]] = None): DataFrame = {
+    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"))
+    cents.fold(c)(cs => Guards.spread(c).withColumn("cell", nearestCell(col("ne"), cs)))
+      .withColumn("nn", l2Norm(col("ne")))
+  }
+
+  /** The exact pair score of query `qe` against corpus column `e` (norm
+    * `n`). cos = dot/(norm_a·norm_b) is bit-identical to
     * dot/(sqrt(dot(a,a))·sqrt(dot(b,b))) — same doubles, same operations.
     */
-  private def rankTopK(pairs: DataFrame, k: Int): DataFrame = {
-    // Phase 1: bound each (query, input-partition) to k candidates so the
-    // final single-key window never sees more than #partitions·k rows.
+  private def pairCos(e: String = "ne", n: String = "nn"): Column =
+    safeCos(dot(col("qe"), col(e)), col("qn"), col(n))
+
+  /** (query_id, neighbor_id, `score`) for every joined pair but a vector
+    * with itself. */
+  private def scorePairs(joined: DataFrame, score: Column): DataFrame =
+    joined.filter(col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"), score)
+
+  /** Index of the nearest centroid, ties to the lower index. */
+  private def nearestCell(v: Column, cents: Array[Array[Float]]): Column =
+    element_at(NativeExpressions.nearestCentroids(v, cents, 1), 1)
+
+  /** Sub-vector j of width `sub` (PQ's subspace slice). */
+  private def subVec(v: Column, j: Int, sub: Int): Column = slice(v, j * sub + 1, sub)
+
+  /** Per-query top-`k` of `scored` by (`score` desc, neighbor_id),
+    * numbered 1..k in column `rank`. Phase 1 bounds each (query,
+    * input-partition) to k candidates so the final single-key window never
+    * sees more than #partitions·k rows.
+    *
+    * A null (zero-norm) or NaN score is dropped before ranking: desc sorts
+    * NaN above every real, so one degenerate vector would occupy a top-k
+    * slot for EVERY query (radius/threshold paths are naturally safe:
+    * NaN ≥ t fails under safeCos).
+    */
+  private def topKCut(scored: DataFrame, score: String, k: Int, rank: String): DataFrame = {
     val perPart = Window.partitionBy(col("query_id"), col("pid"))
-      .orderBy(desc("cos"), col("neighbor_id"))
-    val global = Window.partitionBy("query_id").orderBy(desc("cos"), col("neighbor_id"))
-    pairs
-      // a zero-norm embedding (failed encoder output) makes cos = 0/0 =
-      // NaN, and desc sorts NaN above every real — one degenerate vector
-      // would occupy a top-k slot for EVERY query. Drop it from ranking
-      // (radius/threshold paths are naturally safe: NaN ≥ t is false).
-      .filter(col("cos").isNotNull && !isnan(col("cos")))
+      .orderBy(desc(score), col("neighbor_id"))
+    val global = Window.partitionBy("query_id").orderBy(desc(score), col("neighbor_id"))
+    scored
+      .filter(col(score).isNotNull && !isnan(col(score)))
       .withColumn("pid", spark_partition_id())
       .withColumn("prank", row_number().over(perPart))
       .filter(col("prank") <= k)
       .drop("pid", "prank")
-      .withColumn("rank", row_number().over(global))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
+      .withColumn(rank, row_number().over(global))
+      .filter(col(rank) <= k)
   }
+
+  /** (query_id, neighbor_id, cos, rank): the top-k of scored pairs. */
+  private def rankTopK(pairs: DataFrame, k: Int): DataFrame =
+    topKCut(pairs, "cos", k, "rank").select("query_id", "neighbor_id", "cos", "rank")
+
+  /** Every (query, corpus) pair but a vector with itself, exactly scored:
+    * queries broadcast, the corpus scanned map-only. */
+  private def allPairs(corpus: DataFrame, queries: DataFrame): DataFrame =
+    scorePairs(corpusFrame(corpus).crossJoin(broadcast(queryFrame(queries))),
+      pairCos().as("cos"))
 
   /** Brute-force cosine top-k: the (small) query set is broadcast against
     * the full corpus. Returns (query_id, neighbor_id, cos, rank).
     */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      .withColumn("qn", l2Norm(col("qe")))
-    // DELIBERATELY not spread (r18 A/B): the dot-product kernel over this
-    // corpus is too light to pay for a round-robin exchange — with
-    // Guards.spread here sim_knn_brute measured 0.66 s vs 0.46 s warm
-    // (and sim_retrieve/sim_mmr/ir_ndcg_eval ride this function). The
-    // one-split serialization is accepted for the scoring pass.
-    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"))
-      .withColumn("nn", l2Norm(col("ne")))
-    val pairs = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        safeCos(dot(col("qe"), col("ne")), col("qn"), col("nn")).as("cos"))
-    rankTopK(pairs, k)
-  }
+  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    rankTopK(allPairs(corpus, queries), k)
 
   /** Radius (range) similarity search: ALL corpus vectors with cosine ≥
     * minCos of each query — the fixed-threshold complement of top-k (top-k
@@ -110,26 +181,17 @@ object Similarity {
     * non-matches never leave the partition. No ranking state at all —
     * unlike top-k there is no per-query buffer to bound.
     */
-  def radiusSearch(corpus: DataFrame, queries: DataFrame, minCos: Double): DataFrame = {
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      .withColumn("qn", l2Norm(col("qe")))
-    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"))
-      .withColumn("nn", l2Norm(col("ne")))
-    c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        safeCos(dot(col("qe"), col("ne")), col("qn"), col("nn")).as("cos"))
-      .filter(col("cos") >= minCos)
-  }
+  def radiusSearch(corpus: DataFrame, queries: DataFrame, minCos: Double): DataFrame =
+    allPairs(corpus, queries).filter(col("cos") >= minCos)
 
   /** Deterministic random-hyperplane LSH bucket keys (one per table). */
   def lshBuckets(vec: Column, tables: Int, bits: Int): Column =
     NativeExpressions.hyperplaneBuckets(vec, tables, bits)
 
-  /** LSH-bucketed approximate nearest neighbors: candidate (query, corpus)
-    * id pairs share at least one table bucket; exact cosine + top-k runs on
-    * candidates only. Recall grows with `tables`, cost with bucket
-    * occupancy (2^bits buckets per table).
+  /** LSH-bucketed approximate nearest neighbors over [[LshTables]] tables:
+    * candidate (query, corpus) id pairs share at least one table bucket;
+    * exact cosine + top-k runs on candidates only. Recall grows with the
+    * table count, cost with bucket occupancy (2^bits buckets per table).
     *
     * `probes` enables MULTI-PROBE LSH (Lv et al., VLDB'07): each query also
     * probes every bucket whose key is within Hamming distance `probes` of
@@ -140,12 +202,12 @@ object Similarity {
     * absorbs the probe fan-out. The alternative — shrinking `bits` until
     * single-probe recall is acceptable — inflates every corpus bucket to
     * n/2^bits and blows up the candidate join quadratically at 100 TB.
-    * Measured on sf0.01 (RecallGateSpec): tables=8, bits=8, probes=2 →
+    * Measured on sf0.01 (RecallGateSpec): bits=8, probes=2 →
     * recall@5 = 1.00 vs brute force; single-probe at the same table/bit
     * budget measures 0.16.
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              tables: Int = 4, bits: Int = 8, probes: Int = 0): DataFrame = {
+              bits: Int = 8, probes: Int = 0): DataFrame = {
     // 1 << bits wraps at 31 (Int shift is mod 32): bits=31 enumerates an
     // EMPTY mask set (probing silently returns nothing) and bits>=32
     // silently disables multi-probe — the simhash blocking guards its
@@ -155,7 +217,7 @@ object Similarity {
       s"lshTopK: bits=$bits out of range 1..30 (mask enumeration wraps at 31)")
     def banded(df: DataFrame, idAs: String): DataFrame =
       df.select(col("vec_id").as(idAs),
-        posexplode(lshBuckets(col("embedding"), tables, bits)).as(Seq("t", "bk")))
+        posexplode(lshBuckets(col("embedding"), LshTables, bits)).as(Seq("t", "bk")))
 
     // All bucket-key perturbation masks with ≤ `probes` bits flipped.
     val masks = (0 until (1 << bits)).filter(Integer.bitCount(_) <= probes)
@@ -170,82 +232,36 @@ object Similarity {
     // gate caught the planner electing to broadcast it. With the
     // boundary, AQE sizes the runtime rows (broadcast only if truly
     // small); AQE-off pins sort-merge.
-    def bound(df: DataFrame) =
-      graft.operators.Guards.stageBound(df, col("t"), col("bk"))
+    def bound(df: DataFrame) = Guards.stageBound(df, col("t"), col("bk"))
     val cands = bound(probed)
       .join(bound(banded(corpus, "neighbor_id")), Seq("t", "bk"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "neighbor_id")
       .distinct() // narrow: two longs per row
 
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      .withColumn("qn", l2Norm(col("qe")))
-    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"))
-      .withColumn("nn", l2Norm(col("ne")))
     val pairs = cands
-      .join(broadcast(q), "query_id")
-      .join(c, "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        safeCos(dot(col("qe"), col("ne")), col("qn"), col("nn")).as("cos"))
+      .join(broadcast(queryFrame(queries)), "query_id")
+      .join(corpusFrame(corpus), "neighbor_id")
+      .select(col("query_id"), col("neighbor_id"), pairCos().as("cos"))
     rankTopK(pairs, k)
   }
 
-  /** Deterministic IVF training: `lloydIters` rounds of Lloyd's k-means,
-    * seeded from the first `nCentroids` corpus vectors (by vec_id). Fully
-    * reproducible cross-engine — every float op has a fixed order:
-    *   - assignment: nearest centroid by cosine, ties broken by centroid
-    *     index (the [[NativeExpressions.NearestCentroids]] order);
-    *   - update: per-(cell, dim) mean computed as a LEFT FOLD over members
-    *     in vec_id order (sort_array(collect_list) + aggregate), because a
-    *     parallel sum's combine order is nondeterministic in the last ulp
-    *     and a 1-ulp flip near a cell boundary would silently change
-    *     candidate sets vs the oracle;
-    *   - the double mean is rounded to float (IEEE round-to-nearest, same
-    *     on both engines); an emptied cell keeps its previous centroid.
-    * Each round is one distributed pass; only nCentroids×dim (cell, d, mu)
-    * aggregate rows come back to the driver — bounded by the centroid
-    * matrix size, like the seed collect. At 100 TB the ordered fold per
-    * cell is the one non-scalable piece of THIS trainer (it materializes
-    * each cell's member list on one task), so the train-set size is a
-    * MECHANICAL contract, not a scaladoc plea (r11): above `maxTrainRows`
-    * the trainer deterministically subsamples via [[cappedTrain]] — the
-    * 1-in-m set keyed on the cross-engine md5 hash of vec_id, m =
-    * ceil(n / maxTrainRows) — so per-cell member lists stay bounded by
-    * the cap for ANY caller, and IVF centroids need only a representative
-    * sketch of the distribution. The hash filter replays in the Lloyd
-    * oracle CTEs (a scalar-subquery `m` over the same count + the same
-    * md5 derivation a18b's oracle proves cross-engine), so a capped train
-    * run stays hash-checkable; at the registered corpora m = 1 and the
-    * filter is a no-op.
-    */
+  /** Train-set cap of the Lloyd trainer, per call: above it the trainer
+    * deterministically subsamples via [[cappedTrain]]. */
   val MaxTrainRows: Long = 1L << 18 // 262144 ≈ tens of MB of member lists per cell worst-case
 
-  /** Deterministic 1-in-m train sample above `maxTrainRows`, shared by
-    * both Lloyd trainers. Keyed on md5Hash60(vec_id) — the repo's
-    * ANSI-replayable hash — NOT a bare `vec_id % m`: every registered
-    * caller already pre-samples with its own `vec_id % 2`, and a
-    * modulus-on-modulus compose keeps 2/m of the rows whenever m is even
-    * (2× the cap), while an adversarial id stride (all ids multiples of
-    * m) keeps EVERYTHING. Hashing decorrelates the sample from any id
-    * pattern, so the expected train size is n/m ≤ cap for every caller.
-    */
-  /** Vectors with a NULL or empty embedding are ABSENT — the rows a
-    * failed embedding job ships. The Lloyd pipelines exclude them from
-    * training, assignment, clustering, and querying (they carry no
-    * geometry to assign); before r11 a null embedding landing in the
-    * seed window crashed the trainer's driver-side collect with an NPE.
-    * Mirrored in the oracles' `vecs` CTE.
-    */
   /** A vector is PRESENT when non-null, non-empty, and every component is
-    * finite (r16, fuzz find): a single ±Inf component drives Lloyd
-    * centroid means to Inf/NaN, and from there every trained structure
-    * (IVF cells, PQ codebooks, kmeans stats, SemDeDup clusters) diverges
-    * between engines on NaN-ordering details. The scoring paths already
-    * excluded such vectors implicitly — an Inf-normed vector's cosine is
-    * always NaN, caught by the rankTopK NaN filter — so this guard only
-    * makes the trained family's exclusion EXPLICIT and identical on both
+    * finite. The rows a failed embedding job ships (NULL or empty) carry no
+    * geometry; before r11 a null embedding landing in the seed window
+    * crashed the trainer's driver-side collect with an NPE. A single ±Inf
+    * component (r16, fuzz find) drives Lloyd centroid means to Inf/NaN, and
+    * from there every trained structure (IVF cells, PQ codebooks, kmeans
+    * stats, SemDeDup clusters) diverges between engines on NaN-ordering
+    * details. The trained family excludes non-present vectors from
+    * training, assignment, clustering and querying, identically on both
     * engines (the oracle's `vecs` CTE carries the matching list_filter).
-    * Degenerate embeddings never train and never match, by contract.
+    * The scoring paths exclude them implicitly — an Inf-normed vector's
+    * cosine is always NaN, caught by the topKCut NaN filter.
     */
   private def presentVecs(df: DataFrame): DataFrame =
     // x.isNull leads DELIBERATELY (r16 review): without it a NULL
@@ -258,6 +274,24 @@ object Similarity {
       !exists(col("embedding"), x =>
         x.isNull || isnan(x) || abs(x) === lit(Float.PositiveInfinity)))
 
+  /** The 1-in-[[TrainModulus]] train sample of present vectors (replayed
+    * by the oracles' `cappedTrainSql`). */
+  private def trainSample(present: DataFrame): DataFrame =
+    present.filter(pmod(col("vec_id"), lit(TrainModulus)) === 0)
+
+  /** Deterministic 1-in-m train sample above `maxTrainRows`, m =
+    * ceil(n / maxTrainRows), so per-cell member lists stay bounded by the
+    * cap for ANY caller. Keyed on md5Hash60(vec_id) — the repo's
+    * ANSI-replayable hash — NOT a bare `vec_id % m`: the registered train
+    * sets are already the vec_id % [[TrainModulus]] sample, and a modulus
+    * on top of a modulus keeps TrainModulus/m of the rows whenever m is a
+    * multiple of it (2× the cap), while an adversarial id stride (all ids
+    * multiples of m) keeps EVERYTHING. Hashing decorrelates the sample from
+    * any id pattern, so the expected train size is n/m ≤ cap. The Lloyd
+    * oracle CTEs replay it (a scalar-subquery m over the same count + the
+    * same md5 derivation a18b's oracle proves cross-engine); at the
+    * registered corpora m = 1 and the filter is a no-op.
+    */
   private def cappedTrain(corpus: DataFrame, maxTrainRows: Long): DataFrame = {
     // Cheap upper-bound probe before the exact count: CollectLimit reads
     // partitions incrementally, so when the corpus is under the cap (every
@@ -285,41 +319,74 @@ object Similarity {
     }
   }
 
-  def ivfCentroids(corpus: DataFrame, nCentroids: Int, lloydIters: Int,
-                   maxTrainRows: Long = MaxTrainRows): Array[Array[Float]] = {
+  /** The one Lloyd trainer behind IVF, k-means, SemDeDup and PQ: `iters`
+    * rounds of Lloyd's k-means over the capped train set, seeded from its
+    * first `k` vectors by vec_id. `split` = None trains whole vectors,
+    * grouped by `cell`; Some((m, sub)) trains the m sub-vector slices of
+    * width `sub` together, grouped by (j, cell), each vector's slices
+    * exploded once per subspace. Every float op has a fixed order, so the
+    * result is reproducible cross-engine:
+    *   - assignment: nearest centroid by cosine, ties broken by centroid
+    *     index (the [[NativeExpressions.NearestCentroids]] order);
+    *   - update: per group the vec_id-ordered `zip_with` fold of member
+    *     vectors — per dimension the chain 0.0 + x₁ + x₂ + … in vec_id
+    *     order — divided by the member count, rounded to float (IEEE
+    *     round-to-nearest, same on both engines); an emptied cell keeps its
+    *     centroid. A parallel sum's combine order is nondeterministic in
+    *     the last ulp, and a 1-ulp flip near a cell boundary would silently
+    *     change candidate sets vs the oracle.
+    * Because the per-dimension chain is the same, PQ's codebook j is
+    * bit-identical to [[ivfCentroids]] on slice j (SimilaritySpec checks
+    * it), and the oracle replays PQ as `lloydCteSql` once per subspace.
+    *
+    * Each round is ONE distributed aggregate and ONE collect of k·groups
+    * rows — bounded by the centroid matrix, like the seed collect. Training
+    * PQ's m codebooks together instead of m [[ivfCentroids]] runs saves
+    * m × 2 driver-coordinated jobs (measured 7.8 s vs 1.8 s for the m=16
+    * registry config at sf0.1; job launch overhead, not data, was the
+    * cost). Vectors are folded whole, never exploded per dimension: a
+    * posexplode before the assignment projection made Catalyst's collapsed
+    * Project evaluate the interpreted NearestCentroids kernel once per
+    * (row, dim) instead of once per row — at auto-k (√n centroids) that
+    * hidden dim× amplification was ~50 s of a 53 s x10 run. At 100 TB the
+    * ordered fold per cell is the one non-scalable piece (it materializes
+    * each cell's member list on one task), so the train-set size is a
+    * MECHANICAL contract: [[cappedTrain]] bounds it for any caller.
+    */
+  private def lloyd(corpus: DataFrame, k: Int, iters: Int, maxTrainRows: Long,
+                    split: Option[(Int, Int)]): Array[Array[Array[Float]]] = {
     val train = cappedTrain(corpus, maxTrainRows)
-    var cents: Array[Array[Float]] = train.orderBy("vec_id")
-      .select("embedding").limit(nCentroids)
+    val seed = train.orderBy("vec_id").select("embedding").limit(k)
       .collect().map(_.getSeq[Float](0).toArray)
-    for (_ <- 0 until lloydIters) {
-      // Update step aggregates WHOLE vectors per cell (vector-sum fold in
-      // vec_id order via zip_with — per dim this is the identical
-      // add-in-member-order chain as the oracle's per-(cell, d) fold, so
-      // the doubles are bit-equal). The earlier posexplode formulation
-      // multiplied every row by `dim` BEFORE the assignment projection, so
-      // Catalyst's collapsed Project evaluated the interpreted
-      // NearestCentroids kernel once per (row, dim) instead of once per
-      // row — at auto-k (√n centroids) that hidden dim× amplification was
-      // ~50 s of a 53 s x10 run.
+    var cents = split.fold(Array(seed)) { case (m, sub) =>
+      Array.tabulate(m)(j => seed.map(_.slice(j * sub, (j + 1) * sub)))
+    }
+    for (_ <- 0 until iters) {
+      val (keys, members) = split match {
+        case None => (Seq(col("cell")), train.select(col("vec_id"),
+          nearestCell(col("embedding"), cents(0)).as("cell"), col("embedding")))
+        case Some((m, sub)) => (Seq(col("j"), col("cell")), train.select(col("vec_id"),
+          explode(array((0 until m).map { j =>
+            val x = subVec(col("embedding"), j, sub)
+            struct(lit(j).as("j"), nearestCell(x, cents(j)).as("cell"), x.as("embedding"))
+          }: _*)).as("s")).select(col("vec_id"), col("s.*")))
+      }
       val zeroVec = transform(element_at(col("xs"), 1).getField("embedding"),
         _ => lit(0.0))
-      val means = train.select(col("vec_id"),
-          element_at(NativeExpressions.nearestCentroids(col("embedding"), cents, 1), 1).as("cell"),
-          col("embedding"))
-        .groupBy(col("cell"))
+      val means = members
+        .groupBy(keys: _*)
         .agg(count(lit(1)).as("n"),
           sort_array(collect_list(struct(col("vec_id"), col("embedding")))).as("xs"))
-        .select(col("cell"),
-          transform(
+        .select(keys :+ transform(
             aggregate(col("xs"), zeroVec,
               (acc, s) => zip_with(acc, s.getField("embedding"),
                 (a, x) => a + x.cast("double"))),
-            v => v / col("n")).as("mu"))
+            v => v / col("n")).as("mu"): _*)
         .collect()
-      val next = cents.map(_.clone())
+      val next = cents.map(_.map(_.clone()))
       means.foreach { r =>
-        val mu = r.getSeq[Double](1)
-        val c = next(r.getInt(0))
+        val c = next(if (split.isEmpty) 0 else r.getInt(0))(r.getInt(keys.length - 1))
+        val mu = r.getSeq[Double](keys.length)
         var d = 0
         while (d < c.length) { c(d) = mu(d).toFloat; d += 1 }
       }
@@ -328,56 +395,51 @@ object Similarity {
     cents
   }
 
+  /** `nCentroids` coarse centroids by the [[lloyd]] trainer on whole
+    * vectors of `corpus` (the train set as given; `maxTrainRows` is for
+    * the cap test). */
+  def ivfCentroids(corpus: DataFrame, nCentroids: Int, lloydIters: Int,
+                   maxTrainRows: Long = MaxTrainRows): Array[Array[Float]] =
+    lloyd(corpus, nCentroids, lloydIters, maxTrainRows, None)(0)
+
+  /** All m per-subspace PQ codebooks of `codesPerSub` codes, trained
+    * together by the [[lloyd]] trainer on the sub-vector slices of
+    * `corpus` (the train set as given). */
+  def pqCodebooks(corpus: DataFrame, dim: Int, m: Int, codesPerSub: Int,
+                  lloydIters: Int,
+                  maxTrainRows: Long = MaxTrainRows): Array[Array[Array[Float]]] =
+    lloyd(corpus, codesPerSub, lloydIters, maxTrainRows, Some((m, dim / m)))
+
   /** IVF (inverted-file) approximate nearest neighbors — the classic
-    * coarse-quantizer scale path. Centroids come from the deterministic
-    * [[ivfCentroids]] k-means trainer. Every corpus vector is
-    * assigned to its nearest centroid in ONE map-only pass (the centroid
-    * matrix rides inside the native [[NativeExpressions.NearestCentroids]]
-    * expression — no join, no shuffle of embeddings); a query probes its
-    * `nProbe` nearest cells and ranks only those cells' vectors. At 100 TB:
-    * the corpus is hash-partitioned by cell once, queries broadcast.
+    * coarse-quantizer scale path. Centroids come from [[ivfCentroids]]
+    * ([[IvfLloydIters]] rounds on the [[trainSample]]). Every corpus vector
+    * is assigned to its nearest centroid in ONE map-only pass (the
+    * centroid matrix rides inside the native
+    * [[NativeExpressions.NearestCentroids]] expression — no join, no
+    * shuffle of embeddings); a query probes its `nProbe` nearest cells and
+    * ranks only those cells' vectors. At 100 TB: the corpus is
+    * hash-partitioned by cell once, queries broadcast.
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              nCentroids: Int = 16, nProbe: Int = 4, lloydIters: Int = 2,
-              trainModulus: Int = 1): DataFrame = {
-    // trainModulus > 1 trains the coarse quantizer on the deterministic
-    // 1-in-m sample vec_id % m == 0 — centroids need only a representative
-    // sketch of the distribution, and the trainer's ordered-fold pass is
-    // the one corpus-proportional stage (measured 6.3x at a 10x scale-up
-    // when training on everything). Sampling is the production default at
-    // scale; every vector is still ASSIGNED to a cell.
+              nCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
     val corpus0 = presentVecs(corpus)
     val queries0 = presentVecs(queries)
-    val trainSet =
-      if (trainModulus > 1) corpus0.filter(pmod(col("vec_id"), lit(trainModulus)) === 0)
-      else corpus0
-    val cents = ivfCentroids(trainSet, nCentroids, lloydIters)
-
-    val c = graft.operators.Guards.spread(
-        corpus0.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne")))
-      .withColumn("cell",
-        element_at(NativeExpressions.nearestCentroids(col("ne"), cents, 1), 1))
-      .withColumn("nn", l2Norm(col("ne")))
-    val q = queries0.select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      .withColumn("qn", l2Norm(col("qe")))
+    val cents = ivfCentroids(trainSample(corpus0), nCentroids, IvfLloydIters)
+    val q = queryFrame(queries0)
       .select(col("query_id"), col("qe"), col("qn"),
         explode(NativeExpressions.nearestCentroids(col("qe"), cents, nProbe)).as("cell"))
-
-    val pairs = c.join(broadcast(q), "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        safeCos(dot(col("qe"), col("ne")), col("qn"), col("nn")).as("cos"))
-    rankTopK(pairs, k)
+    rankTopK(scorePairs(corpusFrame(corpus0, Some(cents)).join(broadcast(q), "cell"),
+      pairCos().as("cos")), k)
   }
 
   /** Product-quantization ANN (Jégou et al., PAMI'11) — the compressed-
     * domain scale path for similarity search. The vector space is split
     * into `m` subspaces; each subspace gets its own `codesPerSub`-centroid
-    * codebook from the same deterministic sampled-Lloyd trainer as IVF
-    * ([[ivfCentroids]] on the sub-sliced sample), and every corpus vector
-    * is ENCODED as m small codes in one map-only pass (codebooks ride
-    * inside the native nearest-centroid expression — no join). Scoring is
-    * two-stage retrieval:
+    * codebook from [[pqCodebooks]] ([[PqLloydIters]] rounds on the
+    * [[trainSample]]), and every corpus vector is ENCODED as m small codes
+    * in one map-only pass (codebooks ride inside the native
+    * nearest-centroid expression — no join). Scoring is two-stage
+    * retrieval:
     *   1. ADC shortlist: approximate cosine against the RECONSTRUCTED
     *      vector — dot(q, recon(x)) = Σ_j dot(q_subj, codebook_j[code_j]),
     *      recon norm = sqrt(Σ_j ||codebook_j[code_j]||²) — computed from
@@ -385,91 +447,36 @@ object Similarity {
     *      is DROPPED before this join: at 100 TB the scoring pass touches
     *      m ints per vector instead of `dim` floats (the entire point of
     *      PQ — the code table is ~60× smaller than the embeddings).
-    *   2. Exact re-rank: only the shortlist (shortlistFactor·k ids per
+    *   2. Exact re-rank: only the shortlist ([[ShortlistFactor]]·k ids per
     *      query) joins back to the embeddings — a broadcast-hash point
     *      lookup, never an embedding shuffle.
     * Every float op has a fixed order (left folds, left-assoc Σ_j chains),
     * so the full pipeline — training, encoding, ADC, re-rank — is
     * re-derivable in ANSI SQL and hash-compared by the oracle.
     */
-  /** All m per-subspace PQ codebooks trained TOGETHER: one ordered seed
-    * collect (sliced driver-side) plus ONE distributed aggregate per Lloyd
-    * round, instead of m independent [[ivfCentroids]] runs (m × 2 driver-
-    * coordinated jobs — measured 7.8 s vs 1.8 s for the m=16 registry
-    * config at sf0.1; job launch overhead, not data, was the cost). The
-    * arithmetic is bit-identical to the per-subspace trainer: assignment
-    * by the same nearest-centroid kernel on each slice, per-(subspace,
-    * cell, dim) means as the same vec_id-ordered left fold, means rounded
-    * to float, emptied cells keep their centroid — so the SQL oracle
-    * replays per-subspace chains unchanged.
-    */
-  def pqCodebooks(corpus: DataFrame, dim: Int, m: Int, codesPerSub: Int,
-                  lloydIters: Int,
-                  maxTrainRows: Long = MaxTrainRows): Array[Array[Array[Float]]] = {
-    val sub = dim / m
-    // same mechanical train-set cap as [[ivfCentroids]] — the per-(j,
-    // cell, dd) member lists here are the identical risk class
-    val train = cappedTrain(corpus, maxTrainRows)
-    val seed = train.orderBy("vec_id").select("embedding").limit(codesPerSub)
-      .collect().map(_.getSeq[Float](0).toArray)
-    var books: Array[Array[Array[Float]]] =
-      Array.tabulate(m)(j => seed.map(_.slice(j * sub, (j + 1) * sub)))
-    for (_ <- 0 until lloydIters) {
-      val cellCols = (0 until m).map(j => element_at(
-        NativeExpressions.nearestCentroids(
-          slice(col("embedding"), j * sub + 1, sub), books(j), 1), 1).as(s"c$j"))
-      val means = train
-        .select(col("vec_id") +: col("embedding") +: cellCols: _*)
-        .select((col("vec_id") +: (0 until m).map(j => col(s"c$j"))) :+
-          posexplode(col("embedding")).as(Seq("d", "x")): _*)
-        .select(col("vec_id"), col("x"),
-          (col("d") / sub).cast("int").as("j"),
-          pmod(col("d"), lit(sub)).as("dd"),
-          element_at(array((0 until m).map(j => col(s"c$j")): _*),
-            (col("d") / sub).cast("int") + 1).as("cell"))
-        .groupBy(col("j"), col("cell"), col("dd"))
-        .agg(sort_array(collect_list(struct(col("vec_id"), col("x")))).as("xs"))
-        .select(col("j"), col("cell"), col("dd"),
-          (aggregate(col("xs"), lit(0.0),
-            (acc, s) => acc + s.getField("x").cast("double")) / size(col("xs"))).as("mu"))
-        .collect() // bounded: m × codesPerSub × sub rows (the codebook size)
-      val next = books.map(_.map(_.clone()))
-      means.foreach(r => next(r.getInt(0))(r.getInt(1))(r.getInt(2)) = r.getDouble(3).toFloat)
-      books = next
-    }
-    books
-  }
-
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
-             m: Int, codesPerSub: Int, lloydIters: Int = 1,
-             trainModulus: Int = 1, shortlistFactor: Int = 2): DataFrame = {
+             m: Int, codesPerSub: Int): DataFrame = {
     require(dim % m == 0, s"dim $dim not divisible by $m subspaces")
     val sub = dim / m
     val corpus0 = presentVecs(corpus)
     val queries0 = presentVecs(queries)
-    val trainSet =
-      if (trainModulus > 1) corpus0.filter(pmod(col("vec_id"), lit(trainModulus)) === 0)
-      else corpus0
     // m bounded driver-side artifacts (codesPerSub × sub floats each),
     // same budget class as the IVF centroid collect.
-    val codebooks: Array[Array[Array[Float]]] =
-      pqCodebooks(trainSet, dim, m, codesPerSub, lloydIters)
+    val codebooks = pqCodebooks(trainSample(corpus0), dim, m, codesPerSub, PqLloydIters)
     // per-code squared reconstruction norms — the same left fold over the
     // same floats the oracle derives from its replayed codebooks
     val sqn: Array[Array[Double]] =
       codebooks.map(_.map(_.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble)))
 
     // Encode: one map-only pass; embedding column does not survive it.
-    val codes = graft.operators.Guards.spread(corpus0).select(
+    val codes = Guards.spread(corpus0).select(
       col("vec_id").as("neighbor_id") +:
-        (0 until m).map(j => element_at(
-          NativeExpressions.nearestCentroids(
-            slice(col("embedding"), j * sub + 1, sub), codebooks(j), 1), 1).as(s"c$j")): _*)
+        (0 until m).map(j =>
+          nearestCell(subVec(col("embedding"), j, sub), codebooks(j)).as(s"c$j")): _*)
       .withColumn("rnorm", sqrt((0 until m).map(j =>
         element_at(typedLit(sqn(j).toSeq), col(s"c$j") + 1)).reduce(_ + _)))
 
-    val q = queries0.select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      .withColumn("qn", l2Norm(col("qe")))
+    val q = queryFrame(queries0)
 
     // ADC lookup tables, built ONCE PER QUERY on the broadcast side (r17):
     // lut_j[c] = dot(qe[j·sub+1 : (j+1)·sub], codebook_j[c]) — the classic
@@ -480,60 +487,35 @@ object Similarity {
     // computed, and the Σ_j stays the same left-assoc double chain.
     val qLut = q.select(col("query_id") +: col("qn") +: (0 until m).map { j =>
       array((0 until codesPerSub).map(c =>
-        dot(slice(col("qe"), j * sub + 1, sub),
-          typedLit(codebooks(j)(c).toSeq))): _*).as(s"lut$j")
+        dot(subVec(col("qe"), j, sub), typedLit(codebooks(j)(c).toSeq))): _*).as(s"lut$j")
     }: _*)
 
     // ADC: left-assoc Σ_j of per-(query, subspace, code) table lookups.
     val adcDot = (0 until m).map(j =>
       element_at(col(s"lut$j"), col(s"c$j") + 1)).reduce(_ + _)
-    val scored = codes.crossJoin(broadcast(qLut))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        safeCos(adcDot, col("qn"), col("rnorm")).as("adc_cos"))
-
-    // Shortlist by ADC with the same two-phase window bound as rankTopK,
-    // then exact re-rank — shared with sq8TopK.
-    shortlistRerank(scored, corpus0, q, "adc_cos", k, shortlistFactor * k)
+    val scored = scorePairs(codes.crossJoin(broadcast(qLut)),
+      safeCos(adcDot, col("qn"), col("rnorm")).as("adc_cos"))
+    shortlistRerank(scored, corpus0, q, "adc_cos", k)
   }
 
   /** The approximate-score → exact-cosine tail shared by [[pqTopK]] and
-    * [[sq8TopK]]: two-phase windowed shortlist (per-partition pre-cut, then
-    * global cut — never a global sort of all scores), exact re-rank by
+    * [[sq8TopK]]: the [[topKCut]] shortlist of [[ShortlistFactor]]·k ids
+    * per query (never a global sort of all scores), then exact re-rank by
     * broadcasting the tiny shortlist INTO the embeddings scan (map-side
     * hash probe — embeddings are never shuffled). One definition so a
     * guard/tie-break fix lands in both ANN paths at once.
     *
-    * `scored` must carry (query_id, neighbor_id, `scoreCol`); `q` must
-    * carry (query_id, qe, qn).
+    * `scored` must carry (query_id, neighbor_id, `scoreCol`); `q` is the
+    * [[queryFrame]].
     */
   private def shortlistRerank(scored: DataFrame, corpus: DataFrame, q: DataFrame,
-                              scoreCol: String, k: Int, sl: Int): DataFrame = {
-    val perPart = Window.partitionBy(col("query_id"), col("pid"))
-      .orderBy(desc(scoreCol), col("neighbor_id"))
-    val global = Window.partitionBy("query_id").orderBy(desc(scoreCol), col("neighbor_id"))
-    val shortlist = scored
-      // same guard as rankTopK (its comment is load-bearing): a NaN score
-      // (NaN floats in a vector) sorts above every real under desc and
-      // would occupy shortlist slots for EVERY query; null (zero norm)
-      // is excluded for symmetry with the other top-k paths
-      .filter(col(scoreCol).isNotNull && !isnan(col(scoreCol)))
-      .withColumn("pid", spark_partition_id())
-      .withColumn("prank", row_number().over(perPart))
-      .filter(col("prank") <= sl)
-      .drop("pid", "prank")
-      .withColumn("srank", row_number().over(global))
-      .filter(col("srank") <= sl)
-      .drop("srank")
-
-    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"))
-      .withColumn("nn", l2Norm(col("ne")))
+                              scoreCol: String, k: Int): DataFrame = {
+    val shortlist = topKCut(scored, scoreCol, ShortlistFactor * k, "srank").drop("srank")
     val rerank = Window.partitionBy("query_id").orderBy(desc("cos"), col("neighbor_id"))
-    c.join(broadcast(shortlist), "neighbor_id")
+    corpusFrame(corpus).join(broadcast(shortlist), "neighbor_id")
       .join(broadcast(q), "query_id")
-      .select(col("query_id"), col("neighbor_id"), col(scoreCol),
-        safeCos(dot(col("qe"), col("ne")), col("qn"), col("nn")).as("cos"))
-      .filter(col("cos").isNotNull && !isnan(col("cos"))) // as in rankTopK
+      .select(col("query_id"), col("neighbor_id"), col(scoreCol), pairCos().as("cos"))
+      .filter(col("cos").isNotNull && !isnan(col("cos"))) // as in topKCut
       .withColumn("rank", row_number().over(rerank))
       .filter(col("rank") <= k)
       .select("query_id", "neighbor_id", scoreCol, "cos", "rank")
@@ -544,28 +526,22 @@ object Similarity {
     * mean cohesion), built on the same deterministic trainer as IVF so it
     * gets a full cross-engine oracle.
     *
-    * Scale shape: training reads the 1-in-`trainModulus` sample (like
-    * [[ivfTopK]]); assignment is ONE map-only pass with the centroid matrix
-    * riding inside the native expression (no join, no embedding shuffle);
-    * the stats aggregate reduces to nCentroids rows. The per-cell mean
-    * cosine uses an ordered fold over members (same rationale as the
-    * trainer: a parallel double sum's combine order is nondeterministic in
-    * the last ulp, and the oracle hash-compares exact values) — at 100 TB
-    * you'd trade the bit-exact fold for a plain avg and compare with an
-    * epsilon instead.
+    * Scale shape: training reads the [[trainSample]] (like [[ivfTopK]]);
+    * assignment is ONE map-only pass with the centroid matrix riding inside
+    * the native expression (no join, no embedding shuffle); the stats
+    * aggregate reduces to nCentroids rows. The per-cell mean cosine uses an
+    * ordered fold over members (same rationale as the trainer: a parallel
+    * double sum's combine order is nondeterministic in the last ulp, and
+    * the oracle hash-compares exact values) — at 100 TB you'd trade the
+    * bit-exact fold for a plain avg and compare with an epsilon instead.
     */
-  def kmeansClusterStats(corpus: DataFrame, nCentroids: Int, lloydIters: Int,
-                         trainModulus: Int = 1): DataFrame = {
+  def kmeansClusterStats(corpus: DataFrame, nCentroids: Int, lloydIters: Int): DataFrame = {
     val corpus0 = presentVecs(corpus)
-    val trainSet =
-      if (trainModulus > 1) corpus0.filter(pmod(col("vec_id"), lit(trainModulus)) === 0)
-      else corpus0
-    val cents = ivfCentroids(trainSet, nCentroids, lloydIters)
+    val cents = ivfCentroids(trainSample(corpus0), nCentroids, lloydIters)
     val centsLit = typedLit(cents.map(_.toSeq).toSeq)
 
-    graft.operators.Guards.spread(corpus0)
-      .select(col("vec_id"), col("embedding"),
-        element_at(NativeExpressions.nearestCentroids(col("embedding"), cents, 1), 1).as("cell"))
+    Guards.spread(corpus0)
+      .select(col("vec_id"), col("embedding"), nearestCell(col("embedding"), cents).as("cell"))
       .withColumn("ce", element_at(centsLit, col("cell") + 1))
       // safeCos, not a bare division: one zero-norm member would kill the
       // whole query under ANSI (a null cos instead nulls that cell's
@@ -590,21 +566,28 @@ object Similarity {
     * Only within-cluster pairs are compared — that bound is the entire
     * scale story: the pair join is co-partitioned by cell, per-cell cost
     * is |cell|², and cross-cluster near-dups are the accepted recall
-    * tradeoff of the method (raise nCentroids to shrink cells at scale).
-    * Output is (vec_id, cell, keep, pruned_by) — no float columns, so the
-    * hash is partitioning-proof; the threshold comparison itself uses the
-    * same ordered-fold cosine on both engines.
+    * tradeoff of the method. Output is (vec_id, cell, keep, pruned_by) —
+    * no float columns, so the hash is partitioning-proof; the threshold
+    * comparison itself uses the same ordered-fold cosine on both engines.
+    *
+    * The centroid count is derived FROM the corpus: k =
+    * max([[MinDedupCentroids]], ⌊√n⌋) over the n present vectors. With a
+    * fixed k, cells grow linearly with the corpus and the within-cell pair
+    * join goes n²/k; at k=√n the expected cell is √n members and total
+    * pair cost is n^1.5 — the method's scale knob, turned automatically so
+    * a 100× corpus doesn't need operator intervention. The derivation is
+    * one count job + integer-exact floor(sqrt(double)), replayed by the
+    * oracle as `greatest(16, cast(floor(sqrt(count(*))) as bigint))`.
+    * Driver-side state stays bounded: the trainer returns k·dim floats
+    * (√n·dim — at n=10⁹, dim=64 that is ~8 MB, broadcast inside the
+    * assignment kernel).
     */
-  def semanticDedup(corpus: DataFrame, nCentroids: Int, lloydIters: Int,
-                    trainModulus: Int, threshold: Double): DataFrame = {
+  def semanticDedup(corpus: DataFrame, lloydIters: Int, threshold: Double): DataFrame = {
     val corpus0 = presentVecs(corpus)
-    val trainSet =
-      if (trainModulus > 1) corpus0.filter(pmod(col("vec_id"), lit(trainModulus)) === 0)
-      else corpus0
-    val cents = ivfCentroids(trainSet, nCentroids, lloydIters)
-    val v = graft.operators.Guards.spread(corpus0)
-      .select(col("vec_id"), col("embedding"),
-        element_at(NativeExpressions.nearestCentroids(col("embedding"), cents, 1), 1).as("cell"))
+    val k = math.max(MinDedupCentroids, math.floor(math.sqrt(corpus0.count().toDouble)).toInt)
+    val cents = ivfCentroids(trainSample(corpus0), k, lloydIters)
+    val v = Guards.spread(corpus0)
+      .select(col("vec_id"), col("embedding"), nearestCell(col("embedding"), cents).as("cell"))
       .withColumn("nrm", l2Norm(col("embedding")))
     val pruned = v.as("a").join(v.as("b"),
         col("a.cell") === col("b.cell") && col("b.vec_id") < col("a.vec_id"))
@@ -619,29 +602,6 @@ object Similarity {
       .join(pruned, Seq("vec_id"), "left")
       .select(col("vec_id"), col("cell"),
         col("pruned_by").isNull.as("keep"), col("pruned_by"))
-  }
-
-  /** [[semanticDedup]] with the centroid count derived FROM the corpus:
-    * nCentroids = max(minCentroids, ⌊√n⌋). With fixed k, cells grow
-    * linearly with the corpus and the within-cell pair join goes n²/k;
-    * at k=√n the expected cell is √n members and total pair cost is
-    * n^1.5 — the method's documented scale knob, turned automatically so
-    * a 100× corpus doesn't need operator intervention. The derivation is
-    * one count job + integer-exact floor(sqrt(double)) — deterministic,
-    * so an oracle can replay it as
-    * `greatest(min, cast(floor(sqrt(count(*))) as bigint))`. Driver-side
-    * state stays bounded: the trainer returns k·dim floats (√n·dim — at
-    * n=10⁹, dim=64 that is ~8 MB, broadcast inside the assignment
-    * kernel).
-    */
-  def semanticDedupAuto(corpus: DataFrame, lloydIters: Int, trainModulus: Int,
-                        threshold: Double, minCentroids: Int = 16): DataFrame = {
-    // count PRESENT vectors — the population actually clustered — so the
-    // auto-k derivation matches the oracle's count over its vecs CTE
-    val c0 = presentVecs(corpus)
-    val n = c0.count()
-    val k = math.max(minCentroids, math.floor(math.sqrt(n.toDouble)).toInt)
-    semanticDedup(c0, k, lloydIters, trainModulus, threshold)
   }
 
   /** MMR-diversified top-k (Carbonell & Goldstein, SIGIR'98): rank an
@@ -703,11 +663,10 @@ object Similarity {
     * NaN components are excluded from min/max (Spark orders NaN above
     * every real — an unguarded max would poison the dimension's scale for
     * the whole corpus) and null out their vector's code array, so
-    * degenerate vectors drop out of ranking exactly as in [[rankTopK]].
+    * degenerate vectors drop out of ranking exactly as in [[topKCut]].
     * OOB-safe `get()` mirrors DuckDB's null-for-out-of-range list index.
     */
-  def sq8TopK(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
-              shortlistFactor: Int = 8): DataFrame = {
+  def sq8TopK(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int): DataFrame = {
     def finite(c: Column): Column = when(!isnan(c), c)
     // Per-dimension min/max via posexplode + a 64-group aggregate (r17):
     // the previous single-row form carried 2·dim aggregate buffer fields
@@ -753,19 +712,12 @@ object Similarity {
       when(x.isNotNull && !isnan(x), (mn + code * sc).cast("float"))
     })
 
-    val codes = graft.operators.Guards.spread(corpus)
+    val codes = Guards.spread(corpus)
       .select(col("vec_id").as("neighbor_id"), recon.as("re"))
       .withColumn("rnorm", l2Norm(col("re")))
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      .withColumn("qn", l2Norm(col("qe")))
-
-    val scored = codes.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        safeCos(dot(col("qe"), col("re")), col("qn"), col("rnorm")).as("sq_cos"))
-
-    // Shortlist + exact re-rank: the shared pq/sq8 tail, scored by sq_cos.
-    shortlistRerank(scored, corpus, q, "sq_cos", k, shortlistFactor * k)
+    val q = queryFrame(queries)
+    val scored = scorePairs(codes.crossJoin(broadcast(q)), pairCos("re", "rnorm").as("sq_cos"))
+    shortlistRerank(scored, corpus, q, "sq_cos", k)
   }
 
   /** Embedding-cosine near-duplicate pairs within a blocking key (e.g.
@@ -774,7 +726,7 @@ object Similarity {
     * dot product.
     */
   def nearDupPairs(vectors: DataFrame, blockCol: String, threshold: Double): DataFrame = {
-    val v = graft.operators.Guards.spread(
+    val v = Guards.spread(
         vectors.select(col("vec_id"), col(blockCol), col("embedding")))
       .withColumn("nrm", l2Norm(col("embedding")))
     v.as("a").join(v.as("b"),

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * This is the standard multi-dimensional clustering technique of
   * warehouse table formats, expressed as plain Spark: the z-value is a
   * pure codegen'd bit-twiddling Column (no kernel, no UDF), and the
-  * layout is `repartitionByRange` on it.
+  * layout is a shuffle into contiguous z-value ranges ([[zorderCluster]]).
   *
   * Layout changes WHERE rows land, never WHAT a query returns — the
   * `s13_zorder_scan` oracle runs the same predicate over the original
@@ -40,7 +40,7 @@ object Layout {
     *
     * Input DOMAIN caveat: `b`'s bit 31 lands on the z-value's bit 63 —
     * the sign bit of the LongType result — so for b ≥ 2³¹ the z-value is
-    * negative and the signed `repartitionByRange` splits the Morton curve
+    * negative and the signed z-value ranges split the Morton curve
     * at the sign boundary (results stay correct — pruning reads real
     * min/max — but one shard straddles far-apart boxes and prunes
     * poorly). Values above 32 bits are masked. For full-range uint32
@@ -52,13 +52,39 @@ object Layout {
   def zorder2(a: Column, b: Column): Column =
     spreadBits32(a).bitwiseOR(shiftleft(spreadBits32(b), 1))
 
-  /** Cluster `df` for 2-D zone-map pruning on (a, b): range-partition into
-    * `nShards` contiguous z-value ranges. Each output partition (= one
-    * docstore shard / one parquet file) covers a dyadic box in (a, b), so
-    * its per-column min/max are tight on both. One range shuffle — the
-    * same cost as any global sort-for-layout — paid once at write time,
-    * amortized over every pruned read after.
+  /** Cluster `df` for 2-D zone-map pruning on (a, b): split the z-value
+    * order into `nShards` contiguous ranges of about equal row count, one
+    * output partition each. Each output partition (= one docstore shard /
+    * one parquet file) covers a dyadic box in (a, b), so its per-column
+    * min/max are tight on both. One shuffle — the same cost as any global
+    * sort-for-layout — paid once at write time, amortized over every
+    * pruned read after.
+    *
+    * The range bounds come from EXACT row counts per z-prefix (the top
+    * [[PrefixBits]] significant bits: two small aggregates, at most 2^16
+    * groups), so the same rows always land in the same shards. Spark's
+    * `repartitionByRange` samples instead, seeded from the RDD id: the
+    * same data got other bounds depending on how many RDDs the session
+    * had made before, and `s13_zorder_scan` kept 6 or 7 of its 16 shards
+    * from one run to the next. Rows with a null z-value go to shard 0.
     */
-  def zorderCluster(df: DataFrame, a: Column, b: Column, nShards: Int): DataFrame =
-    df.repartitionByRange(nShards, zorder2(a, b))
+  def zorderCluster(df: DataFrame, a: Column, b: Column, nShards: Int): DataFrame = {
+    val z = zorder2(a, b)
+    val maxZ = Option(df.select(max(z)).head().get(0)).fold(0L)(_.asInstanceOf[Long])
+    val shift = math.max(0, 64 - java.lang.Long.numberOfLeadingZeros(maxZ) - PrefixBits)
+    val prefix = shiftright(z, shift)
+    val counts = df.select(prefix.as("p")).filter(col("p").isNotNull)
+      .groupBy("p").count().collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+    // a new shard starts at the first prefix whose rows-before reach the
+    // next multiple of n / nShards
+    val n = math.max(1L, counts.map(_._2).sum)
+    val starts = counts.foldLeft((0L, Vector.empty[Long])) { case ((before, ss), (p, c)) =>
+      (before + c, if (before * nShards / n > ss.length) ss :+ p else ss)
+    }._2
+    df.repartitionById(nShards,
+      starts.foldLeft(lit(0))((shard, p) => shard + when(prefix >= p, 1).otherwise(0)))
+  }
+
+  /** Significant z-value bits whose exact counts place the shard bounds. */
+  private val PrefixBits: Int = 16
 }

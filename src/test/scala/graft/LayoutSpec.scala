@@ -76,4 +76,32 @@ class LayoutSpec extends SparkSpec {
     val rRows = boxQuery(s"$dir/linear").select("id").collect().map(_.getLong(0)).sorted
     assert(rRows.sameElements(expected))
   }
+
+  // Range partitioning samples with a seed taken from the RDD id, so its
+  // bounds (and s13_zorder_scan's kept-shard count, 6 or 7 of 16) moved
+  // with the number of RDDs the session had made before. The layout must
+  // be a function of the rows alone.
+  test("zorderCluster: the same rows land in the same shards on every run") {
+    val rnd = new scala.util.Random(13L)
+    val pts = (0 until 20000).map(i => (i.toLong, rnd.nextInt(1000).toLong, rnd.nextInt(24).toLong))
+      .toDF("id", "x", "y")
+    val dir = java.nio.file.Files.createTempDirectory("graft_layout_runs").toString
+    def run(extraRdds: Int): (Map[Int, Set[Long]], String) = {
+      (0 until extraRdds).foreach(_ => spark.sparkContext.parallelize(Seq(1)))
+      val clustered = Layout.zorderCluster(pts, $"x", $"y", nShards = 16)
+      val shards = clustered.select(spark_partition_id(), $"id").collect()
+        .groupBy(_.getInt(0)).map { case (p, rs) => p -> rs.map(_.getLong(1)).toSet }
+      clustered.write.format("docstore").mode("overwrite").save(s"$dir/run$extraRdds")
+      val plan = spark.read.format("docstore").load(s"$dir/run$extraRdds")
+        .filter($"x".between(40, 80) && $"y".between(6, 12)).queryExecution.executedPlan.toString
+      (shards, "Shards: \\d+/\\d+".r.findFirstIn(plan).getOrElse(fail(plan)))
+    }
+    val runs = Seq(0, 3, 7).map(run)
+    assert(runs.head._1.size == 16)
+    runs.tail.foreach { r =>
+      val sameShards = r._1 == runs.head._1
+      assert(sameShards, "shard contents moved between runs")
+      assert(r._2 == runs.head._2)
+    }
+  }
 }

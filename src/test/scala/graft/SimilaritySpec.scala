@@ -82,7 +82,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("lshTopK: near-identical vector is recalled at rank 1") {
     val out = Similarity.lshTopK(vectors, vectors.filter($"vec_id" === 0L),
-      k = 3, tables = 8, bits = 4)
+      k = 3, bits = 4)
       .collect().map(r => (r.getLong(1), r.getInt(3)))
     assert(out.nonEmpty)
     assert(out.head == (1L, 1)) // identical-up-to-epsilon vector shares buckets
@@ -120,8 +120,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("sim_kmeans: cells partition the corpus and cohesion is sane") {
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    val stats = Similarity.kmeansClusterStats(emb, nCentroids = 16, lloydIters = 2,
-      trainModulus = 2).collect()
+    val stats = Similarity.kmeansClusterStats(emb, nCentroids = 16, lloydIters = 2).collect()
     assert(stats.map(_.getAs[Long]("n_members")).sum == emb.count(),
       "every vector lands in exactly one cell")
     assert(stats.map(_.getAs[Long]("cell")).distinct.length == stats.length)
@@ -144,7 +143,7 @@ class SimilaritySpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val truth = pairs(Similarity.bruteForceTopK(emb, queries, k = 5))
     val pq = pairs(Similarity.pqTopK(emb, queries, k = 5, dim = 64, m = 16,
-      codesPerSub = 16, lloydIters = 1, trainModulus = 2, shortlistFactor = 8))
+      codesPerSub = 16))
     val recall = (truth & pq).size.toDouble / truth.size
     info(f"PQ recall@5 = $recall%.3f (${(truth & pq).size}/${truth.size})")
     // measures 0.94 at the registry params; floor leaves headroom
@@ -158,7 +157,7 @@ class SimilaritySpec extends SparkSpec {
       df.select("query_id", "neighbor_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val truth = pairs(Similarity.bruteForceTopK(emb, queries, k = 5))
-    val out = Similarity.sq8TopK(emb, queries, k = 5, dim = 64, shortlistFactor = 8)
+    val out = Similarity.sq8TopK(emb, queries, k = 5, dim = 64)
     val sq = pairs(out)
     val recall = (truth & sq).size.toDouble / truth.size
     info(f"SQ8 recall@5 = $recall%.3f (${(truth & sq).size}/${truth.size})")
@@ -197,8 +196,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("semanticDedup prunes within-cluster near-dups, keeps everything else") {
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    val out = Similarity.semanticDedup(emb, nCentroids = 16, lloydIters = 2,
-      trainModulus = 2, threshold = 0.45).collect()
+    val out = Similarity.semanticDedup(emb, lloydIters = 2, threshold = 0.45).collect()
     assert(out.length == emb.count()) // every vector classified exactly once
     val cellOf = out.map(r => r.getLong(0) -> r.getLong(1)).toMap
     val pruned = out.filter(!_.getBoolean(2))
@@ -314,5 +312,42 @@ class SimilaritySpec extends SparkSpec {
     val cappedPq = Similarity.pqCodebooks(corpus, 8, 2, 4, 1, maxTrainRows = 50)
     val explicitPq = Similarity.pqCodebooks(explicitSub, 8, 2, 4, 1)
     assert(cappedPq.map(_.map(_.toSeq).toSeq).toSeq == explicitPq.map(_.map(_.toSeq).toSeq).toSeq)
+  }
+
+  test("pqCodebooks: codebook j equals ivfCentroids on subspace slice j, bit for bit") {
+    // PQ trains each subspace with the same Lloyd trainer as the coarse
+    // quantizer; the sim_pq oracle replays it that way (lloydCteSql per
+    // subspace), so the two must agree to the last bit.
+    def bits(c: Array[Array[Float]]): Seq[Seq[Int]] =
+      c.map(_.map(java.lang.Float.floatToRawIntBits).toSeq).toSeq
+    def agree(corpus: org.apache.spark.sql.DataFrame, dim: Int, m: Int,
+              codes: Int, iters: Int): Unit = {
+      val sub = dim / m
+      val books = Similarity.pqCodebooks(corpus, dim, m, codes, iters)
+      assert(books.length == m)
+      (0 until m).foreach { j =>
+        val slice = corpus.select(col("vec_id"),
+          org.apache.spark.sql.functions.slice(col("embedding"), j * sub + 1, sub).as("embedding"))
+        assert(bits(books(j)) == bits(Similarity.ivfCentroids(slice, codes, iters)),
+          s"m=$m: codebook $j differs from the IVF trainer on its slice")
+      }
+    }
+    // Seeded gaussian vectors, plus three planted ones whose sum depends
+    // on the fold order: 1.0 is absorbed into ±2^60 when added after it
+    // but survives when added after the two have cancelled. With one cell
+    // every vector is a member, so any change of the vec_id-ordered fold
+    // in either path shows in the float mean.
+    val rnd = new scala.util.Random(20261019L)
+    val big = math.pow(2, 60).toFloat
+    val fixture = ((0L, Array.fill(16)(1.0f)) +: (1L, Array.fill(16)(big)) +:
+      (2L, Array.fill(16)(-big)) +:
+      (3 until 120).map(i => (i.toLong, Array.fill(16)(rnd.nextGaussian().toFloat))))
+      .toDF("vec_id", "embedding")
+    agree(fixture, dim = 16, m = 1, codes = 1, iters = 2)
+    agree(fixture, dim = 16, m = 4, codes = 4, iters = 3)
+    // the registry's sim_pq config on its train sample
+    val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+      .filter(pmod(col("vec_id"), lit(Similarity.TrainModulus)) === 0)
+    agree(emb, dim = 64, m = 16, codes = 16, iters = Similarity.PqLloydIters)
   }
 }

@@ -386,4 +386,34 @@ class StreamingParitySpec extends SparkSpec {
     // state is one record per key: first event of each key passes through
     assert(streaming(1L)._1 == 10.0 && streaming(2L)._1 == 100.0)
   }
+
+  test("entity summary stream: a window split across micro-batches equals the batch summary") {
+    implicit val sq = spark.sqlContext
+    def at(ts: String) = Timestamp.valueOf(s"2024-01-0$ts")
+    // two daily windows; the first spans both micro-batches
+    val data = Seq(
+      (at("1 08:00:00"), "10.0.0.1", "failed"), (at("1 08:05:00"), "10.0.0.1", "invalid_user"),
+      (at("1 09:00:00"), "10.0.0.2", "accepted"), (at("1 10:00:00"), "10.0.0.1", "accepted"),
+      (at("1 11:00:00"), "10.0.0.2", "failed"), (at("1 12:00:00"), "10.0.0.1", "disconnect"),
+      (at("1 13:00:00"), "10.0.0.1", "failed"), (at("1 20:00:00"), "10.0.0.2", "preauth"),
+      (at("1 22:30:00"), "10.0.0.3", "failed"), (at("2 01:00:00"), "10.0.0.1", "accepted"),
+      (at("2 02:00:00"), "10.0.0.3", "invalid_user"), (at("2 03:00:00"), "10.0.0.3", "failed"))
+    def summary(df: org.apache.spark.sql.DataFrame) = StreamingAnalytics.entitySummaryStream(
+      df.toDF("ts", "ip", "event"), "ts", "ip", Seq("failed", "invalid_user"), "event")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => (r.getTimestamp(0),
+      r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getTimestamp(5),
+      r.getTimestamp(6))).toSet
+    val mem = MemoryStream[(Timestamp, String, String)]
+    mem.addData(data.take(5))
+    val streamed = rows(StreamRun.memory(summary(mem.toDF()), "complete",
+      StreamRun.chunks(mem, Seq(data.drop(5)))).sink)
+    val batch = rows(summary(data.toDF()))
+    // counts, failed events, first/last seen and the HLL diversity
+    // (register-wise max merge, so the split cannot change it)
+    assert(streamed == batch && streamed.size == 5)
+    assert(streamed.exists { case (_, ip, n, failed, diversity, first, last) =>
+      ip == "10.0.0.1" && (n, failed, diversity) == ((5L, 3L, 4L)) &&
+        first == at("1 08:00:00") && last == at("1 13:00:00")
+    })
+  }
 }

@@ -1867,11 +1867,11 @@ object QueriesExt {
             |c0 AS (
             |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cidx, embedding AS ce
             |  FROM (SELECT vec_id, embedding FROM train ORDER BY vec_id LIMIT 16)),
-            |${lloydCteSql(Similarity.IvfLloydIters, "train")}
+            |${lloydCteSql(Similarity.LloydIters, "train")}
             |vc AS (
             |  SELECT e.vec_id, c.cidx,
             |    ${ivfCosSql("e.embedding", "c.ce")} AS cos
-            |  FROM vecs e CROSS JOIN c${Similarity.IvfLloydIters} c),
+            |  FROM vecs e CROSS JOIN c${Similarity.LloydIters} c),
             |assign AS (
             |  SELECT vec_id, cidx AS cell FROM
             |    (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cidx) AS rn FROM vc)
@@ -1900,7 +1900,7 @@ object QueriesExt {
 
   /** K-means clustering summary over the embedding corpus — cluster sizes,
     * a representative member, and mean cosine cohesion per cell. Same
-    * deterministic trainer (sampled seed + 2 Lloyd rounds) as sim_ivf, so
+    * deterministic trainer (sampled seed + LloydIters rounds) as sim_ivf, so
     * the ENTIRE clustering — training, assignment, per-cell stats — is
     * re-derived in the oracle and hash-compared. The per-cell mean uses
     * the ordered left fold (members in vec_id order) on both engines.
@@ -1909,12 +1909,12 @@ object QueriesExt {
     Some(s"""WITH ${cappedTrainSql()},
             |c0 AS (
             |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cidx, embedding AS ce
-            |  FROM (SELECT vec_id, embedding FROM train ORDER BY vec_id LIMIT 16)),
-            |${lloydCteSql(2, "train")}
+            |  FROM (SELECT vec_id, embedding FROM train ORDER BY vec_id LIMIT ${Similarity.KmeansCentroids})),
+            |${lloydCteSql(Similarity.LloydIters, "train")}
             |vc AS (
             |  SELECT e.vec_id, c.cidx,
             |    ${ivfCosSql("e.embedding", "c.ce")} AS cos
-            |  FROM vecs e CROSS JOIN c2 c),
+            |  FROM vecs e CROSS JOIN c${Similarity.LloydIters} c),
             |assign AS (
             |  SELECT vec_id, cidx AS cell, cos FROM
             |    (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cidx) AS rn FROM vc)
@@ -1924,15 +1924,14 @@ object QueriesExt {
             |  floor(list_reduce(list_prepend(cast(0.0 as double), list(cos ORDER BY vec_id)),
             |                    (p, q) -> p + q) / count(*) * 10000 + 0.5) / 10000 AS avg_cos
             |FROM assign GROUP BY cell ORDER BY cell""".stripMargin),
-    (s, d) => Similarity.kmeansClusterStats(
-      emb(s, d), nCentroids = 16, lloydIters = 2))
+    (s, d) => Similarity.kmeansClusterStats(emb(s, d)))
 
   /** SemDeDup semantic dedup — same deterministic trainer as sim_kmeans,
     * so the oracle replays training + assignment with the shared Lloyd
     * CTEs, then re-derives the within-cluster prune exactly: a vector is
-    * pruned by the min lower-id same-cell member at cosine ≥ 0.45 (the
-    * corpus' near-dup threshold, as in sim_near_dup). All output columns
-    * are integers/booleans.
+    * pruned by the min lower-id same-cell member at cosine ≥
+    * DedupThreshold (the corpus' near-dup threshold, as in sim_near_dup).
+    * All output columns are integers/booleans.
     *
     * nCentroids is NOT a manual knob here: both engines derive
     * k = max(16, ⌊√n⌋) from the corpus count
@@ -1950,11 +1949,11 @@ object QueriesExt {
             |    SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cidx, embedding AS ce
             |    FROM train)
             |  WHERE cidx < (SELECT k FROM kk)),
-            |${lloydCteSql(2, "train")}
+            |${lloydCteSql(Similarity.LloydIters, "train")}
             |vc AS (
             |  SELECT e.vec_id, c.cidx,
             |    ${ivfCosSql("e.embedding", "c.ce")} AS cos
-            |  FROM vecs e CROSS JOIN c2 c),
+            |  FROM vecs e CROSS JOIN c${Similarity.LloydIters} c),
             |assign AS (
             |  SELECT vec_id, cidx AS cell FROM
             |    (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cidx) AS rn FROM vc)
@@ -1964,17 +1963,16 @@ object QueriesExt {
             |  FROM assign a JOIN assign b ON a.cell = b.cell AND b.vec_id < a.vec_id
             |  JOIN embeddings ea ON ea.vec_id = a.vec_id
             |  JOIN embeddings eb ON eb.vec_id = b.vec_id
-            |  WHERE ${ivfCosSql("ea.embedding", "eb.embedding")} >= 0.45
+            |  WHERE ${ivfCosSql("ea.embedding", "eb.embedding")} >= ${Similarity.DedupThreshold}
             |  GROUP BY a.vec_id)
             |SELECT a.vec_id, cast(a.cell as bigint) AS cell,
             |  (p.pruned_by IS NULL) AS keep, p.pruned_by
             |FROM assign a LEFT JOIN pr p ON p.vec_id = a.vec_id
             |ORDER BY a.vec_id""".stripMargin),
-    (s, d) => Similarity.semanticDedup(emb(s, d), lloydIters = 2, threshold = 0.45)
-      .orderBy("vec_id"))
+    (s, d) => Similarity.semanticDedup(emb(s, d)).orderBy("vec_id"))
 
   /** Per-subspace PQ oracle CTEs: sub-sliced train set, seed codebook,
-    * Lloyd round(s) (prefixed so the 4 chains coexist), then full-corpus
+    * Lloyd round(s) (prefixed so the m chains coexist), then full-corpus
     * encoding — nearest final sub-centroid by (cos DESC, cidx), carrying
     * the chosen centroid list for ADC reconstruction.
     */
@@ -1998,22 +1996,23 @@ object QueriesExt {
   /** Product-quantization ANN — training, encoding, ADC shortlist, and
     * exact re-rank all re-derived in ANSI SQL (the [[lloydCteSql]] replay
     * per subspace), so the whole compressed-domain retrieval pipeline is
-    * hash-compared, not just spot-checked. m=16 subspaces × 4 dims,
-    * 16 codes each, PqLloydIters Lloyd rounds on the train sample;
+    * hash-compared, not just spot-checked. PqSubspaces subspaces of
+    * EmbeddingDim / PqSubspaces dims, PqCodes codes each, PqLloydIters
+    * Lloyd rounds on the train sample;
     * shortlist ShortlistFactor·k by approximate cosine, exact top-5
     * re-rank (params picked by a recall sweep: this config measures 0.94
     * recall@5 vs brute force at sf0.01 — asserted with headroom in
     * SimilaritySpec).
     */
   private val sm7 = {
-    val m = 16; val sub = 4; val k = 5
+    val m = Similarity.PqSubspaces; val sub = Similarity.EmbeddingDim / m; val k = 5
     val adcNum = (0 until m)
       .map(j => foldDot(s"q.embedding[${j * sub + 1}:${(j + 1) * sub}]", s"x.ce$j"))
       .mkString("(", " + ", ")")
     val reconSq = (0 until m).map(j => foldDot(s"x.ce$j", s"x.ce$j")).mkString(" + ")
     QueryDef("sim_pq",
       Some(s"""WITH ${cappedTrainSql("vec_id, embedding")},
-              |${(0 until m).map(j => pqSubspaceCtes(j, sub, 16, Similarity.PqLloydIters)).mkString("\n")}
+              |${(0 until m).map(j => pqSubspaceCtes(j, sub, Similarity.PqCodes, Similarity.PqLloydIters)).mkString("\n")}
               |enc AS (
               |  SELECT e0.vec_id, ${(0 until m).map(j => s"c$j, ce$j").mkString(", ")}
               |  FROM e0 ${(1 until m).map(j => s"JOIN e$j USING (vec_id)").mkString(" ")}),
@@ -2043,8 +2042,7 @@ object QueriesExt {
               |  FROM rer WHERE cos IS NOT NULL AND NOT isnan(cos))
               |SELECT query_id, neighbor_id, adc_cos, cos, rank FROM ranked
               |WHERE rank <= $k ORDER BY query_id, rank""".stripMargin),
-      (s, d) => Similarity.pqTopK(emb(s, d), emb(s, d).filter(col("vec_id") < 10),
-        k = k, dim = 64, m = m, codesPerSub = 16)
+      (s, d) => Similarity.pqTopK(emb(s, d), emb(s, d).filter(col("vec_id") < 10), k = k)
         .orderBy("query_id", "rank"))
   }
 
@@ -2063,7 +2061,7 @@ object QueriesExt {
   private val sm9 = {
     val k = 5; val sl = Similarity.ShortlistFactor * k
     QueryDef("sim_sq8",
-      Some(s"""WITH dims AS (SELECT cast(i AS int) AS i FROM range(1, 65) t(i)),
+      Some(s"""WITH dims AS (SELECT cast(i AS int) AS i FROM range(1, ${Similarity.EmbeddingDim + 1}) t(i)),
               |st AS (
               |  SELECT i,
               |    coalesce(cast(min(CASE WHEN NOT isnan(e.embedding[i]) THEN e.embedding[i] END) as double), 0.0) AS mn,
@@ -2101,8 +2099,7 @@ object QueriesExt {
               |  FROM rer WHERE cos IS NOT NULL AND NOT isnan(cos))
               |SELECT query_id, neighbor_id, sq_cos, cos, rank FROM ranked
               |WHERE rank <= $k ORDER BY query_id, rank""".stripMargin),
-      (s, d) => Similarity.sq8TopK(emb(s, d), emb(s, d).filter(col("vec_id") < 10),
-        k = k, dim = 64)
+      (s, d) => Similarity.sq8TopK(emb(s, d), emb(s, d).filter(col("vec_id") < 10), k = k)
         .orderBy("query_id", "rank"))
   }
 

@@ -30,11 +30,19 @@ import org.apache.spark.sql.functions._
   * Constants, not options: each value below is the one every registered
   * query uses, and the DuckDB oracles in `QueriesExt` interpolate the same
   * constant, so an engine-side change cannot drift from its replay.
-  * Options that remain are the ones a test sets to a value the registry
-  * does not use, to reach a path: `maxTrainRows` (the train-set cap),
-  * ivfTopK's `nCentroids`/`nProbe` (probing every cell equals brute
-  * force), lshTopK's `bits`/`probes` (single-probe on a tiny fixture) and
-  * mmrTopK's `lam`/`penW` (the diversity arm).
+  * Options that remain are of two kinds. The query's own inputs: `k`,
+  * radiusSearch's `minCos`, nearDupPairs' `threshold` and mmrTopK's
+  * shortlist `m`. And values a test sets to one the registry does not use,
+  * to reach a path:
+  *   - the trainers [[ivfCentroids]] and [[pqCodebooks]] take their train
+  *     set, shape and rounds as given (SimilaritySpec trains 0 rounds, 4
+  *     cells, 8-dim fixtures, m = 1/2/4), and `maxTrainRows` (the
+  *     train-set cap test);
+  *   - ivfTopK's `nCentroids`/`nProbe` (ExtensionsSpec: probing every
+  *     cell equals brute force);
+  *   - lshTopK's `bits`/`probes` (SimilaritySpec: single-probe on a tiny
+  *     fixture);
+  *   - mmrTopK's `lam`/`penW` (SimilaritySpec: the diversity arm).
   */
 object Similarity {
 
@@ -49,13 +57,29 @@ object Similarity {
     * to the exact re-rank. */
   val ShortlistFactor: Int = 8
 
+  /** Lloyd rounds of the whole-vector trainer in ivfTopK,
+    * kmeansClusterStats and semanticDedup. */
+  val LloydIters: Int = 2
+
+  /** Cells of kmeansClusterStats. */
+  val KmeansCentroids: Int = 16
+
   /** SemDeDup's floor on its derived centroid count k = max(16, ⌊√n⌋). */
   val MinDedupCentroids: Int = 16
 
-  /** Lloyd rounds of ivfTopK's coarse quantizer. */
-  val IvfLloydIters: Int = 2
+  /** SemDeDup prunes a vector with a lower-id same-cell member at cosine
+    * ≥ DedupThreshold (the corpus' near-dup threshold, as sim_near_dup). */
+  val DedupThreshold: Double = 0.45
 
-  /** Lloyd rounds of pqTopK's codebooks. */
+  /** Width of the embeddings table's vectors: PQ splits it into
+    * [[PqSubspaces]] slices, SQ8 quantizes this many dimensions (a longer
+    * vector's extra components score null, as DuckDB's out-of-range index). */
+  val EmbeddingDim: Int = 64
+
+  /** pqTopK's subspaces, codes per subspace codebook, and Lloyd rounds
+    * (picked by a recall sweep: 0.94 recall@5 vs brute force at sf0.01). */
+  val PqSubspaces: Int = 16
+  val PqCodes: Int = 16
   val PqLloydIters: Int = 1
 
   /** Hash tables of lshTopK. */
@@ -98,19 +122,15 @@ object Similarity {
     queries.select(col("vec_id").as("query_id"), col("embedding").as("qe"))
       .withColumn("qn", l2Norm(col("qe")))
 
-  /** (neighbor_id, ne, nn): the corpus side of every pair scorer. With
-    * `cents` (IVF) the frame is spread and carries each vector's `cell`
-    * before its norm; without, it stays unspread — the dot-product kernel
-    * over this corpus is too light to pay for a round-robin exchange (r18
-    * A/B: Guards.spread in bruteForceTopK measured sim_knn_brute 0.66 s vs
-    * 0.46 s warm, and sim_retrieve/sim_mmr/ir_ndcg_eval ride it).
+  /** (neighbor_id, ne, nn): the corpus side of every pair scorer but
+    * IVF's. It stays unspread — the dot-product kernel over this corpus is
+    * too light to pay for a round-robin exchange (r18 A/B: Guards.spread
+    * in bruteForceTopK measured sim_knn_brute 0.66 s vs 0.46 s warm, and
+    * sim_retrieve/sim_mmr/ir_ndcg_eval ride it).
     */
-  private def corpusFrame(corpus: DataFrame,
-                          cents: Option[Array[Array[Float]]] = None): DataFrame = {
-    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"))
-    cents.fold(c)(cs => Guards.spread(c).withColumn("cell", nearestCell(col("ne"), cs)))
+  private def corpusFrame(corpus: DataFrame): DataFrame =
+    corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"))
       .withColumn("nn", l2Norm(col("ne")))
-  }
 
   /** The exact pair score of query `qe` against corpus column `e` (norm
     * `n`). cos = dot/(norm_a·norm_b) is bit-identical to
@@ -412,33 +432,39 @@ object Similarity {
 
   /** IVF (inverted-file) approximate nearest neighbors — the classic
     * coarse-quantizer scale path. Centroids come from [[ivfCentroids]]
-    * ([[IvfLloydIters]] rounds on the [[trainSample]]). Every corpus vector
+    * ([[LloydIters]] rounds on the [[trainSample]]). Every corpus vector
     * is assigned to its nearest centroid in ONE map-only pass (the
     * centroid matrix rides inside the native
     * [[NativeExpressions.NearestCentroids]] expression — no join, no
     * shuffle of embeddings); a query probes its `nProbe` nearest cells and
-    * ranks only those cells' vectors. At 100 TB: the corpus is
-    * hash-partitioned by cell once, queries broadcast.
+    * ranks only those cells' vectors. Unlike [[corpusFrame]] the corpus is
+    * spread before the assignment kernel, which is heavy enough to pay for
+    * it. At 100 TB: the corpus is hash-partitioned by cell once, queries
+    * broadcast.
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               nCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
     val corpus0 = presentVecs(corpus)
     val queries0 = presentVecs(queries)
-    val cents = ivfCentroids(trainSample(corpus0), nCentroids, IvfLloydIters)
+    val cents = ivfCentroids(trainSample(corpus0), nCentroids, LloydIters)
+    val c = Guards.spread(
+        corpus0.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne")))
+      .withColumn("cell", nearestCell(col("ne"), cents))
+      .withColumn("nn", l2Norm(col("ne")))
     val q = queryFrame(queries0)
       .select(col("query_id"), col("qe"), col("qn"),
         explode(NativeExpressions.nearestCentroids(col("qe"), cents, nProbe)).as("cell"))
-    rankTopK(scorePairs(corpusFrame(corpus0, Some(cents)).join(broadcast(q), "cell"),
-      pairCos().as("cos")), k)
+    rankTopK(scorePairs(c.join(broadcast(q), "cell"), pairCos().as("cos")), k)
   }
 
   /** Product-quantization ANN (Jégou et al., PAMI'11) — the compressed-
-    * domain scale path for similarity search. The vector space is split
-    * into `m` subspaces; each subspace gets its own `codesPerSub`-centroid
-    * codebook from [[pqCodebooks]] ([[PqLloydIters]] rounds on the
-    * [[trainSample]]), and every corpus vector is ENCODED as m small codes
-    * in one map-only pass (codebooks ride inside the native
-    * nearest-centroid expression — no join). Scoring is two-stage
+    * domain scale path for similarity search. The [[EmbeddingDim]]-wide
+    * vector space is split into [[PqSubspaces]] subspaces; each subspace
+    * gets its own [[PqCodes]]-centroid codebook from [[pqCodebooks]]
+    * ([[PqLloydIters]] rounds on the [[trainSample]]), and every corpus
+    * vector is ENCODED as m small codes in one map-only pass (codebooks
+    * ride inside the native nearest-centroid expression — no join).
+    * Scoring is two-stage
     * retrieval:
     *   1. ADC shortlist: approximate cosine against the RECONSTRUCTED
     *      vector — dot(q, recon(x)) = Σ_j dot(q_subj, codebook_j[code_j]),
@@ -454,15 +480,14 @@ object Similarity {
     * so the full pipeline — training, encoding, ADC, re-rank — is
     * re-derivable in ANSI SQL and hash-compared by the oracle.
     */
-  def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
-             m: Int, codesPerSub: Int): DataFrame = {
-    require(dim % m == 0, s"dim $dim not divisible by $m subspaces")
-    val sub = dim / m
+  def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val (m, sub) = (PqSubspaces, EmbeddingDim / PqSubspaces)
     val corpus0 = presentVecs(corpus)
     val queries0 = presentVecs(queries)
-    // m bounded driver-side artifacts (codesPerSub × sub floats each),
-    // same budget class as the IVF centroid collect.
-    val codebooks = pqCodebooks(trainSample(corpus0), dim, m, codesPerSub, PqLloydIters)
+    // m bounded driver-side artifacts (PqCodes × sub floats each), same
+    // budget class as the IVF centroid collect.
+    val codebooks =
+      pqCodebooks(trainSample(corpus0), EmbeddingDim, m, PqCodes, PqLloydIters)
     // per-code squared reconstruction norms — the same left fold over the
     // same floats the oracle derives from its replayed codebooks
     val sqn: Array[Array[Double]] =
@@ -486,7 +511,7 @@ object Similarity {
     // is the SAME DotProduct fold over the SAME floats the inline form
     // computed, and the Σ_j stays the same left-assoc double chain.
     val qLut = q.select(col("query_id") +: col("qn") +: (0 until m).map { j =>
-      array((0 until codesPerSub).map(c =>
+      array((0 until PqCodes).map(c =>
         dot(subVec(col("qe"), j, sub), typedLit(codebooks(j)(c).toSeq))): _*).as(s"lut$j")
     }: _*)
 
@@ -524,20 +549,21 @@ object Similarity {
   /** K-means clustering summary — the "what structure does this embedding
     * corpus have" analytic (cluster cardinalities, a representative member,
     * mean cohesion), built on the same deterministic trainer as IVF so it
-    * gets a full cross-engine oracle.
+    * gets a full cross-engine oracle ([[LloydIters]] rounds).
     *
     * Scale shape: training reads the [[trainSample]] (like [[ivfTopK]]);
     * assignment is ONE map-only pass with the centroid matrix riding inside
     * the native expression (no join, no embedding shuffle); the stats
-    * aggregate reduces to nCentroids rows. The per-cell mean cosine uses an
-    * ordered fold over members (same rationale as the trainer: a parallel
-    * double sum's combine order is nondeterministic in the last ulp, and
-    * the oracle hash-compares exact values) — at 100 TB you'd trade the
-    * bit-exact fold for a plain avg and compare with an epsilon instead.
+    * aggregate reduces to [[KmeansCentroids]] rows. The per-cell mean
+    * cosine uses an ordered fold over members (same rationale as the
+    * trainer: a parallel double sum's combine order is nondeterministic in
+    * the last ulp, and the oracle hash-compares exact values) — at 100 TB
+    * you'd trade the bit-exact fold for a plain avg and compare with an
+    * epsilon instead.
     */
-  def kmeansClusterStats(corpus: DataFrame, nCentroids: Int, lloydIters: Int): DataFrame = {
+  def kmeansClusterStats(corpus: DataFrame): DataFrame = {
     val corpus0 = presentVecs(corpus)
-    val cents = ivfCentroids(trainSample(corpus0), nCentroids, lloydIters)
+    val cents = ivfCentroids(trainSample(corpus0), KmeansCentroids, LloydIters)
     val centsLit = typedLit(cents.map(_.toSeq).toSeq)
 
     Guards.spread(corpus0)
@@ -560,9 +586,10 @@ object Similarity {
   }
 
   /** SemDeDup-style semantic dedup (Abbas et al., 2023): cluster the
-    * embedding corpus with the deterministic sampled-Lloyd trainer, then
-    * WITHIN each cluster prune every vector that has a lower-id member at
-    * cosine ≥ threshold (keep = no such member; pruned_by = the min one).
+    * embedding corpus with the deterministic sampled-Lloyd trainer
+    * ([[LloydIters]] rounds), then WITHIN each cluster prune every vector
+    * that has a lower-id member at cosine ≥ [[DedupThreshold]] (keep = no
+    * such member; pruned_by = the min one).
     * Only within-cluster pairs are compared — that bound is the entire
     * scale story: the pair join is co-partitioned by cell, per-cell cost
     * is |cell|², and cross-cluster near-dups are the accepted recall
@@ -582,10 +609,10 @@ object Similarity {
     * (√n·dim — at n=10⁹, dim=64 that is ~8 MB, broadcast inside the
     * assignment kernel).
     */
-  def semanticDedup(corpus: DataFrame, lloydIters: Int, threshold: Double): DataFrame = {
+  def semanticDedup(corpus: DataFrame): DataFrame = {
     val corpus0 = presentVecs(corpus)
     val k = math.max(MinDedupCentroids, math.floor(math.sqrt(corpus0.count().toDouble)).toInt)
-    val cents = ivfCentroids(trainSample(corpus0), k, lloydIters)
+    val cents = ivfCentroids(trainSample(corpus0), k, LloydIters)
     val v = Guards.spread(corpus0)
       .select(col("vec_id"), col("embedding"), nearestCell(col("embedding"), cents).as("cell"))
       .withColumn("nrm", l2Norm(col("embedding")))
@@ -595,7 +622,7 @@ object Similarity {
       // under ANSI; its null cosine fails the threshold, so the
       // degenerate vector is simply never pruned-by nor prunes anyone
       .filter(safeCos(dot(col("a.embedding"), col("b.embedding")),
-        col("a.nrm"), col("b.nrm")) >= threshold)
+        col("a.nrm"), col("b.nrm")) >= DedupThreshold)
       .groupBy(col("a.vec_id").as("vec_id"))
       .agg(min(col("b.vec_id")).as("pruned_by"))
     v.select(col("vec_id"), col("cell").cast("long").as("cell"))
@@ -666,7 +693,8 @@ object Similarity {
     * degenerate vectors drop out of ranking exactly as in [[topKCut]].
     * OOB-safe `get()` mirrors DuckDB's null-for-out-of-range list index.
     */
-  def sq8TopK(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int): DataFrame = {
+  def sq8TopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val dim = EmbeddingDim
     def finite(c: Column): Column = when(!isnan(c), c)
     // Per-dimension min/max via posexplode + a 64-group aggregate (r17):
     // the previous single-row form carried 2·dim aggregate buffer fields

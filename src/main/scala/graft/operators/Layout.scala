@@ -60,19 +60,28 @@ object Layout {
     * sort-for-layout — paid once at write time, amortized over every
     * pruned read after.
     *
-    * The range bounds come from EXACT row counts per z-prefix (the top
-    * [[PrefixBits]] significant bits: two small aggregates, at most 2^16
-    * groups), so the same rows always land in the same shards. Spark's
-    * `repartitionByRange` samples instead, seeded from the RDD id: the
-    * same data got other bounds depending on how many RDDs the session
-    * had made before, and `s13_zorder_scan` kept 6 or 7 of its 16 shards
-    * from one run to the next. Rows with a null z-value go to shard 0.
+    * The range bounds come from EXACT row counts per z-prefix, so the same
+    * rows always land in the same shards. Spark's `repartitionByRange`
+    * samples instead, seeded from the RDD id: the same data got other
+    * bounds depending on how many RDDs the session had made before, and
+    * `s13_zorder_scan` kept 6 or 7 of its 16 shards from one run to the
+    * next. Rows with a null z-value go to shard 0.
+    *
+    * The call is eager: it runs two small jobs over `df` before it returns
+    * (the z-value min/max of each sign, then the per-prefix counts), and
+    * the write that consumes the result reads `df` once more, so cache an
+    * expensive input.
     */
   def zorderCluster(df: DataFrame, a: Column, b: Column, nShards: Int): DataFrame = {
     val z = zorder2(a, b)
-    val maxZ = Option(df.select(max(z)).head().get(0)).fold(0L)(_.asInstanceOf[Long])
-    val shift = math.max(0, 64 - java.lang.Long.numberOfLeadingZeros(maxZ) - PrefixBits)
-    val prefix = shiftright(z, shift)
+    // negative z-values (b ≥ 2³¹, see zorder2) get their own span: one span
+    // across the sign would leave the non-negative rows a single prefix
+    val neg = z < 0
+    val span = df.select(min(when(neg, z)), max(when(neg, z)),
+      min(when(!neg, z)), max(when(!neg, z))).head()
+    def shift(i: Int) =
+      if (span.isNullAt(i)) 0 else prefixShift(span.getLong(i), span.getLong(i + 1))
+    val prefix = when(neg, shiftright(z, shift(0))).otherwise(shiftright(z, shift(2)))
     val counts = df.select(prefix.as("p")).filter(col("p").isNotNull)
       .groupBy("p").count().collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     // a new shard starts at the first prefix whose rows-before reach the
@@ -85,6 +94,16 @@ object Layout {
       starts.foldLeft(lit(0))((shard, p) => shard + when(prefix >= p, 1).otherwise(0)))
   }
 
+  /** The right shift that keeps the [[PrefixBits]] leading bits of the span
+    * [minZ, maxZ] actually covers. Every z in it shares the bits above the
+    * highest bit where minZ and maxZ differ, so `z >> prefixShift` takes at
+    * most 2^PrefixBits values — 2^(PrefixBits+1) over both signs, so the
+    * counts collect stays bounded whatever the data — and an offset span
+    * (a column of epoch seconds) still splits into fine prefixes instead
+    * of one or two. */
+  private[graft] def prefixShift(minZ: Long, maxZ: Long): Int =
+    math.max(0, 64 - java.lang.Long.numberOfLeadingZeros(minZ ^ maxZ) - PrefixBits)
+
   /** Significant z-value bits whose exact counts place the shard bounds. */
-  private val PrefixBits: Int = 16
+  private[graft] val PrefixBits: Int = 16
 }

@@ -104,4 +104,32 @@ class LayoutSpec extends SparkSpec {
       assert(r._2 == runs.head._2)
     }
   }
+
+  // The prefix shift follows the span the z-values cover. Taken from the
+  // largest z alone, an offset column (epoch seconds) put every row under
+  // one or two prefixes and so into one or two shards, and a negative
+  // coordinate (b ≥ 2³¹ after masking) left one prefix per distinct
+  // z-value for the driver to collect.
+  test("zorderCluster: offset and negative coordinates still fill every shard") {
+    val rnd = new scala.util.Random(17L)
+    val base = (0 until 20000)
+      .map(i => (i.toLong, rnd.nextInt(1000).toLong, rnd.nextInt(24).toLong))
+    def shardSizes(pts: Seq[(Long, Long, Long)]): Seq[Long] =
+      Layout.zorderCluster(pts.toDF("id", "x", "y"), $"x", $"y", nShards = 16)
+        .groupBy(spark_partition_id()).count().collect().map(_.getLong(1)).toSeq
+    val offset = shardSizes(base.map { case (i, x, y) => (i, x + 1700000000L, y) })
+    val signed = shardSizes(base.map { case (i, x, y) => (i, x, y - 12) })
+    Seq("offset x" -> offset, "negative y" -> signed).foreach { case (what, sizes) =>
+      assert(sizes.length == 16, s"$what: ${sizes.length}/16 shards non-empty")
+      assert(sizes.max <= 2 * 20000 / 16, s"$what: shard sizes $sizes")
+    }
+    // whatever the span within one sign, z >> shift takes at most
+    // 2^PrefixBits values: the per-prefix counts the driver collects
+    val spans = Seq((0L, Long.MaxValue), (Long.MinValue, -1L), (5L, 5L), (-7L, -3L),
+      (1L << 61, (1L << 61) + 123456789L), (Long.MinValue, Long.MinValue + 3))
+    spans.foreach { case (lo, hi) =>
+      val s = Layout.prefixShift(lo, hi)
+      assert((hi >> s) - (lo >> s) < (1L << Layout.PrefixBits), s"span [$lo, $hi], shift $s")
+    }
+  }
 }

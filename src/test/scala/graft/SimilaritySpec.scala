@@ -120,7 +120,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("sim_kmeans: cells partition the corpus and cohesion is sane") {
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    val stats = Similarity.kmeansClusterStats(emb, nCentroids = 16, lloydIters = 2).collect()
+    val stats = Similarity.kmeansClusterStats(emb).collect()
     assert(stats.map(_.getAs[Long]("n_members")).sum == emb.count(),
       "every vector lands in exactly one cell")
     assert(stats.map(_.getAs[Long]("cell")).distinct.length == stats.length)
@@ -142,8 +142,7 @@ class SimilaritySpec extends SparkSpec {
       df.select("query_id", "neighbor_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val truth = pairs(Similarity.bruteForceTopK(emb, queries, k = 5))
-    val pq = pairs(Similarity.pqTopK(emb, queries, k = 5, dim = 64, m = 16,
-      codesPerSub = 16))
+    val pq = pairs(Similarity.pqTopK(emb, queries, k = 5))
     val recall = (truth & pq).size.toDouble / truth.size
     info(f"PQ recall@5 = $recall%.3f (${(truth & pq).size}/${truth.size})")
     // measures 0.94 at the registry params; floor leaves headroom
@@ -157,7 +156,7 @@ class SimilaritySpec extends SparkSpec {
       df.select("query_id", "neighbor_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val truth = pairs(Similarity.bruteForceTopK(emb, queries, k = 5))
-    val out = Similarity.sq8TopK(emb, queries, k = 5, dim = 64)
+    val out = Similarity.sq8TopK(emb, queries, k = 5)
     val sq = pairs(out)
     val recall = (truth & sq).size.toDouble / truth.size
     info(f"SQ8 recall@5 = $recall%.3f (${(truth & sq).size}/${truth.size})")
@@ -178,7 +177,7 @@ class SimilaritySpec extends SparkSpec {
     // so SQ8's final ranking must EQUAL brute force exactly
     // sort by rank before comparing: collect() after a window + filter has
     // no row-order contract (ranks are unique within the single query)
-    val out = Similarity.sq8TopK(vectors, vectors.filter($"vec_id" === 0L), k = 3, dim = 8)
+    val out = Similarity.sq8TopK(vectors, vectors.filter($"vec_id" === 0L), k = 3)
       .collect().map(r => (r.getLong(1), r.getInt(4))).sortBy(_._2)
     val exact = Similarity.bruteForceTopK(vectors, vectors.filter($"vec_id" === 0L), k = 3)
       .collect().map(r => (r.getLong(1), r.getInt(3))).sortBy(_._2)
@@ -189,14 +188,14 @@ class SimilaritySpec extends SparkSpec {
     val degen = vectors.union(Seq(
       (100L, Array.fill(8)(0.0f), 0),
       (101L, Array.fill(8)(Float.NaN), 1)).toDF("vec_id", "embedding", "label"))
-    val dOut = Similarity.sq8TopK(degen, degen.filter($"vec_id" === 0L), k = 3, dim = 8)
+    val dOut = Similarity.sq8TopK(degen, degen.filter($"vec_id" === 0L), k = 3)
       .collect().map(r => (r.getLong(1), r.getInt(4))).sortBy(_._2)
     assert(dOut.toSeq == exact.toSeq)
   }
 
   test("semanticDedup prunes within-cluster near-dups, keeps everything else") {
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    val out = Similarity.semanticDedup(emb, lloydIters = 2, threshold = 0.45).collect()
+    val out = Similarity.semanticDedup(emb).collect()
     assert(out.length == emb.count()) // every vector classified exactly once
     val cellOf = out.map(r => r.getLong(0) -> r.getLong(1)).toMap
     val pruned = out.filter(!_.getBoolean(2))

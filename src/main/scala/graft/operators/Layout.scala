@@ -73,16 +73,20 @@ object Layout {
     * expensive input.
     */
   def zorderCluster(df: DataFrame, a: Column, b: Column, nShards: Int): DataFrame = {
-    val z = zorder2(a, b)
+    // z (then its prefix) is projected once as a column: as an inline
+    // expression each aggregate and each shard bound below re-evaluated it
+    val zc = "__graft_zorder"
+    val withZ = df.withColumn(zc, zorder2(a, b))
+    val z = col(zc)
     // negative z-values (b ≥ 2³¹, see zorder2) get their own span: one span
     // across the sign would leave the non-negative rows a single prefix
     val neg = z < 0
-    val span = df.select(min(when(neg, z)), max(when(neg, z)),
+    val span = withZ.select(min(when(neg, z)), max(when(neg, z)),
       min(when(!neg, z)), max(when(!neg, z))).head()
     def shift(i: Int) =
       if (span.isNullAt(i)) 0 else prefixShift(span.getLong(i), span.getLong(i + 1))
     val prefix = when(neg, shiftright(z, shift(0))).otherwise(shiftright(z, shift(2)))
-    val counts = df.select(prefix.as("p")).filter(col("p").isNotNull)
+    val counts = withZ.select(prefix.as("p")).filter(col("p").isNotNull)
       .groupBy("p").count().collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     // a new shard starts at the first prefix whose rows-before reach the
     // next multiple of n / nShards
@@ -90,8 +94,10 @@ object Layout {
     val starts = counts.foldLeft((0L, Vector.empty[Long])) { case ((before, ss), (p, c)) =>
       (before + c, if (before * nShards / n > ss.length) ss :+ p else ss)
     }._2
-    df.repartitionById(nShards,
-      starts.foldLeft(lit(0))((shard, p) => shard + when(prefix >= p, 1).otherwise(0)))
+    withZ.withColumn(zc, prefix)
+      .repartitionById(nShards,
+        starts.foldLeft(lit(0))((shard, p) => shard + when(z >= p, 1).otherwise(0)))
+      .drop(zc)
   }
 
   /** The right shift that keeps the [[PrefixBits]] leading bits of the span

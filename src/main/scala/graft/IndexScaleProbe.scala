@@ -32,8 +32,7 @@ object IndexScaleProbe {
     val compactEvery = if (args.length > 2) args(2).toInt else 8
     val spark = GraftSession.open()
 
-    val docs = spark.read.parquet(s"$srcDir/documents.parquet")
-      .select("doc_id", "text")
+    val docs = Tables.documents(spark, srcDir).select("doc_id", "text")
     val chunks = (0 until nBatches).map(b =>
       docs.filter(pmod(col("doc_id"), lit(nBatches)) === b))
 

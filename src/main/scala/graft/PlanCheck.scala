@@ -531,6 +531,32 @@ object PlanCheck {
         }))
     }
 
+    // Round-robin exchanges are exempt from the hash gates above by their
+    // shape; this row pins their width instead. One that carries text or
+    // an embedding is a Guards.spread, which sizes it by the bytes of the
+    // files its scan reads: at most min(P, ceil(bytes / SpreadTargetBytes))
+    // partitions, or P over a leaf with no files. A bare repartition(P)
+    // over a small text scan fails here.
+    val treeP = treeSession.sparkContext.defaultParallelism
+    def oversizedSpreads(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] = p.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+          if e.outputPartitioning.isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning] &&
+            e.child.output.exists(a => a.name == "text" || (a.dataType match {
+              case org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType | org.apache.spark.sql.types.DoubleType, _) => true
+              case _ => false
+            })) =>
+        val bytes = e.child.collect {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec => s.relation.location.sizeInBytes
+        }.sum
+        val bound = if (bytes > 0) graft.operators.Guards.spreadWidth(bytes, treeP) else treeP
+        (e.outputPartitioning.numPartitions, bound)
+    }.collect { case (n, bound) if n > bound => s"$n partitions > $bound" }
+    SparkEntry.queries.keys.toSeq.sorted.foreach { q =>
+      checkTree(q)(
+        "round-robin exchanges over text or embeddings sized by input bytes" ->
+          (p => oversizedSpreads(p).isEmpty))
+    }
+
     // Language-id: ONE tokenization kernel evaluation per row (the
     // interpreted-HOF form evaluated 12 regex splits per row; a Catalyst
     // projection collapse would inline the kernel once per extract).

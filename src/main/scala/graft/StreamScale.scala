@@ -39,7 +39,7 @@ object StreamScale {
 
     val work = java.nio.file.Files.createTempDirectory("graft_stream_scale")
     val streamIn = work.resolve("in"); java.nio.file.Files.createDirectories(streamIn)
-    val docs = spark.read.parquet(s"$srcDir/documents.parquet").select("doc_id", "text")
+    val docs = Tables.documents(spark, srcDir).select("doc_id", "text")
 
     // one parquet file per chunk, modification times staggered so the
     // file source's default oldest-first ordering replays the exact

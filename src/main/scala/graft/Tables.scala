@@ -1,7 +1,13 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -9,6 +15,20 @@ import org.apache.spark.sql.functions._
   * column pruning on them. At cluster scale the same API would point at a
   * partitioned table root instead of a single file — the query code does not
   * change.
+  *
+  * Schema from the footer, on the driver: `spark.read.parquet(path)` with
+  * no schema infers one by running a one-task Spark job that reads the
+  * footer on an executor and converts it. For one file that job is pure
+  * fixed cost, paid by every query that opens a table (10 of the 19 jobs
+  * the benchmark's registry queries ran while their DataFrames were
+  * built). [[load]] reads the same footer here, without its row groups,
+  * converts it with the converter Spark's inference uses, built from the
+  * session's SQL conf at load time, and opens the file with that schema.
+  *
+  * No cache: every load reads the footer again (about 11 ms of CPU), so a
+  * file rewritten with another schema loads its new schema, and a conf
+  * that changes the conversion (`Tables.events`'s `nanosAsLong`) takes
+  * effect on the next load.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -16,7 +36,41 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    readParquet(spark, s"$dir/$name.parquet")
+
+  /** Parquet `paths` this engine wrote with one schema, opened with the
+    * schema of the first one's footer.
+    */
+  private[graft] def readParquet(spark: SparkSession, paths: String*): DataFrame =
+    footerSchema(spark, paths.head).fold(spark.read)(spark.read.schema(_)).parquet(paths: _*)
+
+  /** The schema Spark's inference would give `path`, read on the driver
+    * from the footer inference would read: the file itself, or in a flat
+    * directory the summary file if there is one, else the first data file
+    * by path. None for a directory with subdirectories, whose partition
+    * columns come from the paths; inference handles that one.
+    */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val status = fs.getFileStatus(p)
+    val file: Option[FileStatus] =
+      if (!status.isDirectory) Some(status)
+      else {
+        val entries = fs.listStatus(p).sortBy(_.getPath.toString)
+        def named(n: String) = entries.find(_.getPath.getName == n)
+        if (entries.exists(_.isDirectory)) None
+        else named("_common_metadata").orElse(named("_metadata"))
+          .orElse(entries.find(f => !f.getPath.getName.matches("[_.].*")))
+      }
+    file.map { f =>
+      val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    }
+  }
 
   /** `events.ts` has shipped as two different physical types across driver
     * testdata generations: INT64 TIMESTAMP(NANOS) (rounds 1-6) and

@@ -226,8 +226,10 @@ object ShingleIndex {
     val n = readMetaN(indexDir)
     val dirs = liveDirs(indexDir)
     require(dirs.nonEmpty, s"shingle index at $indexDir has no committed segments")
+    // every segment's writer fixes the same schema: read it from the
+    // first one's footer rather than infer it with a job per table
     def union(sub: String) =
-      spark.read.parquet(dirs.map(d => new Path(d, sub).toString): _*)
+      graft.Tables.readParquet(spark, dirs.map(d => new Path(d, sub).toString): _*)
     Frames(union("postings"), union("stats"), union("df"), n)
   }
 

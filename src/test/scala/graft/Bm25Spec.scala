@@ -10,7 +10,7 @@ class Bm25Spec extends SparkSpec {
   import spark.implicits._
 
   private def writeDocs(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25").toString
+    val dir = tempDir("graft_bm25").toString
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("src0"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -21,9 +21,9 @@ class CheckpointRecoverySpec extends SparkSpec {
   private val orphanTemp = ".0.7e19a18e-87e9-40d8-bf68-9c4c57db7f8d.tmp"
 
   private def freshDirs(): (String, String, String) = {
-    val src = Files.createTempDirectory("graft_ckrec_src").toString + "/store"
-    val tgt = Files.createTempDirectory("graft_ckrec_tgt").toString + "/store"
-    val ckpt = Files.createTempDirectory("graft_ckrec_ckpt").toString + "/ckpt"
+    val src = tempDir("graft_ckrec_src").toString + "/store"
+    val tgt = tempDir("graft_ckrec_tgt").toString + "/store"
+    val ckpt = tempDir("graft_ckrec_ckpt").toString + "/ckpt"
     (src, tgt, ckpt)
   }
 

@@ -95,7 +95,7 @@ class CodegenCacheSpec extends SparkSpec {
   }
 
   test("a second ETL pass and dashboard refresh compile no class") {
-    val dir = Files.createTempDirectory("graft_codegen_cache")
+    val dir = tempDir("graft_codegen_cache")
     val logPath = Files.write(dir.resolve("ssh.log"), syslog.asJava).toString
     val cold = etlAndRefresh(logPath, dir.resolve("store1").toString)
     assert(cold.map(_._2).sum > 0, s"the cold pass compiled nothing: $cold")

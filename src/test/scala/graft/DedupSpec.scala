@@ -214,7 +214,7 @@ class DedupSpec extends SparkSpec {
     // not vacuous: without the cap the new doc matches on boilerplate
     assert(status(Dedup.incrementalStatus(base, delta, "doc_id", "text",
       n = 2, threshold = 0.5, maxDf = 100)).map(_._2).last == "near_dup")
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_dedup_cap").toString
+    val idxDir = tempDir("graft_dedup_cap").toString
     graft.functions.ShingleIndex.bootstrap(base, "doc_id", "text", n = 2, idxDir)
     assert(status(graft.functions.ShingleIndex.incrementalStatusIndexed(
       graft.functions.ShingleIndex.read(spark, idxDir), delta, "doc_id", "text",

@@ -17,7 +17,7 @@ class DocStoreBloomSpec extends graft.SparkSpec {
   import spark.implicits._
 
   private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"graft_bloom_$tag").toString
+    tempDir(s"graft_bloom_$tag").toString
 
   private def shardsKept(plan: String): (Int, Int) = {
     val m = "Shards: (\\d+)/(\\d+)".r.findFirstMatchIn(plan)

@@ -31,7 +31,7 @@ class DocStoreConcurrencySpec extends SparkSpec {
   import spark.implicits._
 
   test("racing appends + serialized upserts/compaction lose no rows, stats, or schema fields") {
-    val dir = Files.createTempDirectory("graft_docstore_mw").toString
+    val dir = tempDir("graft_docstore_mw").toString
     // seed: keys 0..99 owned by the upserters (appenders never touch them)
     (0L until 100L).map(i => (i, 0L)).toDF("doc_id", "v")
       .coalesce(2).write.format("docstore").mode("append").save(dir)

@@ -16,7 +16,7 @@ class DocStoreCrudSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"graft_crud_$tag").toString
+    tempDir(s"graft_crud_$tag").toString
 
   private def writeRange(dir: String, ids: Range, tag: String): Unit =
     ids.map(i => (i.toLong, s"u$i", (i % 3).toDouble)).toDF("id", "name", "score")

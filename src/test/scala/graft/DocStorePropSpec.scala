@@ -58,7 +58,7 @@ class DocStorePropSpec extends SparkSpec {
   private def faultStore(gzip: Boolean): String = {
     import spark.implicits._
     val df = (1L to 200L).map(i => (i, s"doc$i", i * 1.5)).toDF("id", "s", "d")
-    val dir = Files.createTempDirectory("graft_docstore_fault").toString
+    val dir = tempDir("graft_docstore_fault").toString
     val w = df.coalesce(2).write.format("docstore").mode("overwrite")
     (if (gzip) w.option("compression", "gzip") else w).save(dir)
     dir
@@ -221,7 +221,7 @@ class DocStorePropSpec extends SparkSpec {
     */
   private def retentionStore(): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_docstore_vacuum").toString
+    val dir = tempDir("graft_docstore_vacuum").toString
     (1L to 100L).map(i => (i, s"doc$i")).toDF("id", "s")
       .coalesce(2).write.format("docstore").mode("overwrite").save(dir)
     (101L to 120L).map(i => (i, s"doc$i")).toDF("id", "s")
@@ -370,7 +370,7 @@ class DocStorePropSpec extends SparkSpec {
 
   test("maintenance ops hold a live heartbeat lease while they run") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_docstore_lease").toString
+    val dir = tempDir("graft_docstore_lease").toString
     (1L to 50L).map(i => (i, s"doc$i")).toDF("id", "s")
       .coalesce(1).write.format("docstore").mode("overwrite").save(dir)
     // the observation rides IN the data: upsert evaluates the incoming
@@ -392,7 +392,7 @@ class DocStorePropSpec extends SparkSpec {
 
   test("maintenance acquires OVER a crashed op's stale lease (atomic replace) and releases normally") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_docstore_lease_stale").toString
+    val dir = tempDir("graft_docstore_lease_stale").toString
     (1L to 50L).map(i => (i, s"doc$i")).toDF("id", "s")
       .coalesce(1).write.format("docstore").mode("overwrite").save(dir)
     // a crashed op's leftover: stale content AND stale mtime
@@ -419,7 +419,7 @@ class DocStorePropSpec extends SparkSpec {
 
   test("lease release is ownership-checked: an op never strips a lease it no longer owns") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_docstore_lease_own").toString
+    val dir = tempDir("graft_docstore_lease_own").toString
     (1L to 50L).map(i => (i, s"doc$i")).toDF("id", "s")
       .coalesce(1).write.format("docstore").mode("overwrite").save(dir)
     // Same in-the-data trick as the liveness test, but the probe row
@@ -487,7 +487,7 @@ class DocStorePropSpec extends SparkSpec {
       }
       val df = spark.createDataFrame(
         spark.sparkContext.parallelize(data, 3), schema)
-      val dir = Files.createTempDirectory(s"graft_docstore_prop").toString
+      val dir = tempDir(s"graft_docstore_prop").toString
       df.write.format("docstore").mode("overwrite").save(dir)
       val back = spark.read.format("docstore").load(dir).collect()
       val expect = df.collect()

@@ -14,7 +14,7 @@ class DocStoreSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpDir(tag: String): String = {
-    val d = Files.createTempDirectory(s"graft_docstore_$tag").toString
+    val d = tempDir(s"graft_docstore_$tag").toString
     d
   }
 

@@ -15,8 +15,8 @@ class DocStoreStreamingSpec extends SparkSpec {
   import spark.implicits._
 
   test("writeStream append: epochs accumulate, batch read sees all documents") {
-    val dir = Files.createTempDirectory("graft_docstore_stream").toString
-    val ckpt = Files.createTempDirectory("graft_docstore_ckpt").toString
+    val dir = tempDir("graft_docstore_stream").toString
+    val ckpt = tempDir("graft_docstore_ckpt").toString
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
     val in = MemoryStream[(Long, String)]
@@ -39,8 +39,8 @@ class DocStoreStreamingSpec extends SparkSpec {
       Seq((1L, "alice"), (2L, "bob"), (3L, "carol")))
 
     // the streaming sink honors compression too
-    val gzDir = Files.createTempDirectory("graft_docstore_stream_gz").toString
-    val gzCkpt = Files.createTempDirectory("graft_docstore_gz_ckpt").toString
+    val gzDir = tempDir("graft_docstore_stream_gz").toString
+    val gzCkpt = tempDir("graft_docstore_gz_ckpt").toString
     val in2 = MemoryStream[(Long, String)]
     val q2 = in2.toDF().toDF("id", "name")
       .writeStream.format("docstore").option("path", gzDir)
@@ -62,7 +62,7 @@ class DocStoreStreamingSpec extends SparkSpec {
   }
 
   test("readStream change-stream: batch appends surface as micro-batches, filter applies") {
-    val dir = Files.createTempDirectory("graft_docstore_src").toString
+    val dir = tempDir("graft_docstore_src").toString
 
     Seq((1L, "a"), (2L, "b")).toDF("id", "name").coalesce(1)
       .write.format("docstore").mode("overwrite").save(dir)
@@ -83,8 +83,8 @@ class DocStoreStreamingSpec extends SparkSpec {
   }
 
   test("complete output mode is rejected (append-only collection)") {
-    val dir = Files.createTempDirectory("graft_docstore_badmode").toString
-    val ckpt = Files.createTempDirectory("graft_docstore_badmode_ckpt").toString
+    val dir = tempDir("graft_docstore_badmode").toString
+    val ckpt = tempDir("graft_docstore_badmode_ckpt").toString
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = MemoryStream[(Long, String)]
     val agg = in.toDF().toDF("id", "name").groupBy("name").agg(count(lit(1)).as("n"))
@@ -102,7 +102,7 @@ class DocStoreStreamingSpec extends SparkSpec {
   }
 
   test("snapshot-pinned readStream is rejected (offsets come from the live listing)") {
-    val dir = Files.createTempDirectory("graft_docstore_verstream").toString
+    val dir = tempDir("graft_docstore_verstream").toString
     Seq((1L, "a")).toDF("id", "name")
       .write.format("docstore").mode("overwrite").save(dir)
     val ex = intercept[Exception] {
@@ -116,10 +116,10 @@ class DocStoreStreamingSpec extends SparkSpec {
   }
 
   test("two streaming queries appending to one collection never delete each other's epochs") {
-    val dir = Files.createTempDirectory("graft_docstore_twoq").toString
+    val dir = tempDir("graft_docstore_twoq").toString
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     def run(tag: String, ids: Seq[Long]): Unit = {
-      val ckpt = Files.createTempDirectory(s"graft_docstore_twoq_$tag").toString
+      val ckpt = tempDir(s"graft_docstore_twoq_$tag").toString
       val in = MemoryStream[(Long, String)]
       val q = in.toDF().toDF("id", "name").writeStream.format("docstore")
         .option("path", dir).option("checkpointLocation", ckpt)

@@ -15,7 +15,7 @@ class DocStoreUpsertSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"graft_upsert_$tag").toString
+    tempDir(s"graft_upsert_$tag").toString
 
   private def writeRange(dir: String, ids: Range): Unit =
     ids.map(i => (i.toLong, s"u$i", (i % 3).toDouble)).toDF("id", "name", "score")

@@ -60,7 +60,7 @@ class DocStoreZoneMapPropSpec extends SparkSpec {
         Row(i.toLong, r._1, r._2, r._3)
       }
       val df = spark.createDataFrame(spark.sparkContext.parallelize(data, 1), schema)
-      val dir = Files.createTempDirectory("graft_zonemap_prop").toString
+      val dir = tempDir("graft_zonemap_prop").toString
       // range-partition on id so shards get genuinely different zone maps
       df.repartitionByRange(4, col("id")).write.format("docstore").mode("overwrite").save(dir)
       val store = spark.read.format("docstore").load(dir)

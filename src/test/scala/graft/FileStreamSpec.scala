@@ -11,7 +11,7 @@ class FileStreamSpec extends SparkSpec {
   import spark.implicits._
 
   test("readStream.text directory ingest: parse + count equals batch") {
-    val dir = Files.createTempDirectory("graft_stream_in").toFile
+    val dir = tempDir("graft_stream_in").toFile
     val lines = Seq(
       "Dec 10 06:55:46 LabSZ sshd[1]: Invalid user a from 1.2.3.4",
       "Dec 10 06:56:00 LabSZ sshd[2]: Invalid user b from 1.2.3.5",

@@ -23,7 +23,7 @@ class IncrementalReportSpec extends SparkSpec {
     df.collect().toSeq.map(_.toSeq)
 
   test("merged persisted partials == one-shot report; history never re-scanned") {
-    val tmp = java.nio.file.Files.createTempDirectory("inc_report").toString
+    val tmp = tempDir("inc_report").toString
     // each batch computes and persists its partials from ONLY its slice
     (0 until 4).foreach { b =>
       QueriesExt.reportPartials(

@@ -38,7 +38,7 @@ class LayoutSpec extends SparkSpec {
         .getOrElse(fail(s"no Shards: marker in plan:\n$plan"))
       (m.group(1).toInt, m.group(2).toInt)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_layout").toString
+    val dir = tempDir("graft_layout").toString
 
     Layout.zorderCluster(grid, $"x", $"y", nShards = 16)
       .write.format("docstore").mode("overwrite").save(s"$dir/zorder")
@@ -85,7 +85,7 @@ class LayoutSpec extends SparkSpec {
     val rnd = new scala.util.Random(13L)
     val pts = (0 until 20000).map(i => (i.toLong, rnd.nextInt(1000).toLong, rnd.nextInt(24).toLong))
       .toDF("id", "x", "y")
-    val dir = java.nio.file.Files.createTempDirectory("graft_layout_runs").toString
+    val dir = tempDir("graft_layout_runs").toString
     def run(extraRdds: Int): (Map[Int, Set[Long]], String) = {
       (0 until extraRdds).foreach(_ => spark.sparkContext.parallelize(Seq(1)))
       val clustered = Layout.zorderCluster(pts, $"x", $"y", nShards = 16)

@@ -41,7 +41,7 @@ class LeaseFuzzSpec extends SparkSpec {
 
   private def newStore(): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_lease_fuzz").toString
+    val dir = tempDir("graft_lease_fuzz").toString
     (1L to 200L).map(i => (i, s"doc$i")).toDF("id", "s")
       .coalesce(4).write.format("docstore").mode("overwrite").save(dir)
     dir
@@ -87,6 +87,9 @@ class LeaseFuzzSpec extends SparkSpec {
     pump.setDaemon(true)
     pump.start()
     def tail: String = output.synchronized(output.toString.takeRight(2000))
+    /** Kill the peer and wait for it to exit, so the suite's temp-dir
+      * clean-up never races a live peer's writes. */
+    def stop(): Unit = process.destroyForcibly().waitFor(30, java.util.concurrent.TimeUnit.SECONDS)
   }
 
   private def leasePath(dir: String) =
@@ -135,7 +138,7 @@ class LeaseFuzzSpec extends SparkSpec {
       // and vacuum still works when genuinely idle
       DocStoreMaintenance.vacuum(dir, 1)
       assertIntact(dir, "after final vacuum")
-    } finally peer.process.destroyForcibly()
+    } finally peer.stop()
   }
 
   test(s"kill -9 mid-op: fresh leftover lease gates vacuum, stale is swept, next op recovers (seed $seed)") {
@@ -189,6 +192,6 @@ class LeaseFuzzSpec extends SparkSpec {
       assertIntact(dir, "after kill + recovery")
       DocStoreMaintenance.vacuum(dir, 1)
       assertIntact(dir, "after post-recovery vacuum")
-    } finally peer.process.destroyForcibly()
+    } finally peer.stop()
   }
 }

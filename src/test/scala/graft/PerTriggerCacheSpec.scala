@@ -40,7 +40,7 @@ class PerTriggerCacheSpec extends SparkSpec {
   }
 
   private def ingest(indexDir: Option[String])(mem: MemoryStream[(Long, String)]) = {
-    val store = Files.createTempDirectory("graft_leak_store").toString
+    val store = tempDir("graft_leak_store").toString
     base.toDF("doc_id", "text").coalesce(1).write.format("docstore").mode("append").save(store)
     StreamingAnalytics.streamingIngest(mem.toDF().toDF("doc_id", "text"), store,
       indexDir = indexDir)
@@ -57,6 +57,6 @@ class PerTriggerCacheSpec extends SparkSpec {
   }
 
   test("indexed streamingIngest leaves no cache entry per trigger") {
-    assertNoLeak(ingest(Some(Files.createTempDirectory("graft_leak_idx").toString + "/idx")))
+    assertNoLeak(ingest(Some(tempDir("graft_leak_idx").toString + "/idx")))
   }
 }

@@ -50,7 +50,7 @@ class PlanFingerprintSpec extends SparkSpec {
   }
 
   test("parquet scan + top-k: sc and top categories") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fp").toString
+    val dir = tempDir("graft_fp").toString
     noAqe.range(100).selectExpr("id", "id % 3 AS k").write.mode("overwrite").parquet(dir)
     val df = noAqe.read.parquet(dir).filter(col("k") === 1).orderBy("id").limit(5)
     val f = fp(df)
@@ -58,7 +58,7 @@ class PlanFingerprintSpec extends SparkSpec {
   }
 
   test("scalar subquery plans count toward the fingerprint") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fp_sub").toString
+    val dir = tempDir("graft_fp_sub").toString
     noAqe.range(100).selectExpr("id", "id % 3 AS k").write.mode("overwrite").parquet(dir)
     noAqe.read.parquet(dir).createOrReplaceTempView("fp_t")
     val df = noAqe.sql("SELECT id FROM fp_t WHERE id > (SELECT avg(id) FROM fp_t)")

@@ -18,7 +18,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 class ShingleIndexSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String) = tempDir(prefix).toString
 
   /** Canonical comparison: status rows keyed by doc_id. */
   private def rows(df: DataFrame): Seq[(Long, String, Option[Any], Option[Any])] =

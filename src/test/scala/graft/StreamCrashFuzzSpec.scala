@@ -111,9 +111,9 @@ class StreamCrashFuzzSpec extends SparkSpec {
     var landedKills = 0
     (0 until nSeeds).foreach { k =>
       val seed = seedBase + k
-      val srcDir = Files.createTempDirectory(s"graft_scf_src_$k").toString
-      val tgtDir = Files.createTempDirectory(s"graft_scf_tgt_$k").toString + "/store"
-      val ckptDir = Files.createTempDirectory(s"graft_scf_ckpt_$k").toString + "/ckpt"
+      val srcDir = tempDir(s"graft_scf_src_$k").toString
+      val tgtDir = tempDir(s"graft_scf_tgt_$k").toString + "/store"
+      val ckptDir = tempDir(s"graft_scf_ckpt_$k").toString + "/ckpt"
       // wipe srcDir so the peer's first append creates the collection
       new java.io.File(srcDir).delete()
 
@@ -179,9 +179,9 @@ class StreamCrashFuzzSpec extends SparkSpec {
     var landedKills = 0
     (0 until nSeeds).foreach { k =>
       val seed = seedBase + 7000 + k // disjoint deadline stream from the sink test
-      val srcDir = Files.createTempDirectory(s"graft_scfi_src_$k").toString
-      val tgtDir = Files.createTempDirectory(s"graft_scfi_tgt_$k").toString + "/store"
-      val ckptDir = Files.createTempDirectory(s"graft_scfi_ckpt_$k").toString + "/ckpt"
+      val srcDir = tempDir(s"graft_scfi_src_$k").toString
+      val tgtDir = tempDir(s"graft_scfi_tgt_$k").toString + "/store"
+      val ckptDir = tempDir(s"graft_scfi_ckpt_$k").toString + "/ckpt"
       new java.io.File(srcDir).delete()
 
       val (rc1, out1) = runPeer(srcDir, tgtDir, ckptDir, seed, halt = true, mode = "ingest")

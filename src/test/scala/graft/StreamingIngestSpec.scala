@@ -53,7 +53,7 @@ class StreamingIngestSpec extends SparkSpec {
   )
 
   private def runSplit(batches: Seq[Seq[(Long, String)]]): Map[Long, String] = {
-    val dir = Files.createTempDirectory("graft_ingest_store").toString
+    val dir = tempDir("graft_ingest_store").toString
     Seq((1L, baseA), (2L, baseB), (3L, baseC)).toDF("doc_id", "text")
       .coalesce(1).write.format("docstore").mode("append").save(dir)
 
@@ -89,7 +89,7 @@ class StreamingIngestSpec extends SparkSpec {
     // metadata on a long stream — the documented growth). vacuum is the
     // answer, and it must not disturb the ingested store. Run in the
     // stream's writer-free window (the single-maintenance-writer rule).
-    val dir = Files.createTempDirectory("graft_ingest_vac").toString
+    val dir = tempDir("graft_ingest_vac").toString
     Seq((1L, baseA), (2L, baseB), (3L, baseC)).toDF("doc_id", "text")
       .coalesce(1).write.format("docstore").mode("append").save(dir)
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -119,8 +119,8 @@ class StreamingIngestSpec extends SparkSpec {
     // The composed claim end-to-end: a SOURCE docstore collection's
     // change stream (batch appends surfacing as micro-batches) feeds
     // streamingIngest into a TARGET collection — no MemoryStream anywhere.
-    val src = Files.createTempDirectory("graft_ingest_src").toString
-    val dir = Files.createTempDirectory("graft_ingest_tgt").toString
+    val src = tempDir("graft_ingest_src").toString
+    val dir = tempDir("graft_ingest_tgt").toString
     Seq((1L, baseA), (2L, baseB), (3L, baseC)).toDF("doc_id", "text")
       .coalesce(1).write.format("docstore").mode("append").save(dir)
 
@@ -170,7 +170,7 @@ class StreamingIngestSpec extends SparkSpec {
     // 107-106) must hit the mechanical bound — loud IllegalArgumentException
     // naming the recipe, not a silently-growing driver collect. The limit+1
     // pull also means the driver materialized at most 2 rows proving it.
-    val dir = Files.createTempDirectory("graft_ingest_guard").toString
+    val dir = tempDir("graft_ingest_guard").toString
     Seq((1L, baseA)).toDF("doc_id", "text")
       .coalesce(1).write.format("docstore").mode("append").save(dir)
     val batch = delta.filter(d => Set(101L, 106L, 107L)(d._1)).toDF("doc_id", "text")
@@ -197,9 +197,9 @@ class StreamingIngestSpec extends SparkSpec {
     // uninterrupted run's.
     val expected = runSplit(Seq(delta)) // uninterrupted reference
 
-    val src = Files.createTempDirectory("graft_ingest_rsrc").toString
-    val dir = Files.createTempDirectory("graft_ingest_rtgt").toString
-    val ckpt = Files.createTempDirectory("graft_ingest_rckpt").toString
+    val src = tempDir("graft_ingest_rsrc").toString
+    val dir = tempDir("graft_ingest_rtgt").toString
+    val ckpt = tempDir("graft_ingest_rckpt").toString
     Seq((1L, baseA), (2L, baseB), (3L, baseC)).toDF("doc_id", "text")
       .coalesce(1).write.format("docstore").mode("append").save(dir)
     delta.slice(0, 3).toDF("doc_id", "text").coalesce(1)
@@ -236,8 +236,8 @@ class StreamingIngestSpec extends SparkSpec {
   private def runSplitIndexed(batches: Seq[Seq[(Long, String)]],
                               compactEvery: Int = 64)
       : (Map[Long, String], String) = {
-    val dir = Files.createTempDirectory("graft_ingest_idx_store").toString
-    val idx = Files.createTempDirectory("graft_ingest_idx_idx").toString + "/idx"
+    val dir = tempDir("graft_ingest_idx_store").toString
+    val idx = tempDir("graft_ingest_idx_idx").toString + "/idx"
     Seq((1L, baseA), (2L, baseB), (3L, baseC)).toDF("doc_id", "text")
       .coalesce(1).write.format("docstore").mode("append").save(dir)
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -285,10 +285,10 @@ class StreamingIngestSpec extends SparkSpec {
   test("indexed checkpoint restart: replay against BOTH index crash windows converges") {
     val expected = runSplit(Seq(delta)) // uninterrupted re-derive reference
 
-    val src = Files.createTempDirectory("graft_ingest_irsrc").toString
-    val dir = Files.createTempDirectory("graft_ingest_irtgt").toString
-    val ckpt = Files.createTempDirectory("graft_ingest_irckpt").toString
-    val idx = Files.createTempDirectory("graft_ingest_iridx").toString + "/idx"
+    val src = tempDir("graft_ingest_irsrc").toString
+    val dir = tempDir("graft_ingest_irtgt").toString
+    val ckpt = tempDir("graft_ingest_irckpt").toString
+    val idx = tempDir("graft_ingest_iridx").toString + "/idx"
     Seq((1L, baseA), (2L, baseB), (3L, baseC)).toDF("doc_id", "text")
       .coalesce(1).write.format("docstore").mode("append").save(dir)
     delta.slice(0, 3).toDF("doc_id", "text").coalesce(1)

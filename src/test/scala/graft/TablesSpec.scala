@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -54,5 +55,46 @@ class TablesSpec extends SparkSpec {
       val n = Tables.load(spark, dir, name).count()
       assert(n > 0L, s"count($name) == 0")
     }
+  }
+
+  /** `body` with `nanosAsLong` set to `on`, the session's value restored after. */
+  private def withNanosAsLong[T](on: Boolean)(body: => T): T = {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, on.toString)
+    try body finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("load's footer schema is the one inference gives, every table, nanosAsLong off and on") {
+    for (sf <- Seq("sf0.001", "sf0.01"); on <- Seq(false, true); name <- Tables.names) {
+      val d = s"/root/testdata/$sf"
+      withNanosAsLong(on) {
+        assert(Tables.load(spark, d, name).schema == spark.read.parquet(s"$d/$name.parquet").schema,
+          s"$sf/$name with nanosAsLong=$on")
+      }
+    }
+  }
+
+  test("a table rewritten with another schema loads the new schema") {
+    import spark.implicits._
+    val d = tempDir("graft_tables_rewrite").toString
+    Seq((1L, "a")).toDF("id", "s").write.parquet(s"$d/t.parquet")
+    assert(Tables.load(spark, d, "t").schema.fieldNames.toSeq == Seq("id", "s"))
+    Seq((2.5, 3)).toDF("x", "y").write.mode("overwrite").parquet(s"$d/t.parquet")
+    val back = Tables.load(spark, d, "t")
+    assert(back.schema == spark.read.parquet(s"$d/t.parquet").schema)
+    assert(back.schema.fieldNames.toSeq == Seq("x", "y"))
+    assert(back.collect().toSeq == Seq(Row(2.5, 3)))
+  }
+
+  test("a Spark-written directory of two part files loads") {
+    val d = tempDir("graft_tables_parts").toString
+    spark.range(0, 10, 1, 2).select(col("id"), col("id").cast("string").as("s"))
+      .write.parquet(s"$d/two.parquet")
+    val parts = new java.io.File(s"$d/two.parquet").list().count(_.endsWith(".parquet"))
+    assert(parts == 2, s"expected two part files, got $parts")
+    val back = Tables.load(spark, d, "two")
+    assert(back.schema == spark.read.parquet(s"$d/two.parquet").schema)
+    assert(back.select("id").collect().map(_.getLong(0)).sorted.toSeq == (0L until 10L))
   }
 }

@@ -103,7 +103,7 @@ class TrainingPrepSpec extends SparkSpec {
     // an ALL-null group — that case lives here: before the r11 left-join
     // fix the group silently vanished (inner join with the IS NOT NULL
     // histogram side, posexplode of a null zip emitting zero rows)
-    val dir = java.nio.file.Files.createTempDirectory("graft_a19_allnull").toString
+    val dir = tempDir("graft_a19_allnull").toString
     val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     Seq(
       (1L, ts, 1L, "ok", Option(1.0), "{}"),

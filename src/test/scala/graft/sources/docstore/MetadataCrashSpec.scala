@@ -20,7 +20,7 @@ class MetadataCrashSpec extends SparkSpec {
     // sits beside the file (the pre-fix torn state, or hand tampering) —
     // the next metadata WRITE must heal it rather than crash on it.
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_docstore_meta_crash").toString
+    val dir = tempDir("graft_docstore_meta_crash").toString
     (1L to 20L).map(i => (i, s"doc$i")).toDF("id", "s")
       .coalesce(1).write.format("docstore").mode("overwrite").save(dir)
     val statsBefore = DocStore.readStats(dir)
@@ -52,7 +52,7 @@ class MetadataCrashSpec extends SparkSpec {
     // manifest. And the unconditional dropCrcSidecar stripped checksum
     // verification from a file the loser never owned. Both must hold:
     // lost claim → false, winner's bytes intact, winner's crc intact.
-    val dir = Files.createTempDirectory("graft_docstore_claim").toString
+    val dir = tempDir("graft_docstore_claim").toString
     val hp = new org.apache.hadoop.fs.Path(dir, "v000001.json")
     val winner = """{"owner":"winner"}""".getBytes("UTF-8")
     assert(DocStore.writeFileAtomic(hp, winner, overwrite = false),

@@ -45,10 +45,11 @@ object Tables {
     footerSchema(spark, paths.head).fold(spark.read)(spark.read.schema(_)).parquet(paths: _*)
 
   /** The schema Spark's inference would give `path`, read on the driver
-    * from the footer inference would read: the file itself, or in a flat
+    * from the footer inference would read: the file itself, or in a
     * directory the summary file if there is one, else the first data file
-    * by path. None for a directory with subdirectories, whose partition
-    * columns come from the paths; inference handles that one.
+    * by path. None for a directory with no file of its own (a partitioned
+    * layout, whose partition columns come from the paths); inference
+    * handles that one.
     */
   private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
     val conf = spark.sessionState.newHadoopConf()
@@ -58,11 +59,10 @@ object Tables {
     val file: Option[FileStatus] =
       if (!status.isDirectory) Some(status)
       else {
-        val entries = fs.listStatus(p).sortBy(_.getPath.toString)
-        def named(n: String) = entries.find(_.getPath.getName == n)
-        if (entries.exists(_.isDirectory)) None
-        else named("_common_metadata").orElse(named("_metadata"))
-          .orElse(entries.find(f => !f.getPath.getName.matches("[_.].*")))
+        val files = fs.listStatus(p).filter(_.isFile).sortBy(_.getPath.toString)
+        def named(n: String) = files.find(_.getPath.getName == n)
+        named("_common_metadata").orElse(named("_metadata"))
+          .orElse(files.find(f => !f.getPath.getName.matches("[_.].*")))
       }
     file.map { f =>
       val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf),

@@ -1,6 +1,5 @@
 package graft.sources.docstore
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 

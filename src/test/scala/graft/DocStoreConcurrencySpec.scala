@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.{Callable, Executors, TimeUnit}
 
 import org.apache.spark.sql.functions._

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import graft.streaming.{StreamRun, StreamingAnalytics}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

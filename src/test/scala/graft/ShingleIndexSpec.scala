@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import graft.functions.{Dedup, ShingleIndex}
 import graft.streaming.StreamingAnalytics

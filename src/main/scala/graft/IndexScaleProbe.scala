@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
   * — classification by per-trigger re-derive
   * ([[graft.streaming.StreamingAnalytics.ingestBatch]]) vs served by the
   * persistent [[graft.functions.ShingleIndex]]
-  * ([[graft.streaming.StreamingAnalytics.ingestBatchIndexed]]) — and
+  * (the same body given an index dir and segment id) — and
   * measures per-trigger wall time as the store grows.
   *
   * The claim under test is the 100 TB shape: re-derive re-reads and
@@ -56,8 +56,8 @@ object IndexScaleProbe {
       val tA = timed(graft.streaming.StreamingAnalytics
         .ingestBatch(chunks(b), storeA, n = 5, threshold = 0.5, maxDf = 100))
       val tB = timed(graft.streaming.StreamingAnalytics
-        .ingestBatchIndexed(chunks(b), storeB, idxDir, f"b$b%09d",
-          n = 5, threshold = 0.5, maxDf = 100))
+        .ingestBatch(chunks(b), storeB, n = 5, threshold = 0.5, maxDf = 100,
+          index = Some(idxDir -> f"b$b%09d")))
       if ((b + 1) % compactEvery == 0)
         graft.functions.ShingleIndex.compact(spark, idxDir)
       println(f"[idx-probe] batch $b%2d  rederive=$tA%6.2fs  indexed=$tB%6.2fs")

@@ -216,11 +216,20 @@ object PlanCheck {
       "every documents scan reading text sits under a broadcast (delta only)" ->
         (p => {
           import org.apache.spark.sql.execution.FileSourceScanExec
-          def textScans(t: org.apache.spark.sql.execution.SparkPlan) = t.collect {
-            case s: FileSourceScanExec
-                if s.relation.location.rootPaths.exists(_.toString.contains("documents"))
-                  && s.output.exists(_.name == "text") => s
-          }
+          // descends into cached plans, as subtreeHasExpr does: the delta's
+          // text scan sits inside its cached slim shingle frame
+          def textScans(t: org.apache.spark.sql.execution.SparkPlan): Seq[FileSourceScanExec] =
+            t.collect {
+              case s: FileSourceScanExec
+                  if s.relation.location.rootPaths.exists(_.toString.contains("documents"))
+                    && s.output.exists(_.name == "text") => Seq(s)
+              case im: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+                textScans(im.relation.cachedPlan)
+              case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+                textScans(a.executedPlan)
+              case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+                textScans(qs.plan)
+            }.flatten
           val all = textScans(p)
           val underBroadcast = broadcastSubtreePlans(p).flatMap(textScans).toSet
           // the delta re-tokenize is real, and the base never contributes

@@ -184,7 +184,19 @@ object PlanFingerprint {
     "sim_sq8" -> ("sc4.hx3.rx2.bx3.bhj2.bnl1.win3.srt7",
       "r18 Guards.spread before the per-row kernel (guide \u00a72.5): +rx1 via the SQ8 encode scan's spread"),
     "tx_token_counts" -> ("sc1.rx2.srt1",
-      SpreadDelta)
+      SpreadDelta),
+    "dd_incremental" -> ("sc1.im9.hx7.rx1.bx9.rex3.bhj12.agg14.win1.srt3.gen7",
+      "one incremental-classification body over ShingleIndex.derive's frames: " +
+        "the hot set sums the df partials (+agg), size_b is counted for the " +
+        "candidate docs only by a semi join of the postings with the candidate " +
+        "ids (+bhj, +agg, +gen; the corpus-wide size aggregate goes), and the " +
+        "id column is read from the delta scan (+sc1)"),
+    "dd_incremental_indexed" -> ("sc6.im4.hx7.rx1.bx9.rex3.bhj12.agg12.win1.srt3.gen3",
+      "the same classification body as dd_incremental over the index's " +
+        "frames: the delta is tokenized once into its cached slim frame " +
+        "(im4) instead of one scan per consumer (sc11->sc6), and size_b is " +
+        "the candidates' postings outside the hot set (the stats join and " +
+        "hot-count join go: bhj14->bhj12)")
   )
 }
 

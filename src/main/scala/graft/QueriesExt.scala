@@ -1499,9 +1499,10 @@ object QueriesExt {
     (s, d) => {
       val all = docs(s, d)
       Dedup.incrementalStatus(
-        all.filter(pmod(col("doc_id"), lit(10)) =!= 7),
+        graft.functions.ShingleIndex.derive(
+          all.filter(pmod(col("doc_id"), lit(10)) =!= 7), "doc_id", "text", n = 5),
         all.filter(pmod(col("doc_id"), lit(10)) === 7),
-        "doc_id", "text", n = 5, threshold = 0.5, maxDf = 100)
+        "doc_id", "text", threshold = 0.5, maxDf = 100)
         .orderBy("doc_id")
     })
 
@@ -1522,7 +1523,7 @@ object QueriesExt {
       val delta = all.filter(pmod(col("doc_id"), lit(10)) === 7)
       val idxDir = s"/tmp/graft_shidx_${Integer.toHexString(d.hashCode)}"
       graft.functions.ShingleIndex.rebuild(base, "doc_id", "text", 5, idxDir)
-      graft.functions.ShingleIndex.incrementalStatusIndexed(
+      Dedup.incrementalStatus(
         graft.functions.ShingleIndex.read(s, idxDir), delta,
         "doc_id", "text", threshold = 0.5, maxDf = 100)
         .orderBy("doc_id")

@@ -224,7 +224,8 @@ object StreamDegen {
       // so a nonempty chunk can never be filtered on only one side)
       val batchTwins = chunks.filter(_.nonEmpty).map { c =>
         graft.functions.Dedup.incrementalStatus(
-            base, c.toDF("doc_id", "text"), "doc_id", "text", 2, 0.5, 100)
+            graft.functions.ShingleIndex.derive(base, "doc_id", "text", 2),
+            c.toDF("doc_id", "text"), "doc_id", "text", 0.5, 100)
           .collect().map(r => r.getLong(0) -> ((r.getString(1),
             Option(r.get(2)).map(_.asInstanceOf[Long])))).toMap
       }

@@ -149,50 +149,8 @@ object Dedup {
     * trigger, without end. Uncached, the subtree is re-evaluated per
     * consumer within the one action — the right trade for micro-batches.
     */
-  private def cachedUnless(perTrigger: Boolean)(df: DataFrame): DataFrame =
+  private[functions] def cachedUnless(perTrigger: Boolean)(df: DataFrame): DataFrame =
     if (perTrigger) df else df.cache()
-
-  /** The classification tail of [[incrementalStatus]] and
-    * [[ShingleIndex.incrementalStatusIndexed]]: the exact arm, the capped
-    * jaccard, the best near match (max jaccard, ties to min base id) and
-    * the status. Inputs: `ids` (doc_id), one row per delta doc; `bh`
-    * (base_id, th); `dh` (doc_id, th); `deltaShU` the delta's capped
-    * (doc_id, shingle) rows; `common` (doc_id, base_id, common); and
-    * `baseSizes` (base_id, size_b) covering every candidate base doc. The
-    * callers keep their own hot set and `size_b` derivations. `bc` wraps
-    * every delta-side join input: a broadcast, or the degraded-path guard.
-    * `baseSizes` may be corpus-sized and the candidate set (delta ×
-    * capped matches) is the small side, so the candidates take `bc` and
-    * the sizes join streams the big table map-side.
-    */
-  private[functions] def classify(ids: DataFrame, bh: DataFrame, dh: DataFrame,
-                                  deltaShU: DataFrame, common: DataFrame,
-                                  baseSizes: DataFrame, threshold: Double,
-                                  bc: DataFrame => DataFrame): DataFrame = {
-    val exactM = bh.join(bc(dh), "th")
-      .groupBy("doc_id").agg(min("base_id").as("exact_match"))
-    val deltaSizes = deltaShU.groupBy("doc_id").agg(count(lit(1)).as("size_d"))
-    val rawJ = col("common").cast("double") * 1.0 /
-      (col("size_d") + col("size_b") - col("common"))
-    val best = Window.partitionBy("doc_id").orderBy(desc("j"), col("base_id"))
-    val nearM = baseSizes
-      .join(bc(common.join(bc(deltaSizes), "doc_id")), "base_id")
-      .filter(rawJ >= threshold)
-      .withColumn("j", rawJ)
-      .withColumn("rn", row_number().over(best))
-      .filter(col("rn") === 1)
-      .select(col("doc_id"), col("base_id").as("near_match"),
-        Rounding.round4(col("j")).as("near_jaccard"))
-    ids
-      .join(bc(exactM), Seq("doc_id"), "left")
-      .join(bc(nearM), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("exact_match").isNotNull, "exact_dup")
-          .when(col("near_match").isNotNull, "near_dup")
-          .otherwise("new").as("status"),
-        coalesce(col("exact_match"), col("near_match")).as("match_id"),
-        when(col("exact_match").isNull, col("near_jaccard")).as("jaccard"))
-  }
 
   // ---- entry points ------------------------------------------------------
 
@@ -559,9 +517,9 @@ object Dedup {
   }
 
   /** Incremental dedup: classify each document of a NEW batch (`delta`)
-    * against an existing corpus (`base`) as `exact_dup` (identical text in
-    * base, by 64-bit hash — same collision convention as [[exact]]),
-    * `near_dup` (word-n-gram jaccard ≥ threshold with some base doc), or
+    * against an existing corpus as `exact_dup` (identical text in the
+    * corpus, by 64-bit hash — same collision convention as [[exact]]),
+    * `near_dup` (word-n-gram jaccard ≥ threshold with some corpus doc), or
     * `new`. Returns one row per delta doc: (doc_id, status, match_id,
     * jaccard) — match_id is the min matching base id for exact dups, else
     * the best near-dup (max jaccard, ties to min id); jaccard is null
@@ -569,62 +527,70 @@ object Dedup {
     * continuously-ingested corpus: the delta is classified WITHOUT
     * re-clustering the base.
     *
-    * Scale shape — the base corpus is never re-shuffled as pairs:
-    *   - exact: base reduces to (id, hash) map-side; the delta's hashes
-    *     broadcast into it (one map-only probe of the base scan).
-    *   - shingle df: ONE groupBy(shingle) over the base index with map-side
-    *     partial counts — the only base-wide shuffle in the query.
-    *   - df-cap: the HOT shingle set (df > maxDf) is small by construction
-    *     (it is the boilerplate tail), so both sides cap via a broadcast
-    *     LEFT ANTI join — map-only, unlike the window formulation.
-    *   - candidates: the capped delta shingle set broadcasts into the
-    *     capped base index; only narrow (delta_id, base_id) pairs shuffle
-    *     to the count aggregate.
-    * Jaccard is computed over the capped shingle universe on BOTH sides
-    * (a delta shingle absent from base has df 0 and stays), so sizes and
-    * intersections agree with what the join can see.
+    * The corpus is a [[ShingleIndex.Frames]] shingle source, and this is
+    * the one classification body for both kinds:
+    *   - [[ShingleIndex.derive]] over a base frame: every evaluation scans
+    *     and tokenizes the base text (a batch caller caches the slim
+    *     frame, so that happens once per call).
+    *   - [[ShingleIndex.read]] of a persistent index: slim parquet scans,
+    *     no base text read and no base tokenization.
     *
-    * The delta-side broadcasts are a CONTRACT — and since round 10 the
-    * contract is MECHANICAL, not documentary: the operator counts the
-    * delta once and, above `deltaBroadcastLimit` rows (or 2M exploded
-    * shingle rows), degrades every delta-side broadcast to a keyed
-    * shuffle join (both shingle-join inputs stage-bound on the key under
-    * AQE — the explode hides their true size from static estimation, the
-    * exact blind-broadcast class SCALE.md's x100p run measured at 145 s /
-    * driver-threatening — or pinned to sort-merge with AQE off).
-    * Chunking the delta is NOT needed for correctness — delta docs are
-    * only ever compared to base, never to each other, so the degraded
-    * plan computes the identical answer in one base pass instead of one
-    * per chunk. Callers with genuinely bounded batches (a crawl snapshot)
-    * never hit the count threshold and keep the broadcast plan; a
-    * corpus-vs-corpus comparison still belongs to [[ngramJaccardPairs]],
-    * whose index self-join is built for it. `deltaBroadcastLimit` is a
-    * setting so that a small fixture can reach the degraded plan
-    * (DedupSpec's two degraded-path tests); production callers keep the
-    * default.
+    * Scale shape — the corpus is never re-shuffled as pairs:
+    *   - exact: the delta's hashes broadcast into the (base_id, th) stats
+    *     (one map-only probe).
+    *   - df-cap: the HOT shingle set (merged df > maxDf, a groupBy-sum over
+    *     the df partials) is small by construction (it is the boilerplate
+    *     tail), so the delta caps via a broadcast LEFT ANTI join. The
+    *     postings stay uncapped: joined with the capped delta shingles
+    *     they only ever match capped ones.
+    *   - candidates: the capped delta shingle set broadcasts into the
+    *     postings; only narrow (delta_id, base_id) pairs shuffle to the
+    *     count aggregate.
+    *   - `size_b` for CANDIDATE docs only: n_total minus the doc's hot
+    *     shingles, counted as its postings outside the hot set — a join of
+    *     the postings with the candidate ids, never a corpus aggregate.
+    * Jaccard is computed over the capped shingle universe on BOTH sides
+    * (a delta shingle absent from the corpus has df 0 and stays), so sizes
+    * and intersections agree with what the join can see.
+    *
+    * The delta-side broadcasts are a CONTRACT, and a MECHANICAL one: the
+    * operator counts the delta once and, above `deltaBroadcastLimit` rows
+    * (or 2M exploded shingle rows), degrades every delta-side broadcast to
+    * a keyed shuffle join (the postings and delta-derived inputs
+    * stage-bound on the join key under AQE — an explode hides its true
+    * size from static estimation, the blind-broadcast class SCALE.md's
+    * x100p run measured at 145 s — or pinned to sort-merge with AQE off).
+    * Only the hot-set LEFT ANTI caps keep their broadcast. Chunking the
+    * delta is NOT needed for correctness — delta docs are only ever
+    * compared to the corpus, never to each other, so the degraded plan
+    * computes the identical answer in one pass. A corpus-vs-corpus
+    * comparison still belongs to [[ngramJaccardPairs]], whose index
+    * self-join is built for it. `deltaBroadcastLimit` is a setting so
+    * that a small fixture can reach the degraded plan (DedupSpec);
+    * production callers keep the default.
     *
     * `perTrigger = true` is the setting for a caller that runs once per
     * streaming trigger ([[graft.streaming.StreamingAnalytics]]'s
-    * `incrementalDedupStream` and `streamingIngest`): nothing is cached,
-    * and the delta — a micro-batch, bounded by the stream's own contract —
+    * `incrementalDedupStream` and `ingestBatch`): nothing is cached, and
+    * the delta — a micro-batch, bounded by the stream's own contract —
     * keeps the broadcast plan without the count, whose job would
     * re-tokenize the uncached delta on every trigger.
     *
     * Jobs and caches: a batch call (the default) runs ONE job while the
-    * DataFrame is built — the delta count above — and leaves two cache
-    * entries (the delta's and the base's slim shingle frames) for
-    * [[graft.GraftSession.clearCaches]]. A `perTrigger` call runs no job
-    * and caches nothing.
+    * DataFrame is built — the delta count above — and leaves one cache
+    * entry (the delta's slim shingle frame) for
+    * [[graft.GraftSession.clearCaches]], beside whatever `src` holds. A
+    * `perTrigger` call runs no job and caches nothing.
     */
-  def incrementalStatus(base: DataFrame, delta: DataFrame, idCol: String,
-                        textCol: String, n: Int, threshold: Double,
-                        maxDf: Long, perTrigger: Boolean = false,
+  def incrementalStatus(src: ShingleIndex.Frames, delta: DataFrame, idCol: String,
+                        textCol: String, threshold: Double, maxDf: Long,
+                        perTrigger: Boolean = false,
                         deltaBroadcastLimit: Long = 500000L): DataFrame = {
-    val cached = cachedUnless(perTrigger) _
-    // ONE delta scan + tokenization (r17): the count, the text-hash
-    // projection, the shingle explode, and the final id frame all derive
-    // from the slim (doc_id, th, sh) frame.
-    val dSlim = cached(shingleSlim(delta, idCol, textCol, n, "doc_id", hash = true))
+    // ONE delta tokenization (r17): the count, the text-hash projection
+    // and the shingle explode all derive from the slim (doc_id, th, sh)
+    // frame.
+    val dSlim = cachedUnless(perTrigger)(
+      shingleSlim(delta, idCol, textCol, src.n, "doc_id", hash = true))
     // One map-only pass over the delta (the contractually small side) buys
     // a plan decision the static estimator cannot make: row count AND the
     // exploded shingle volume — the latter is what actually broadcasts
@@ -648,39 +614,55 @@ object Dedup {
     // every such join is pinned sort-merge outright.
     def bcD(df: DataFrame): DataFrame =
       if (small) broadcast(df) else if (aqe) df else df.hint("merge")
+    // The postings side of a delta-derived join: degraded, BOTH inputs
+    // may be un-materialized explodes whose static estimate is the slim
+    // pre-explode projection — stage-bound both on the join key
+    // (co-partitioned: one logical shuffle, no extra exchange).
+    def joinD(postings: DataFrame, d: DataFrame, key: String,
+              how: String = "inner"): DataFrame =
+      if (small) postings.join(broadcast(d), Seq(key), how)
+      else {
+        def bound(df: DataFrame) = graft.operators.Guards.stageBound(df, col(key))
+        bound(postings).join(bound(d), Seq(key), how)
+      }
 
-    // ONE base scan + tokenization (r17): the slim (base_id, th, sh) frame
-    // serves the exact-hash join AND all shingle consumers; the cached
-    // form holds per-doc ARRAYS, which each consumer explodes. NOT warmed
-    // (unlike ngramJaccardPairs' arrays): the consumer races here
-    // recompute the base tokenize in PARALLEL stages, and the A/B showed
-    // the extra eager count() job costs more wall-clock than the
-    // duplicated-but-concurrent compute it removes (1.99 vs 1.77 s warm
-    // min at sf0.1)
-    val bSlim = cached(shingleSlim(base, idCol, textCol, n, "base_id", hash = true))
     val dh0 = dSlim.select(col("doc_id"), col("th"))
     // the one delta projection with no natural stage boundary: give it the
     // join's own shuffle as a boundary (reused, not extra) so AQE sizes it
     val dh = if (small || !aqe) dh0 else dh0.repartition(col("th"))
-
-    val baseSh = shingleRows(bSlim, "base_id")
-    val hot = hotSet(docFreq(baseSh), maxDf)
-    val baseIdx = dropHot(baseSh, hot)
+    val hot = hotSet(src.dfPartials.groupBy("shingle").agg(sum("df").as("df")), maxDf)
     val deltaShU = dropHot(shingleRows(dSlim, "doc_id"), hot)
-    val baseSizes = baseIdx.groupBy("base_id").agg(count(lit(1)).as("size_b"))
-
-    // Degraded path: BOTH shingle-join inputs are un-materialized explodes
-    // whose static estimate is the slim pre-explode projection — stage-bound
-    // both on the join key (co-partitioned: one logical shuffle, no extra
-    // exchange).
-    def bound(df: DataFrame) = graft.operators.Guards.stageBound(df, col("shingle"))
-    val common = (
-      if (small) baseIdx.join(broadcast(deltaShU), "shingle")
-      else bound(baseIdx).join(bound(deltaShU), "shingle"))
+    val common = joinD(src.postings, deltaShU, "shingle")
       .groupBy("doc_id", "base_id").agg(count(lit(1)).as("common"))
+    val baseSizes = dropHot(joinD(src.postings, common.select("base_id"),
+        "base_id", "left_semi"), hot)
+      .groupBy("base_id").agg(count(lit(1)).as("size_b"))
 
-    classify(dSlim.select(col("doc_id")), bSlim.select(col("base_id"), col("th")), dh,
-      deltaShU, common, baseSizes, threshold, bcD)
+    val exactM = src.stats.select(col("base_id"), col("th")).join(bcD(dh), "th")
+      .groupBy("doc_id").agg(min("base_id").as("exact_match"))
+    val deltaSizes = deltaShU.groupBy("doc_id").agg(count(lit(1)).as("size_d"))
+    val rawJ = col("common").cast("double") * 1.0 /
+      (col("size_d") + col("size_b") - col("common"))
+    val best = Window.partitionBy("doc_id").orderBy(desc("j"), col("base_id"))
+    val nearM = baseSizes
+      .join(bcD(common.join(bcD(deltaSizes), "doc_id")), "base_id")
+      .filter(rawJ >= threshold)
+      .withColumn("j", rawJ)
+      .withColumn("rn", row_number().over(best))
+      .filter(col("rn") === 1)
+      .select(col("doc_id"), col("base_id").as("near_match"),
+        Rounding.round4(col("j")).as("near_jaccard"))
+    // ids from the delta itself, not dSlim: every consumer of the delta's
+    // text then sits under a delta-side broadcast (PlanCheck pins it)
+    delta.select(col(idCol).as("doc_id"))
+      .join(bcD(exactM), Seq("doc_id"), "left")
+      .join(bcD(nearM), Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        when(col("exact_match").isNotNull, "exact_dup")
+          .when(col("near_match").isNotNull, "near_dup")
+          .otherwise("new").as("status"),
+        coalesce(col("exact_match"), col("near_match")).as("match_id"),
+        when(col("exact_match").isNull, col("near_jaccard")).as("jaccard"))
   }
 
   /** [[incrementalStatus]]'s exploded-shingle ceiling for the broadcast plan. */

@@ -942,7 +942,7 @@ object NativeExpressions {
     * an UnsafeArrayData build per row). Same `Matcher.find()` loop as
     * RegexpExtractAll, so counts are identical, including zero-length
     * match advancement. Installed by the optimizer rule
-    * [[graft.plans.RegexpCountRewrite]]; also usable directly.
+    * [[graft.plans.RegexpCountRewrite]].
     */
   case class RegexpCount(child: Expression, pattern: String)
       extends UnaryExpression {
@@ -1203,8 +1203,6 @@ object NativeExpressions {
   def multiRegexpSlotOffsets(patterns: Seq[String]): Seq[Int] =
     patterns.map(p => java.util.regex.Pattern.compile(p).matcher("").groupCount())
       .scanLeft(0)(_ + _)
-  def regexpCount(text: Column, pattern: String): Column =
-    toCol(RegexpCount(toExpr(text), pattern))
   def regexpReplaceMany(text: Column, patterns: Seq[String], replacements: Seq[String]): Column =
     toCol(RegexpReplaceMany(toExpr(text), patterns, replacements))
   def markerTokenCounts(text: Column, sets: Seq[Seq[String]]): Column =

@@ -9,38 +9,31 @@ import graft.sources.docstore.MetaIO
 
 /** Persistent incremental shingle index for streaming/incremental dedup.
   *
-  * [[Dedup.incrementalStatus]] classifies a delta against a base corpus by
-  * re-deriving the base's entire shingle universe every call: it reads the
-  * full base `text` column, re-tokenizes it, re-explodes the shingles, and
-  * re-aggregates the document-frequency table — per micro-batch, forever.
-  * That is the one per-trigger cost in [[graft.streaming.StreamingAnalytics
-  * .streamingIngest]] that grows with the STORE instead of the batch (its
-  * scaladoc has carried "a long-running deployment would maintain that
-  * index incrementally" as the known next step since the operator landed).
-  * At 100 TB the re-derive is disqualifying: every trigger re-reads and
-  * re-tokenizes the corpus's heaviest column.
-  *
-  * This module maintains that derived state as a segment-structured
-  * columnar index beside the store, so a trigger touches only slim
-  * precomputed tables:
+  * [[Frames]] is the one shingle source [[Dedup.incrementalStatus]]
+  * classifies against:
   *
   *   - `postings`  (base_id, shingle)       — the inverted index, uncapped
   *     (df evolves, so a shingle capped away today may be needed tomorrow;
   *     the hot filter is applied at READ time against the merged df);
   *   - `stats`     (base_id, th, n_total)   — 64-bit content hash for the
-  *     exact arm (the base text column is never read again) and the doc's
-  *     total distinct-shingle count;
+  *     exact arm and the doc's total distinct-shingle count;
   *   - `df`        (shingle, df)            — per-segment PARTIAL counts;
   *     segment-disjoint docs make partials sum-mergeable, so the hot set
   *     is a groupBy-sum over slim partials, never a re-explode of text.
   *
-  * Classification parity ([[incrementalStatusIndexed]]) is EXACT vs the
-  * re-derive path — same hash arm, same capped-universe jaccard, same
-  * rounding and tie-breaks (ShingleIndexSpec asserts frame equality).
-  * The one algebraic wrinkle is the capped per-doc size under an EVOLVING
-  * hot set: `size_b` = stored `n_total` minus the doc's currently-hot
-  * shingle count — and sizes are only ever consumed for CANDIDATE docs,
-  * so the correction is a broadcast-bounded join, not an index aggregate.
+  * Two ways to get one: [[derive]] computes the frames from a base frame
+  * (a tokenization of the base's `text` on every evaluation — what a
+  * segment holds, and the re-derive classification's source), and
+  * [[read]] opens the frames this module has written (slim parquet scans;
+  * the base `text` column is never read again). Both classify
+  * identically (ShingleIndexSpec asserts frame equality).
+  *
+  * Re-deriving per micro-batch is the one per-trigger cost in
+  * [[graft.streaming.StreamingAnalytics.streamingIngest]] that grows with
+  * the STORE instead of the batch: at 100 TB every trigger would re-read
+  * and re-tokenize the corpus's heaviest column. So the index keeps
+  * [[derive]]'s frames as a segment-structured columnar table set beside
+  * the store, and a trigger touches only those.
   *
   * Commit protocol (the docstore's marker discipline, reused): segment
   * data is written under `seg_<id>/`, then a `_seg_<id>.json` marker is
@@ -65,16 +58,21 @@ import graft.sources.docstore.MetaIO
   *
   * Contract: the index mirrors an append-only doc set (the ingest
   * contract — novel doc_ids; revision streams belong in upsertStream).
-  * [[graft.streaming.StreamingAnalytics.streamingIngest]] enforces the
+  * [[graft.streaming.StreamingAnalytics.ingestBatch]] enforces the
   * novel-id guard per trigger before classifying against the index.
   */
 object ShingleIndex {
 
-  /** The index's three live frames plus the shingle width it was built
-    * with (classification must tokenize the delta identically).
+  /** The shingle source: the three frames plus the shingle width they were
+    * built with (classification must tokenize the delta identically).
+    * `held` is the slim frame a batch [[derive]] cached; [[unpersist]]
+    * releases it (a no-op for [[read]]'s frames).
     */
   case class Frames(postings: DataFrame, stats: DataFrame,
-                    dfPartials: DataFrame, n: Int)
+                    dfPartials: DataFrame, n: Int,
+                    held: Option[DataFrame] = None) {
+    def unpersist(): Unit = held.foreach(_.unpersist(blocking = false))
+  }
 
   private val MetaFile = "_index_meta.json"
   private def segMarker(id: String) = s"_seg_$id.json"
@@ -82,22 +80,36 @@ object ShingleIndex {
   private def compactMarker(k: Int) = f"_compact_$k%06d.json"
   private def compactDir(k: Int) = f"cseg_$k%06d"
 
+  /** The frames a segment of `base` holds, computed and not written: the
+    * one definition of a segment's content. ONE tokenization (r17): all
+    * three derive from the slim (base_id, th, sh) frame with narrow
+    * projections, so a batch caller (the default) caches that frame and
+    * each consumer explodes cached arrays; `perTrigger = true` caches
+    * nothing (see [[Dedup.incrementalStatus]]).
+    */
+  def derive(base: DataFrame, idCol: String, textCol: String, n: Int,
+             perTrigger: Boolean = false): Frames = {
+    val slim = Dedup.cachedUnless(perTrigger)(
+      Dedup.shingleSlim(base, idCol, textCol, n, "base_id", hash = true))
+    val postings = Dedup.shingleRows(slim, "base_id")
+    Frames(postings,
+      slim.select(col("base_id"), col("th"),
+        coalesce(size(col("sh")).cast("long"), lit(0L)).as("n_total")),
+      Dedup.docFreq(postings), n, if (perTrigger) None else Some(slim))
+  }
+
+  /** Write [[derive]]'s frames under `seg`: three write actions over one
+    * cached tokenization, released before returning — a per-trigger
+    * streaming append must not accumulate pinned plans.
+    */
   private def writeSegmentData(docs: DataFrame, idCol: String,
                                textCol: String, n: Int, seg: Path): Unit = {
-    // ONE tokenization per segment (r17): each write action re-executes
-    // its subtree, so a cached slim (base_id, th, sh) frame tokenizes once
-    // and all three writes derive from it with narrow projections. The
-    // cache is unpersisted before returning — a per-trigger streaming
-    // append must not accumulate pinned plans.
-    val base = Dedup.shingleSlim(docs, idCol, textCol, n, "base_id", hash = true).cache()
+    val f = derive(docs, idCol, textCol, n)
     try {
-      val postings = Dedup.shingleRows(base, "base_id")
-      postings.write.mode("overwrite").parquet(new Path(seg, "postings").toString)
-      base.select(col("base_id"), col("th"),
-          coalesce(size(col("sh")).cast("long"), lit(0L)).as("n_total"))
-        .write.mode("overwrite").parquet(new Path(seg, "stats").toString)
-      Dedup.docFreq(postings).write.mode("overwrite").parquet(new Path(seg, "df").toString)
-    } finally base.unpersist(false)
+      f.postings.write.mode("overwrite").parquet(new Path(seg, "postings").toString)
+      f.stats.write.mode("overwrite").parquet(new Path(seg, "stats").toString)
+      f.dfPartials.write.mode("overwrite").parquet(new Path(seg, "df").toString)
+    } finally f.unpersist()
   }
 
   private def mapper = new ObjectMapper()
@@ -290,44 +302,4 @@ object ShingleIndex {
 
   /** Orphan data dirs younger than this survive [[compact]]'s sweep. */
   private[graft] val OrphanSweepAgeMs: Long = 60L * 60 * 1000
-
-  /** [[Dedup.incrementalStatus]] against the INDEX instead of the base
-    * corpus — exact parity (same arms, same capped universe, same
-    * rounding/tie-breaks), with the base text never read and no base
-    * tokenization. The delta is the contract-bounded side (the
-    * streamingIngest micro-batch / incremental-snapshot shape), so every
-    * delta-derived frame broadcasts — each index touch is a map-only
-    * scan, and sizes are corrected to the current hot set only for the
-    * bounded candidate doc set.
-    */
-  def incrementalStatusIndexed(idx: Frames, delta: DataFrame, idCol: String,
-                               textCol: String, threshold: Double,
-                               maxDf: Long): DataFrame = {
-    val dh = delta.select(col(idCol).as("doc_id"), Dedup.th(col(textCol)).as("th"))
-    // current hot set: merged df over partials, strictly above the cap
-    val hot = Dedup.hotSet(idx.dfPartials.groupBy("shingle").agg(sum("df").as("df")), maxDf)
-    val deltaShU = Dedup.dropHot(delta.select(col(idCol).as("doc_id"),
-        explode(array_distinct(TextFunctions.wordShingles(col(textCol), idx.n))).as("shingle")),
-      hot)
-
-    // postings store hot shingles too, but deltaShU already excludes
-    // them, so this equals the re-derive path's baseIdx ⋈ deltaShU
-    val common = idx.postings.join(broadcast(deltaShU), "shingle")
-      .groupBy("doc_id", "base_id").agg(count(lit(1)).as("common"))
-
-    // size_b under the CURRENT hot set, candidates only:
-    // n_total − |doc's shingles ∩ hot|
-    val candIds = common.select("base_id").distinct()
-    val hotCnt = idx.postings.join(broadcast(candIds), "base_id")
-      .join(broadcast(hot), "shingle")
-      .groupBy("base_id").agg(count(lit(1)).as("hot_cnt"))
-    val baseSizes = idx.stats.join(broadcast(candIds), "base_id")
-      .join(broadcast(hotCnt), Seq("base_id"), "left")
-      .select(col("base_id"),
-        (col("n_total") - coalesce(col("hot_cnt"), lit(0L))).as("size_b"))
-
-    Dedup.classify(delta.select(col(idCol).as("doc_id")),
-      idx.stats.select(col("base_id"), col("th")), dh, deltaShU, common, baseSizes,
-      threshold, (df: DataFrame) => broadcast(df))
-  }
 }

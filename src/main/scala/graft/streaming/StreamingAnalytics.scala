@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 import graft.ingest.LogParser
 
 /** Structured Streaming variants of the batch pipeline (the reference has no
@@ -370,20 +371,37 @@ object StreamingAnalytics {
     * candidate aggregation can't run as one continuous append-mode plan
     * (chained aggregations), so this is the production `foreachBatch`
     * shape — each micro-batch is classified by the BATCH operator
-    * [[graft.functions.Dedup.incrementalStatus]] verbatim. One shared
-    * definition, so stream and batch classifications can never drift;
-    * per-batch cost is the batch operator's (delta = the micro-batch),
-    * called with `perTrigger = true`: no job before the batch's own
-    * action, and no cache entry left behind by any trigger.
+    * [[graft.functions.Dedup.incrementalStatus]] verbatim, so stream and
+    * batch classifications can never drift.
+    *
+    * The base is static, so its shingle frames
+    * ([[graft.functions.ShingleIndex.derive]]) are built and cached ONCE
+    * per query, outside the per-trigger body, and released when the query
+    * terminates; each trigger classifies with `perTrigger = true` and so
+    * adds no job before the batch's own action and no cache entry.
     */
   def incrementalDedupStream(docs: DataFrame, base: DataFrame,
                              n: Int, threshold: Double, maxDf: Long)
-                            (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream.outputMode("append").foreachBatch {
+                            (sink: DataFrame => Unit): StreamingQuery = {
+    val src = graft.functions.ShingleIndex.derive(base, "doc_id", "text", n)
+    val q = try docs.writeStream.outputMode("append").foreachBatch {
       (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         sink(graft.functions.Dedup.incrementalStatus(
-          base, batch, "doc_id", "text", n, threshold, maxDf, perTrigger = true))
-    }.start()
+          src, batch, "doc_id", "text", threshold, maxDf, perTrigger = true))
+    }.start() catch { case e: Throwable => src.unpersist(); throw e }
+    val streams = docs.sparkSession.streams
+    val release = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        if (e.id == q.id) { src.unpersist(); streams.removeListener(this) }
+    }
+    streams.addListener(release)
+    // a query that ended before the listener was added posted its event
+    // to nobody: release here (a second unpersist is a no-op)
+    if (!q.isActive) { src.unpersist(); streams.removeListener(release) }
+    q
+  }
 
   /** Streaming CDC apply: merge a change stream into a docstore collection
     * continuously — each micro-batch upserts by key through
@@ -427,77 +445,35 @@ object StreamingAnalytics {
   /** The END-TO-END streaming ingest pipe — change-stream → clean gates →
     * incremental dedup → docstore upsert — composed from the stages that
     * previously only shipped separately (the way `pipe_training_batch`
-    * composes the batch stages). Per micro-batch:
+    * composes the batch stages). Each micro-batch runs [[ingestBatch]],
+    * which documents the steps, replay safety and bounded driver state.
     *
-    *   1. stateless clean gates ([[graft.QueriesExt.cleanGates]] — the ONE
-    *      shared definition with the batch pipe, so gating can't drift);
-    *   2. within-batch EXACT self-dedup, keep min doc_id (content-hash
-    *      equality is transitive, so this step is split-invariant by
-    *      itself);
-    *   3. classification against the CURRENT store contents via
-    *      [[graft.functions.Dedup.incrementalStatus]] — only `new` docs
-    *      continue (exact or near dups of base + previously-ingested docs
-    *      drop);
-    *   4. within-batch near-dup admission with the GREEDY sequential rule:
-    *      ids ascending, admit unless a near-dup neighbor with a smaller
-    *      id was itself admitted — exactly what per-doc sequential
-    *      ingestion would do, so the final store does not depend on where
-    *      micro-batch boundaries fall (parity-tested across 1/3/5-way
-    *      splits in StreamingIngestSpec);
-    *   5. admitted docs upsert into the collection
-    *      ([[graft.sources.docstore.DocStoreMaintenance.upsert]], keyed by
-    *      doc_id).
+    * `checkpointDir` enables kill/restart recovery: offsets commit AFTER
+    * the foreachBatch body, so a crash between the docstore upsert and
+    * the offset commit REPLAYS that micro-batch on restart (the
+    * exactly-once shape StreamingIngestSpec's restart case demonstrates).
+    * A kill -9 inside the FIRST offsets write leaves Spark's own
+    * rename-temp in the checkpoint, which Spark 4.x's new-checkpoint
+    * emptiness check then refuses to start over (fail-stop, no data at
+    * risk), so that scrap is swept before start — safe by the same
+    * single-owner contract the checkpoint itself carries (see
+    * [[CheckpointRecovery]]).
     *
-    * Replay safety: a recovered/replayed micro-batch re-classifies its own
-    * docs as exact dups of the copies its failed attempt already upserted
-    * and admits nothing new; upsert is idempotent by key — so the store
-    * converges to the same state.
-    *
-    * Bounded driver state: the only collect is the batch's NEAR-DUP PAIR
-    * LIST (two longs per pair, df-capped candidate generation) for the
-    * greedy scan — a bounded model artifact in the sense of the repo's
-    * centroid/BPE collects, sized by one micro-batch's dup density, never
-    * by the corpus. Known approximation at the margins: the within-batch
-    * jaccard df-caps over the batch index while the vs-store jaccard caps
-    * over the base index; a shingle whose df crosses `maxDf` in one
-    * universe but not the other could classify a borderline pair
-    * differently per split. The caps exist for scale-safety and never bind
-    * at gate thresholds in practice (they'd have to flip a pair across
-    * `threshold` exactly); exact split-invariance under binding caps would
-    * require maintaining one shared df table, the natural next step for a
-    * persistent deployment.
-    *
-    * Per-batch cost grows with the store (incrementalStatus re-derives the
-    * base shingle df each trigger); a long-running deployment would
-    * maintain that index incrementally — the classification semantics are
-    * unchanged.
+    * `indexDir`: classify against the persistent
+    * [[graft.functions.ShingleIndex]] instead of re-deriving the store's
+    * shingles per trigger (the one store-sized per-trigger cost). First
+    * use bootstraps it from the CURRENT store so index and store start
+    * aligned; thereafter each batch's admitted docs append one segment
+    * keyed by the deterministic batchId, and every `indexCompactEvery`
+    * live segments the next trigger compacts first.
     */
   def streamingIngest(docs: DataFrame, storePath: String,
                       n: Int = 5, threshold: Double = 0.5, maxDf: Long = 100,
                       maxBatchPairs: Int = 2000000,
                       checkpointDir: Option[String] = None,
                       indexDir: Option[String] = None,
-                      indexCompactEvery: Int = 64)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // checkpointDir enables kill/restart recovery: offsets commit AFTER
-    // the foreachBatch body, so a crash between the docstore upsert and
-    // the offset commit REPLAYS that micro-batch on restart — the replay
-    // re-classifies its docs as exact dups of the copies the failed
-    // attempt upserted and admits nothing new (the exactly-once shape
-    // StreamingIngestSpec's restart case demonstrates, not just argues).
-    // hard-crash restart recovery: a kill -9 inside the FIRST offsets
-    // write leaves Spark's own rename-temp in the checkpoint, which
-    // Spark 4.x's new-checkpoint emptiness check then refuses to start
-    // over (fail-stop, no data at risk) — sweep that scrap before start.
-    // Safe here by the same single-owner contract the checkpoint itself
-    // carries. See CheckpointRecovery's scaladoc for the full window.
+                      indexCompactEvery: Int = 64): StreamingQuery = {
     checkpointDir.foreach(c => CheckpointRecovery.dropOrphanRenameTemps(docs.sparkSession, c))
-    // indexDir: classify against the persistent shingle index instead of
-    // re-deriving the store's shingle universe per trigger (the one
-    // store-sized per-trigger cost — see [[graft.functions.ShingleIndex]]).
-    // First use bootstraps from the CURRENT store so index and store start
-    // aligned; thereafter each batch's admitted docs append one segment
-    // keyed by the deterministic batchId, making the append replay-proof.
     indexDir.foreach { idx =>
       if (!graft.functions.ShingleIndex.exists(idx)) {
         val store = docs.sparkSession.read.format("docstore").load(storePath)
@@ -508,120 +484,123 @@ object StreamingAnalytics {
     val w = docs.writeStream.outputMode("append")
     checkpointDir.fold(w)(c => w.option("checkpointLocation", c)).foreachBatch {
       (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        indexDir match {
-          case Some(idx) =>
-            ingestBatchIndexed(batch.toDF(), storePath, idx, f"b$batchId%09d",
-              n, threshold, maxDf, maxBatchPairs, indexCompactEvery)
-          case None =>
-            ingestBatch(batch.toDF(), storePath, n, threshold, maxDf, maxBatchPairs)
-        }
+        ingestBatch(batch.toDF(), storePath, n, threshold, maxDf, maxBatchPairs,
+          indexDir.map(_ -> f"b$batchId%09d"), indexCompactEvery)
     }.start()
   }
 
   /** One micro-batch of [[streamingIngest]] — also the BATCH reference
     * implementation (a single batch containing the whole delta is the
-    * batch pipe), which is what the parity spec exploits.
+    * batch pipe), which is what the parity spec exploits. Per batch:
     *
-    * `maxBatchPairs` makes the greedy-admission collect's bounded-batch
-    * contract MECHANICAL: the pair pull is `limit(max+1)` (the driver
-    * never materializes more than the cap even when violated) and a
-    * violation fails loudly with the split-the-batch recipe instead of
-    * silently growing driver memory with the batch size.
+    *   1. stateless clean gates ([[graft.QueriesExt.cleanGates]] — the ONE
+    *      shared definition with the batch pipe, so gating can't drift);
+    *   2. within-batch EXACT self-dedup, keep min doc_id (content-hash
+    *      equality is transitive, so this step is split-invariant by
+    *      itself);
+    *   3. classification against the CURRENT store contents via
+    *      [[graft.functions.Dedup.incrementalStatus]] — only `new` docs
+    *      continue (exact or near dups of base + previously-ingested docs
+    *      drop). The shingle source is the store re-derived
+    *      ([[graft.functions.ShingleIndex.derive]], a per-trigger cost that
+    *      grows with the store) or, given `index` = (index dir, segment
+    *      id), the persistent index ([[graft.functions.ShingleIndex.read]]);
+    *   4. within-batch near-dup admission with the GREEDY sequential rule:
+    *      ids ascending, admit unless a near-dup neighbor with a smaller
+    *      id was itself admitted — exactly what per-doc sequential
+    *      ingestion would do, so the final store does not depend on where
+    *      micro-batch boundaries fall (parity-tested across 1/3/5-way
+    *      splits in StreamingIngestSpec);
+    *   5. admitted docs upsert into the collection
+    *      ([[graft.sources.docstore.DocStoreMaintenance.upsert]], keyed by
+    *      doc_id); with an index, they then append one segment under the
+    *      segment id (the deterministic batchId), whose marker-claim commit
+    *      makes the append a no-op on checkpoint replay.
+    *
+    * Replay safety: a recovered/replayed micro-batch re-classifies its own
+    * docs as exact dups of the copies its failed attempt already upserted
+    * and admits nothing new; upsert is idempotent by key — so the store
+    * converges to the same state. With an index, the upsert comes BEFORE
+    * the segment commit: a crash between them replays against an index
+    * that lacks those docs, so they classify `new` again, re-upsert
+    * idempotently and the append commits first-time; a crash after the
+    * commit replays against an index that has them, so each doc exact-dups
+    * its own store copy. Either way store and index converge aligned.
+    *
+    * Novel-id guard (index only): an id already indexed but arriving with
+    * new content would make upsert REPLACE the store doc while the
+    * append-only index still carries the old shingles — silent divergence.
+    * Such rows (classified non-dup yet id-present) fail the trigger loudly
+    * toward [[upsertStream]], which owns revision semantics.
+    *
+    * Bounded driver state: the only collect is the batch's NEAR-DUP PAIR
+    * LIST (two longs per pair, df-capped candidate generation) for the
+    * greedy scan, sized by one micro-batch's dup density, never by the
+    * corpus. `maxBatchPairs` makes that bound MECHANICAL: the pair pull is
+    * `limit(max+1)` and a violation fails loudly with the split-the-batch
+    * recipe. Known approximation at the margins: the within-batch jaccard
+    * df-caps over the batch index while the vs-store jaccard caps over
+    * the store's; a shingle whose df crosses `maxDf` in one universe but
+    * not the other could classify a borderline pair differently per
+    * split. The caps never bind at gate thresholds in practice; exact
+    * split-invariance under binding caps would need one shared df table.
+    *
+    * Per-trigger cache discipline: classification and pair generation run
+    * with `perTrigger = true` (a `.cache()` inside them would register a
+    * CacheManager entry per trigger that this caller can never uncache).
+    * The ONE multi-action intermediate, `fresh`, is persisted here and
+    * unpersisted through its own Dataset handle.
     */
   private[graft] def ingestBatch(batch: DataFrame, storePath: String,
                                  n: Int, threshold: Double, maxDf: Long,
-                                 maxBatchPairs: Int = 2000000): Unit = {
-    val spark = batch.sparkSession
-    // Per-trigger cache discipline: the Dedup helpers are called with
-    // perTrigger = true (a .cache() inside them would register a
-    // CacheManager entry per trigger that this caller can never uncache —
-    // RDD-level unpersist frees blocks but leaves the cached-plan entry,
-    // and a session-wide snapshot sweep could steal a concurrent query's
-    // caches). The ONE multi-action intermediate worth keeping, `fresh`,
-    // is persisted here and unpersisted through its own Dataset handle.
-    var fresh: DataFrame = null
-    try {
-      val kept = prepBatch(batch)
-      val store = spark.read.format("docstore").load(storePath).select("doc_id", "text")
-      // fresh is consumed by THREE actions (pair collect, upsert's key
-      // collect, upsert's write) — persist it so cleanGates + the
-      // store-sized incrementalStatus classification run once per trigger.
-      // (The pair-graph collect below has its own mechanical maxBatchPairs
-      // bound.)
-      fresh = kept.join(
-        graft.functions.Dedup.incrementalStatus(store, kept, "doc_id", "text",
-            n, threshold, maxDf, perTrigger = true)
-          .filter(col("status") === "new").select("doc_id"),
-        "doc_id").persist()
-      val admitted = greedyAdmit(spark, fresh, n, threshold, maxDf, maxBatchPairs)
-      graft.sources.docstore.DocStoreMaintenance.upsert(spark, storePath, "doc_id", admitted)
-    } finally {
-      if (fresh != null) fresh.unpersist(blocking = false)
-    }
-    ()
-  }
-
-  /** [[ingestBatch]] with classification served by the persistent
-    * [[graft.functions.ShingleIndex]] instead of a per-trigger re-derive
-    * of the store's shingle universe — the store's `text` column is never
-    * read. Same prep, same greedy within-batch admission, same upsert;
-    * then the admitted docs append one index segment keyed by `segId`
-    * (the deterministic batchId), whose marker-claim commit makes the
-    * append a no-op on checkpoint replay.
-    *
-    * Crash alignment with the store: upsert happens BEFORE the segment
-    * commit, so a crash between them replays the batch against an index
-    * that lacks those docs — they classify `new` again, re-upsert
-    * idempotently, and the append commits first-time. A crash after the
-    * segment commit replays against an index that HAS them — each doc
-    * exact-dups to its own store copy and the batch admits nothing. Either
-    * way store and index converge to the same aligned state.
-    *
-    * Novel-id guard: an id already indexed but arriving with new content
-    * would make upsert REPLACE the store doc while the append-only index
-    * still carries the old shingles — silent divergence. Such rows
-    * (classified non-dup yet id-present) fail the trigger loudly toward
-    * [[upsertStream]], which owns revision semantics.
-    */
-  private[graft] def ingestBatchIndexed(batch: DataFrame, storePath: String,
-                                        indexDir: String, segId: String,
-                                        n: Int, threshold: Double, maxDf: Long,
-                                        maxBatchPairs: Int = 2000000,
-                                        indexCompactEvery: Int = 64): Unit = {
+                                 maxBatchPairs: Int = 2000000,
+                                 index: Option[(String, String)] = None,
+                                 indexCompactEvery: Int = 64): Unit = {
     val spark = batch.sparkSession
     // compaction runs BEFORE this trigger's index read, never after it:
     // folding at trigger end would delete covered segment dirs while the
     // trigger's (persisted, but evictable) frames can still lazily
     // recompute from them — a self-inflicted FileNotFound under memory
-    // pressure. At trigger start nothing references the old layout. Safe
-    // inline — the foreachBatch body IS the single maintenance writer
-    // for this index (one trigger at a time).
-    if (indexCompactEvery > 0 &&
-        graft.functions.ShingleIndex.liveSegmentCount(indexDir) >= indexCompactEvery)
-      graft.functions.ShingleIndex.compact(spark, indexDir)
+    // pressure. Safe inline — the foreachBatch body IS the single
+    // maintenance writer for this index (one trigger at a time).
+    index.foreach { case (dir, _) =>
+      if (indexCompactEvery > 0 &&
+          graft.functions.ShingleIndex.liveSegmentCount(dir) >= indexCompactEvery)
+        graft.functions.ShingleIndex.compact(spark, dir)
+    }
     var fresh: DataFrame = null
     try {
       val kept = prepBatch(batch)
-      val idx = graft.functions.ShingleIndex.read(spark, indexDir)
+      val src = index.fold(graft.functions.ShingleIndex.derive(
+          spark.read.format("docstore").load(storePath), "doc_id", "text", n,
+          perTrigger = true))(
+        ix => graft.functions.ShingleIndex.read(spark, ix._1))
+      // fresh is consumed by every later action (the guard, the pair
+      // collect, upsert's key collect and write, the segment append), so
+      // the gates and the store-sized classification run once per trigger
       fresh = kept.join(
-        graft.functions.ShingleIndex
-          .incrementalStatusIndexed(idx, kept, "doc_id", "text", threshold, maxDf)
+        graft.functions.Dedup.incrementalStatus(src, kept, "doc_id", "text",
+            threshold, maxDf, perTrigger = true)
           .filter(col("status") === "new").select("doc_id"),
         "doc_id").persist()
-      // isEmpty, not limit(1).count(): a counted limit compiles a fresh
-      // class on every trigger (Spark names its counter from a JVM-global
-      // sequence), while isEmpty's CollectLimit generates no limit code.
-      val noClash = idx.stats
-        .join(broadcast(fresh.select(col("doc_id").as("base_id"))), "base_id")
-        .isEmpty
-      require(noClash,
-        "ingestBatchIndexed: a batch doc's id already exists in the shingle " +
-          "index with different content — the append-only index cannot track " +
-          "an upsert-replace. Revision streams belong in upsertStream; " +
-          "rebuild the index if the store was mutated out-of-band.")
+      if (index.nonEmpty) {
+        // isEmpty, not limit(1).count(): a counted limit compiles a fresh
+        // class on every trigger (Spark names its counter from a JVM-global
+        // sequence), while isEmpty's CollectLimit generates no limit code.
+        val noClash = src.stats
+          .join(broadcast(fresh.select(col("doc_id").as("base_id"))), "base_id")
+          .isEmpty
+        require(noClash,
+          "ingestBatch: a batch doc's id already exists in the shingle " +
+            "index with different content — the append-only index cannot track " +
+            "an upsert-replace. Revision streams belong in upsertStream; " +
+            "rebuild the index if the store was mutated out-of-band.")
+      }
       val admitted = greedyAdmit(spark, fresh, n, threshold, maxDf, maxBatchPairs)
       graft.sources.docstore.DocStoreMaintenance.upsert(spark, storePath, "doc_id", admitted)
-      graft.functions.ShingleIndex.append(admitted, "doc_id", "text", indexDir, segId)
+      index.foreach { case (dir, segId) =>
+        graft.functions.ShingleIndex.append(admitted, "doc_id", "text", dir, segId)
+      }
     } finally {
       if (fresh != null) fresh.unpersist(blocking = false)
     }

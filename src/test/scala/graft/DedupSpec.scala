@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.Dedup
+import graft.functions.{Dedup, ShingleIndex}
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -120,8 +120,8 @@ class DedupSpec extends SparkSpec {
       (13L, "the quick brown fox jumps over the lazy dog near the river bank sometimes"),
       (15L, "entirely novel delta text with no overlap in shingles whatsoever at all here")
     ).toDF("doc_id", "text")
-    val out = Dedup.incrementalStatus(docs, delta, "doc_id", "text",
-      n = 2, threshold = 0.5, maxDf = 100)
+    val out = Dedup.incrementalStatus(ShingleIndex.derive(docs, "doc_id", "text", n = 2),
+      delta, "doc_id", "text", threshold = 0.5, maxDf = 100)
       .collect().map(r => r.getLong(0) ->
         (r.getString(1), Option(r.get(2)).map(_.asInstanceOf[Long]),
           Option(r.get(3)).map(_.asInstanceOf[Double]))).toMap
@@ -139,13 +139,19 @@ class DedupSpec extends SparkSpec {
       (13L, "the quick brown fox jumps over the lazy dog near the river bank sometimes"),
       (15L, "entirely novel delta text with no overlap in shingles whatsoever at all here")
     ).toDF("doc_id", "text")
-    def rows(limit: Long) = Dedup.incrementalStatus(docs, delta, "doc_id", "text",
-        n = 2, threshold = 0.5, maxDf = 100, deltaBroadcastLimit = limit)
-      .collect().map(r => (r.getLong(0), r.getString(1), Option(r.get(2)), Option(r.get(3))))
-      .sortBy(_._1).toSeq
-    // limit=1 < 3 delta rows → the degraded (keyed shuffle) plan; parity
-    // with the broadcast plan is the contract ("auto-degrade, not chunk")
-    assert(rows(limit = 1L) == rows(limit = 500000L))
+    // both shingle sources: the corpus re-derived, and a persistent index of it
+    val idxDir = tempDir("graft_dedup_degrade").toString
+    ShingleIndex.bootstrap(docs, "doc_id", "text", n = 2, idxDir)
+    for (src <- Seq(ShingleIndex.derive(docs, "doc_id", "text", n = 2),
+                    ShingleIndex.read(spark, idxDir))) {
+      def rows(limit: Long) = Dedup.incrementalStatus(src, delta, "doc_id", "text",
+          threshold = 0.5, maxDf = 100, deltaBroadcastLimit = limit)
+        .collect().map(r => (r.getLong(0), r.getString(1), Option(r.get(2)), Option(r.get(3))))
+        .sortBy(_._1).toSeq
+      // limit=1 < 3 delta rows → the degraded (keyed shuffle) plan; parity
+      // with the broadcast plan is the contract ("auto-degrade, not chunk")
+      assert(rows(limit = 1L) == rows(limit = 500000L))
+    }
     // With AQE off the degraded plan must contain NO broadcast at all
     // (runtime sizing is unavailable, so every broadcast would be a
     // static blind one — the class the guard exists to prevent). Under
@@ -161,21 +167,26 @@ class DedupSpec extends SparkSpec {
       (11L, "the quick brown fox jumps over the lazy dog near the river bank today"),
       (15L, "entirely novel delta text with no overlap in shingles whatsoever at all here")
     ).toDF("doc_id", "text")
-    val degraded = Dedup.incrementalStatus(baseNoAqe, deltaNoAqe, "doc_id", "text",
-      n = 2, threshold = 0.5, maxDf = 100, deltaBroadcastLimit = 1L)
-    val plan = degraded.queryExecution.executedPlan
-    val broadcastJoins = plan.collect {
-      case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => j.joinType
-      case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => j.joinType
+    val idxNoAqe = tempDir("graft_dedup_degrade_noaqe").toString
+    ShingleIndex.bootstrap(baseNoAqe, "doc_id", "text", n = 2, idxNoAqe)
+    for (src <- Seq(ShingleIndex.derive(baseNoAqe, "doc_id", "text", n = 2),
+                    ShingleIndex.read(s2, idxNoAqe))) {
+      val degraded = Dedup.incrementalStatus(src, deltaNoAqe, "doc_id", "text",
+        threshold = 0.5, maxDf = 100, deltaBroadcastLimit = 1L)
+      val plan = degraded.queryExecution.executedPlan
+      val broadcastJoins = plan.collect {
+        case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => j.joinType
+        case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => j.joinType
+      }
+      // the ONLY broadcasts allowed to survive degradation are the
+      // left-anti hot-shingle caps (bounded by construction: ≤ shingle
+      // volume / maxDf rows); every delta-carrying join must be sort-merge
+      assert(broadcastJoins.nonEmpty && broadcastJoins.forall(_.sql == "LEFT ANTI"),
+        s"degraded incrementalStatus still broadcasts a non-anti join: $broadcastJoins\n" +
+          plan.toString.linesIterator.take(40).mkString("\n"))
+      assert(plan.toString.contains("SortMergeJoin"))
+      assert(degraded.collect().map(_.getLong(0)).sorted.toSeq == Seq(11L, 15L))
     }
-    // the ONLY broadcasts allowed to survive degradation are the two
-    // left-anti hot-shingle caps (bounded by construction: ≤ shingle
-    // volume / maxDf rows); every delta-carrying join must be sort-merge
-    assert(broadcastJoins.nonEmpty && broadcastJoins.forall(_.sql == "LEFT ANTI"),
-      s"degraded incrementalStatus still broadcasts a non-anti join: $broadcastJoins\n" +
-        plan.toString.linesIterator.take(40).mkString("\n"))
-    assert(plan.toString.contains("SortMergeJoin"))
-    assert(degraded.collect().map(_.getLong(0)).sorted.toSeq == Seq(11L, 15L))
   }
 
   test("a binding df cap: LSH-verified pairs equal the pair join, indexed status equals re-derive") {
@@ -207,16 +218,18 @@ class DedupSpec extends SparkSpec {
     def status(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getString(1), Option(r.get(2)), Option(r.get(3))))
         .sortBy(_._1).toSeq
-    val rederive = status(Dedup.incrementalStatus(base, delta, "doc_id", "text",
-      n = 2, threshold = 0.5, maxDf = 3))
+    val rederive = status(Dedup.incrementalStatus(
+      ShingleIndex.derive(base, "doc_id", "text", n = 2), delta, "doc_id", "text",
+      threshold = 0.5, maxDf = 3))
     assert(rederive.map(r => r._1 -> r._2) ==
       Seq(2L -> "near_dup", 3L -> "exact_dup", 9L -> "new"), rederive)
     // not vacuous: without the cap the new doc matches on boilerplate
-    assert(status(Dedup.incrementalStatus(base, delta, "doc_id", "text",
-      n = 2, threshold = 0.5, maxDf = 100)).map(_._2).last == "near_dup")
+    assert(status(Dedup.incrementalStatus(
+      ShingleIndex.derive(base, "doc_id", "text", n = 2), delta, "doc_id", "text",
+      threshold = 0.5, maxDf = 100)).map(_._2).last == "near_dup")
     val idxDir = tempDir("graft_dedup_cap").toString
     graft.functions.ShingleIndex.bootstrap(base, "doc_id", "text", n = 2, idxDir)
-    assert(status(graft.functions.ShingleIndex.incrementalStatusIndexed(
+    assert(status(Dedup.incrementalStatus(
       graft.functions.ShingleIndex.read(spark, idxDir), delta, "doc_id", "text",
       threshold = 0.5, maxDf = 3)) == rederive)
   }

@@ -44,9 +44,10 @@ class ShingleIndexSpec extends SparkSpec {
     val idxDir = tmp("graft_shidx_parity")
     ShingleIndex.bootstrap(base, "doc_id", "text", n = 2, idxDir)
     val idx = ShingleIndex.read(spark, idxDir)
-    val expected = rows(Dedup.incrementalStatus(base, delta, "doc_id", "text",
-      n = 2, threshold = 0.5, maxDf = 100))
-    val actual = rows(ShingleIndex.incrementalStatusIndexed(idx, delta,
+    val expected = rows(Dedup.incrementalStatus(
+      ShingleIndex.derive(base, "doc_id", "text", n = 2), delta, "doc_id", "text",
+      threshold = 0.5, maxDf = 100))
+    val actual = rows(Dedup.incrementalStatus(idx, delta,
       "doc_id", "text", threshold = 0.5, maxDf = 100))
     assert(actual == expected)
     // and the classification really found all three arms
@@ -66,10 +67,30 @@ class ShingleIndexSpec extends SparkSpec {
     val idxDir = tmp("graft_shidx_corpus")
     ShingleIndex.bootstrap(b, "doc_id", "text", n = 5, idxDir)
     val idx = ShingleIndex.read(spark, idxDir)
-    assert(rows(ShingleIndex.incrementalStatusIndexed(idx, d, "doc_id", "text",
+    assert(rows(Dedup.incrementalStatus(idx, d, "doc_id", "text",
         threshold = 0.5, maxDf = 100)) ==
-      rows(Dedup.incrementalStatus(b, d, "doc_id", "text",
-        n = 5, threshold = 0.5, maxDf = 100)))
+      rows(Dedup.incrementalStatus(ShingleIndex.derive(b, "doc_id", "text", n = 5),
+        d, "doc_id", "text", threshold = 0.5, maxDf = 100)))
+  }
+
+  test("a segment holds derive's frames: bootstrap then read returns them, fixture and sf0.01") {
+    val sf = Tables.documents(spark, "/root/testdata/sf0.01").select("doc_id", "text")
+    for ((docs, n) <- Seq(base -> 2, sf -> 5)) {
+      val idxDir = tmp("graft_shidx_derive")
+      ShingleIndex.bootstrap(docs, "doc_id", "text", n, idxDir)
+      val stored = ShingleIndex.read(spark, idxDir)
+      val derived = ShingleIndex.derive(docs, "doc_id", "text", n)
+      try {
+        assert(stored.n == derived.n)
+        for ((name, s, d) <- Seq(("postings", stored.postings, derived.postings),
+                                 ("stats", stored.stats, derived.stats),
+                                 ("df", stored.dfPartials, derived.dfPartials))) {
+          assert(s.columns.toSeq == d.columns.toSeq, name)
+          assert(s.count() == d.count() && d.count() > 0, name)
+          assert(s.exceptAll(d).isEmpty && d.exceptAll(s).isEmpty, name)
+        }
+      } finally derived.unpersist()
+    }
   }
 
   test("append-evolved hot set: size_b corrected from uncapped n_total") {
@@ -95,9 +116,10 @@ class ShingleIndexSpec extends SparkSpec {
       21L -> (doc("aa").split(" ").dropRight(1) :+ "zz").mkString(" "), // near of 10
       22L -> (0 to 15).map(i => s"other$i").mkString(" ")               // new
     ).toDF("doc_id", "text")
-    val expected = rows(Dedup.incrementalStatus(b0.union(extra), probe,
-      "doc_id", "text", n = 2, threshold = 0.3, maxDf = 5))
-    val actual = rows(ShingleIndex.incrementalStatusIndexed(idx, probe,
+    val expected = rows(Dedup.incrementalStatus(
+      ShingleIndex.derive(b0.union(extra), "doc_id", "text", n = 2), probe,
+      "doc_id", "text", threshold = 0.3, maxDf = 5))
+    val actual = rows(Dedup.incrementalStatus(idx, probe,
       "doc_id", "text", threshold = 0.3, maxDf = 5))
     assert(actual == expected)
     // the fixture really exercised the corrected-size near arm
@@ -202,8 +224,8 @@ class ShingleIndexSpec extends SparkSpec {
       "doc_id", "text", n = 5, idxDir)
     val revised = Seq(1L -> mk("revised")).toDF("doc_id", "text")
     val e = intercept[IllegalArgumentException] {
-      StreamingAnalytics.ingestBatchIndexed(revised, store, idxDir, "b000000001",
-        n = 5, threshold = 0.5, maxDf = 100)
+      StreamingAnalytics.ingestBatch(revised, store,
+        n = 5, threshold = 0.5, maxDf = 100, index = Some(idxDir -> "b000000001"))
     }
     assert(e.getMessage.contains("upsertStream"))
   }

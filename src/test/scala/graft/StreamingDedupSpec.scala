@@ -132,7 +132,8 @@ class StreamingDedupSpec extends SparkSpec {
     assert(nonEmpty(1) == Map(13L -> (("near_dup", Some(1L)))))
     // parity with the batch operator on the same micro-batch
     val batch = graft.functions.Dedup.incrementalStatus(
-        base, b2.toDF("doc_id", "text"), "doc_id", "text", 2, 0.5, 100)
+        graft.functions.ShingleIndex.derive(base, "doc_id", "text", 2),
+        b2.toDF("doc_id", "text"), "doc_id", "text", 0.5, 100)
       .collect().map(r => r.getLong(0) -> ((r.getString(1), Option(r.get(2)).map(_.asInstanceOf[Long])))).toMap
     assert(nonEmpty(1) == batch)
   }

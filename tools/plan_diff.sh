@@ -21,7 +21,9 @@
 #      lambda class names (`$$Lambda$6207/0x00007f89e55fb600`) and lambda
 #      variable counters (`lambda x_44`: Spark names lambda variables from
 #      one JVM-wide counter, so a query's names shift with the number of
-#      lambdas any code built before it);
+#      lambdas any code built before it) and RDD ids (`MapPartitionsRDD[187]`
+#      in a checkpointed-RDD scan: the id follows how many RDDs the session
+#      made before it);
 #   4. prints `PLANDIFF <query>` for each query whose stripped plan differs,
 #      then a unified diff of each, and `PLANDIFF none` when all agree.
 #
@@ -60,6 +62,7 @@ done
 
 strip() {
   sed -E 's/#[0-9]+//g; s/plan_id=[0-9]+//g; s/@[0-9a-f]+//g; s/(lambda [a-z]+)_[0-9]+/\1/g
+    s/RDD\[[0-9]+\]/RDD/g
     s/\$Lambda\$[0-9]+\/0x[0-9a-f]+/$Lambda/g' "$1"
 }
 differ=0

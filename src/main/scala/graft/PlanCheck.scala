@@ -87,34 +87,34 @@ object PlanCheck {
         case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec =>
           b.child
       }
-    // any node in the subtree carries an expression matching `pred`
-    // (FilterExec conditions AND scan pushed dataFilters both surface
-    // through QueryPlan.expressions). Descends into CACHED plans: an
+    // every node of `p`, descending into CACHED plans: an
     // InMemoryTableScan is a collect() leaf, and when the r17 slim-frame
     // caches landed, the pinned expressions (the delta's pmod slice)
     // moved INSIDE the cached plan — the pin silently stopped seeing
     // them (inherited r18 find: dd_incremental's allowlist pin was
-    // red at the r17 HEAD).
+    // red at the r17 HEAD). A cached plan materialized by an AQE session
+    // is an AdaptiveSparkPlanExec shell whose inner nodes (and their
+    // QueryStageExec wrappers) are collect() leaves too — unwrap both,
+    // or the pin's visibility depends on WHICH session touched the
+    // cache first.
+    def nodesWithCached(p: org.apache.spark.sql.execution.SparkPlan)
+        : Seq[org.apache.spark.sql.execution.SparkPlan] =
+      p.collect {
+        case im: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+          im +: nodesWithCached(im.relation.cachedPlan)
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          a +: nodesWithCached(a.executedPlan)
+        case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+          qs +: nodesWithCached(qs.plan)
+        case x => Seq(x)
+      }.flatten
+    // any node in the subtree carries an expression matching `pred`
+    // (FilterExec conditions AND scan pushed dataFilters both surface
+    // through QueryPlan.expressions)
     def subtreeHasExpr(n: org.apache.spark.sql.execution.SparkPlan)(
-        pred: PartialFunction[org.apache.spark.sql.catalyst.expressions.Expression, Boolean]): Boolean = {
-      // A cached plan materialized by an AQE session is an
-      // AdaptiveSparkPlanExec shell whose inner nodes (and their
-      // QueryStageExec wrappers) are collect() leaves too — unwrap both,
-      // or the pin's visibility depends on WHICH session touched the
-      // cache first.
-      def exprs(p: org.apache.spark.sql.execution.SparkPlan)
-          : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
-        p.collect {
-          case im: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-            im.expressions ++ exprs(im.relation.cachedPlan)
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            a.expressions ++ exprs(a.executedPlan)
-          case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-            qs.expressions ++ exprs(qs.plan)
-          case x => x.expressions
-        }.flatten
-      exprs(n).exists(_.exists(e => pred.lift(e).getOrElse(false)))
-    }
+        pred: PartialFunction[org.apache.spark.sql.catalyst.expressions.Expression, Boolean]): Boolean =
+      nodesWithCached(n).flatMap(_.expressions)
+        .exists(_.exists(e => pred.lift(e).getOrElse(false)))
 
     // Column names riding any hash-shuffle exchange (keys AND payload).
     def shuffledColumns(p: org.apache.spark.sql.execution.SparkPlan): Set[String] = p.collect {
@@ -216,20 +216,12 @@ object PlanCheck {
       "every documents scan reading text sits under a broadcast (delta only)" ->
         (p => {
           import org.apache.spark.sql.execution.FileSourceScanExec
-          // descends into cached plans, as subtreeHasExpr does: the delta's
-          // text scan sits inside its cached slim shingle frame
-          def textScans(t: org.apache.spark.sql.execution.SparkPlan): Seq[FileSourceScanExec] =
-            t.collect {
-              case s: FileSourceScanExec
-                  if s.relation.location.rootPaths.exists(_.toString.contains("documents"))
-                    && s.output.exists(_.name == "text") => Seq(s)
-              case im: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-                textScans(im.relation.cachedPlan)
-              case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-                textScans(a.executedPlan)
-              case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-                textScans(qs.plan)
-            }.flatten
+          // the delta's text scan sits inside its cached slim shingle frame
+          def textScans(t: org.apache.spark.sql.execution.SparkPlan) = nodesWithCached(t).collect {
+            case s: FileSourceScanExec
+                if s.relation.location.rootPaths.exists(_.toString.contains("documents"))
+                  && s.output.exists(_.name == "text") => s
+          }
           val all = textScans(p)
           val underBroadcast = broadcastSubtreePlans(p).flatMap(textScans).toSet
           // the delta re-tokenize is real, and the base never contributes
